@@ -1,32 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NTZ-inferred parquet timestamps resolve against the session tz;
-      // every graft entry point pins UTC so window epochs are tz-stable
-      .config("spark.sql.session.timeZone", "UTC")
-      // r15 optimization (guide §2.2/§2.4): let AQE's size-based coalescing
-      // apply to persist()/cache materialization too (default false). The
-      // iterative operators (pageRank/hits/star-contraction) persist slim
-      // loop frames; with the default, those caches keep the full
-      // spark.sql.shuffle.partitions fan-out and every iteration runs one
-      // tiny task per partition — measured 788 tasks / 167.8 cpu-s per
-      // q_pagerank_deep rep (32 cores), collapsing to 50 tasks / 1.2 cpu-s
-      // with the flag on (the per-task fixed cost was mmap/futex kernel
-      // churn, the bench's perennial "kernel-share" signature). The setting
-      // is scale-adaptive, not a local[32] constant: AQE still targets
-      // advisoryPartitionSizeInBytes (64 MB), so at 100 TB a cached frame
-      // gets bytes/64MB partitions, it just stops inheriting a fixed
-      // partition count when the data is small.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // absorb session/JVM warmup so the first timed query isn't charged for
     // it; a broken sfDir must not kill the run before the JSON line
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -197,7 +173,9 @@ object Bench {
       def unstable: Boolean =
         dt > 2.0 && maxRep > dt && (maxRep - dt) > 0.4 * maxRep
       while (!failed && extra < 2 && (interference || unstable)) {
-        runRep(if (interference) " (requeue: kernel-share)" else " (requeue: unstable)")
+        val triggers = Seq("kernel-share" -> interference, "unstable" -> unstable)
+          .collect { case (label, true) => label }
+        runRep(triggers.mkString(" (requeue: ", "+", ")"))
         extra += 1
       }
       if (failed) dt = -1.0

@@ -1,24 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic-only: isolates the fixed per-job cost of the local-mode
   * scheduler from the per-query floor. Runs (a) bare RDD count jobs on a
   * pre-materialized tiny RDD, (b) noop writes of a trivial 1-exchange
   * DataFrame, (c) noop writes of a 2-exchange DataFrame, and prints the
   * steady-state per-action wall so the floor's job-overhead component can
-  * be attributed (DAGScheduler/task-binary vs AQE replanning vs commit). */
+  * be attributed (DAGScheduler/task-binary vs AQE replanning vs commit).
+  * Worker threads come from [[Session]] (`SPARK_GRAFT_CPUS`). */
 object JobOverheadProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = if (args.length > 0) args(0) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("ERROR")
     import org.apache.spark.sql.functions._
     spark.range(1000000).selectExpr("sum(id)").collect()
     val rdd = spark.sparkContext.parallelize(1 to 32, 32).cache()

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps formatted physical plans of representative queries to PLANS.md —
   * the .explain("formatted") evidence for the plan-shape claims in
@@ -9,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("ERROR")
     val picks = Seq(
       "q1_pricing" -> "single-scan pricing summary: pushed date filter, column pruning, 2-phase agg",
       "q3_topk" -> "dimension-chain broadcast joins + top-k",

@@ -1,42 +1,26 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.llm.{Ann, Dedup, Ivf, Pq}
+import graft.llm.{Ann, Dedup, Hashing, Ivf, Multimodal, Nsw, Pq, Retrieval}
+import graft.ops.Temporal
 
-/** Scale-up probe behind SCALING.md's measured table: replicates the sf0.1
+/** Scale-up probe behind SCALING.md's measured table: replicates the
   * documents/embeddings corpora N× (ids offset per copy, text perturbed so
-  * cross-copy pairs are NEAR-dups, not exact dups) and times the dedup/ANN
-  * paths whose scaling curve the design claims. Re-run after any change to
+  * cross-copy pairs are NEAR-dups, not exact dups) and times the operators
+  * whose scaling curve the design claims. Re-run after any change to
   * those operators:
   *
-  *   java -cp ... graft.ScaleProbe /root/testdata/sf0.1 1 4 10
+  *   java -cp ... graft.ScaleProbe <sfDir> [factors...]     (default 1 4 10)
   *
-  * Prints one JSON line per (factor, workload). Timings are end-to-end
-  * action times (count or small collect), not plan-build times.
+  * Every workload is one row of the `sweep` table, run once per factor,
+  * plus the factor-independent XL rows of `fixed`, run once at factor 0.
+  * `SPARK_GRAFT_ONLY=w1,w2` restricts the run to the named rows, as it
+  * does for Bench's queries. Prints one JSON line per (factor, workload).
+  * Timings are end-to-end action times (count or small aggregate), not
+  * plan-build times; each workload's untimed setup runs first.
   */
 object ScaleProbe {
-
-  private def time[A](body: => A): (Double, A) = {
-    val t0 = System.nanoTime()
-    val r = body
-    ((System.nanoTime() - t0) / 1e9, r)
-  }
-
-  private def replicateDocs(docs: DataFrame, factor: Int): DataFrame =
-    (0 until factor).map { i =>
-      docs.select(
-        (col("doc_id") + lit(i.toLong * 1000000L)).as("doc_id"),
-        // perturb every copy differently: cross-copy pairs stay near-dup
-        concat(col("text"), lit(" variant" + i)).as("text"))
-    }.reduce(_ unionByName _)
-
-  private def replicateEmbs(embs: DataFrame, factor: Int): DataFrame =
-    (0 until factor).map { i =>
-      embs.select(
-        (col("vec_id") + lit(i.toLong * 1000000L)).as("vec_id"),
-        col("embedding"))
-    }.reduce(_ unionByName _)
 
   // Planted-twin MEDIA generators for the round-11 media curves: the
   // local id (id % 1e6) keys the same pseudorandom content in EVERY
@@ -278,7 +262,7 @@ object ScaleProbe {
   // splitmix-worded paragraphs sized like short real records; codec
   // choice cycles per id so gzip/bz2/zstd/xz decompression is inside
   // the timed stage on its share of the corpus.
-  private[graft] def probeWikiMedia(id: Long): graft.llm.Multimodal.Media = {
+  private def probeWikiMedia(id: Long): graft.llm.Multimodal.Media = {
     val local = id % 1000000L
     def para(j: Int): String = (0 until 25).map(w =>
       s"w${graft.llm.Hashing.splitmix64(local * 31L + j * 5L + w) & 0xFFL}").mkString(" ")
@@ -289,7 +273,7 @@ object ScaleProbe {
     graft.llm.Multimodal.Media(id,
       graft.llm.Wiki.syntheticDump(pages, (local % 3).toInt), "application/xml")
   }
-  private[graft] def probeJsonlMedia(id: Long): graft.llm.Multimodal.Media = {
+  private def probeJsonlMedia(id: Long): graft.llm.Multimodal.Media = {
     val local = id % 1000000L
     val lines = (0 until 4).map { j =>
       val words = (0 until 30).map(w =>
@@ -299,7 +283,7 @@ object ScaleProbe {
     graft.llm.Multimodal.Media(id,
       graft.llm.Archives.syntheticJsonl(lines, (local % 5).toInt), "application/jsonl")
   }
-  private[graft] def probeBoilerMedia(id: Long): graft.llm.Multimodal.Media = {
+  private def probeBoilerMedia(id: Long): graft.llm.Multimodal.Media = {
     val local = id % 1000000L
     def para(j: Int): String = (0 until 35).map(w =>
       s"w${graft.llm.Hashing.splitmix64(local * 97L + j * 13L + w) & 0xFFL}").mkString(" ")
@@ -311,7 +295,7 @@ object ScaleProbe {
       s"<footer>${para(9)}</footer></body></html>"
     graft.llm.Multimodal.Media(id, html.getBytes("UTF-8"), "text/html")
   }
-  private[graft] def probeSeMedia(id: Long): graft.llm.Multimodal.Media = {
+  private def probeSeMedia(id: Long): graft.llm.Multimodal.Media = {
     val local = id % 1000000L
     def para(j: Int): String = (0 until 30).map(w =>
       s"w${graft.llm.Hashing.splitmix64(local * 17L + j * 3L + w) & 0xFFL}").mkString(" ")
@@ -323,17 +307,468 @@ object ScaleProbe {
       graft.llm.StackExchange.syntheticPosts(rows, (local % 3).toInt), "application/xml")
   }
 
+  // Round-14 fixtures: VP8L decode + dHash over all six bitstream shapes,
+  // the animated-WebP compositor, and frame-energy VAD.
+  private def probeVp8lMedia(id: Long): graft.llm.Multimodal.Media = {
+    val w = 18; val h = 16
+    val gray = Array.tabulate(w * h) { i =>
+      val x = i % w; val y = i / w
+      (((id % 40) * 31 + x * 7 + y * 13) % 176).toInt
+    }
+    graft.llm.Multimodal.Media(id,
+      graft.llm.Vp8l.syntheticWebpGray(w, h, gray, (id % 6).toInt), "image/webp")
+  }
+  private def probeWebpAnimMedia(id: Long): graft.llm.Multimodal.Media = {
+    val c = (id % 40).toInt
+    val f0 = Array.tabulate(18 * 16)(i => (c * 31 + (i % 18) * 7 + (i / 18) * 13) % 176)
+    val f1 = Array.tabulate(8 * 6)(i => (c + (i % 8) * 11 + (i / 8) * 3) % 200)
+    val f3 = Array.tabulate(4 * 4)(i => (c + (i % 4) * 9 + (i / 4) * 2) % 120)
+    graft.llm.Multimodal.Media(id, graft.llm.Vp8l.syntheticWebpAnim(18, 16, 10, Seq(
+      (0, 0, 18, 16, f0, 255, false, false, (id % 6).toInt),
+      (4, 6, 8, 6, f1, 255, false, true, ((id + 1) % 6).toInt),
+      (12, 2, 4, 4, f3, 128, true, false, 0))), "image/webp")
+  }
+  private def probeVadMedia(id: Long): graft.llm.Multimodal.Media = {
+    val samples = Array.tabulate(24 * 160) { j =>
+      val f = j / 160
+      if (((f + id) % 7 < 2) || ((f + id) % 5 == 3)) 0 else 300
+    }
+    graft.llm.Multimodal.Media(id,
+      graft.llm.Multimodal.syntheticWavPcm(8000, samples), "audio/wav")
+  }
+
+  // Round-15 fixtures: composite-font PDF text, the ObjStm/XRef layout
+  // interleaved with the filter chains, and charset-resolved WARC records
+  // (seven resolution paths per archive, bodies byte-exact).
+  private def probeCidMedia(id: Long): graft.llm.Multimodal.Media = {
+    val specials = (id % 3) match {
+      case 0 => Seq(0x0001, 0x0099)
+      case 1 => Seq(0x0002, 0x0010, 0x0011, 0x0012)
+      case _ => Seq(0x0003)
+    }
+    graft.llm.Multimodal.Media(id,
+      graft.llm.Pdf.syntheticCidPdf("1.6", s"Cid D$id body words here",
+        specials, s"a=${id % 13}".getBytes("ISO-8859-1"),
+        splitTj = id % 2 == 1, flateCmap = id % 2 == 0),
+      "application/pdf")
+  }
+  private def probeModernPdfMedia(id: Long): graft.llm.Multimodal.Media = {
+    val lines = (0 until 3).map(j => s"L$j D$id (k=${(id + j) % 31}) zzzzz run")
+    val bytes =
+      if (id % 2 == 0)
+        graft.llm.Pdf.syntheticObjStmPdf("1.7", lines,
+          flateObjStm = id % 4 == 0, flateContent = id % 4 == 2)
+      else graft.llm.Pdf.syntheticFilterPdf("1.4", lines, ((id - 1) / 2 % 6).toInt)
+    graft.llm.Multimodal.Media(id, bytes, "application/pdf")
+  }
+  private def probeCharsetMedia(id: Long): graft.llm.Multimodal.Media = {
+    def iso(s: String) = s.getBytes("ISO-8859-1")
+    def b(xs: Int*) = xs.map(_.toByte).toArray
+    val recs = Seq(
+      (s"http://p/$id/1", "text/html; charset=windows-1252", iso(s"w$id ") ++ b(0x93, 0xE9, 0x94)),
+      (s"http://p/$id/2", "text/html", iso("<meta charset=shift_jis>") ++ "日本語".getBytes("Shift_JIS")),
+      (s"http://p/$id/3", "text/html", b(0xEF, 0xBB, 0xBF) ++ s"b$id é…".getBytes("UTF-8")),
+      (s"http://p/$id/4", "text/html", iso(s"f$id ") ++ b(0x80, 0x99)),
+      (s"http://p/$id/5", "text/html", s"u$id é€".getBytes("UTF-8")),
+      (s"http://p/$id/6", "text/html", b(0xFF, 0xFE) ++ s"s$id".getBytes("UTF-16LE")),
+      (s"http://p/$id/7", "text/html; charset=iso-8859-1", iso(s"l$id ") ++ b(0x85)))
+    graft.llm.Multimodal.Media(id,
+      graft.llm.Warc.syntheticWarcRaw(recs, gzipped = id % 2 == 0),
+      "application/warc")
+  }
+
+  // Round-15 second wave: dated WARC captures for CDX indexing, Walsh-tone
+  // audio for the WHT fingerprint, and a dense BMP — the wHash worst case
+  // (every coefficient nonzero, median load-bearing).
+  private def probeCdxMedia(id: Long): graft.llm.Multimodal.Media = {
+    val recs = (0 until (2 + id % 2).toInt).map { i =>
+      val port = if (i % 2 == 0) ":80" else ":8080"
+      (s"HTTP://WwW.Ex$id.ORG$port/P$id/$i?b=2&a=$id#f",
+        f"2026-08-${1 + (id + i) % 28}%02dT${id % 24}%02d:${(i * 7) % 60}%02d:${(id + i) % 60}%02dZ",
+        s"<p>cdx ${(id + i) % 4}</p>")
+    }
+    graft.llm.Multimodal.Media(id,
+      graft.llm.Warc.syntheticWarcDated(recs, gzipped = id % 2 == 0),
+      "application/warc")
+  }
+  private def probeSpectralMedia(id: Long): graft.llm.Multimodal.Media = {
+    val frames = (4 + id % 3).toInt
+    val samples = new Array[Int](frames * 64)
+    var n = 0
+    while (n < frames) {
+      val k = (1 + (id + 3 * n) % 33).toInt
+      val a = (50 + 10 * ((id + n) % 5)).toInt
+      var j = 0
+      while (j < 64) {
+        samples(n * 64 + j) =
+          if (java.lang.Integer.bitCount(k & j) % 2 == 0) a else -a
+        j += 1
+      }
+      n += 1
+    }
+    graft.llm.Multimodal.Media(id,
+      graft.llm.Multimodal.syntheticWavPcm(8000, samples), "audio/wav")
+  }
+  private def probeWhashMedia(id: Long): graft.llm.Multimodal.Media =
+    graft.llm.Multimodal.Media(id, graft.llm.Multimodal.syntheticBmp8(32, 32,
+      Array.tabulate(1024)(i => ((i * 11 + id.toInt * 7 + (i / 32) * 3) % 200))),
+      "image/bmp")
+
+  /** Deterministic 64-dim pseudo-embedding (the NswSpec idiom). */
+  private def probeVec(id: Long): Array[Float] =
+    Array.tabulate(64)(d =>
+      (Hashing.splitmix64(id * 131 + d).toDouble / Long.MaxValue.toDouble).toFloat)
+
+  /** As-of ticks with a HOT key: half of all rows land on key 0. */
+  private def hotTicks(id: Column, span: Long, mult: Long, payload: String): Seq[Column] = Seq(
+    when(pmod(id, lit(2)) === 0, lit(0L)).otherwise(pmod(id, lit(64))).as("k"),
+    pmod(id * mult, lit(span)).as("t"),
+    id.as(payload))
+
+  /** One factor's inputs. Frames several workloads share are persisted on
+    * first use and `kept` until the factor ends; the harness unpersists
+    * everything else the moment a workload reports. Factor 0 carries the
+    * factor-independent XL rows only. */
+  private final class Corpus(val spark: SparkSession, sfDir: String, val f: Int) {
+    import spark.implicits._
+    var kept: Set[Int] = Set.empty
+    private def shared[T](ds: Dataset[T]): Dataset[T] = {
+      ds.persist().count()
+      kept = spark.sparkContext.getPersistentRDDs.keys.toSet
+      ds
+    }
+    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val embs0 = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    // ids offset per copy; every copy's text is perturbed differently, so
+    // cross-copy pairs stay NEAR-dups, not exact dups
+    lazy val docs: DataFrame = shared((0 until f).map { i =>
+      docs0.select((col("doc_id") + lit(i.toLong * 1000000L)).as("doc_id"),
+        concat(col("text"), lit(" variant" + i)).as("text"))
+    }.reduce(_ unionByName _))
+    lazy val embs: DataFrame = shared((0 until f).map { i =>
+      embs0.select((col("vec_id") + lit(i.toLong * 1000000L)).as("vec_id"), col("embedding"))
+    }.reduce(_ unionByName _))
+    /** The doc ids spread over every core; the media fixtures render from
+      * these inside the timed map stage, standing in for scan I/O. */
+    lazy val ids: Dataset[Long] = shared(docs.select("doc_id")
+      .repartition(spark.sparkContext.defaultParallelism).as[Long])
+    def media(gen: Long => Multimodal.Media, every: Long = 1): Dataset[Multimodal.Media] =
+      (if (every == 1) ids else ids.filter(_ % every == 0)).map(gen)
+    lazy val qMany = embs.filter(col("vec_id") % 37 === 0) // ~2.7% of corpus as queries
+    lazy val ivf: (DataFrame, DataFrame) = {
+      val cents = Ivf.train(embs, k = 16, iters = 2)
+      (cents, shared(Ivf.index(embs, cents)))
+    }
+    lazy val pq: (DataFrame, DataFrame) = {
+      val codebook = Pq.train(embs, m = 8, ksub = 8, iters = 2)
+      (codebook, shared(Pq.encode(embs, codebook, 8, 8)))
+    }
+    // a replicated link graph: each copy is a self-contained subgraph (3
+    // deterministic within-copy out-links per doc: dst = copyBase +
+    // (local·31 + c) mod |copy|), so edges AND nodes grow linearly with the
+    // factor while the iteration count stays fixed
+    lazy val linkEdges: DataFrame = {
+      val nd0 = docs0.count()
+      val copyBase = (col("doc_id").cast("long") / 1000000L).cast("long") * 1000000L
+      val localId = pmod(col("doc_id"), lit(1000000L))
+      docs.select(col("doc_id").as("src"),
+        explode(array((1 to 3).map(c =>
+          copyBase + pmod(localId * 31L + lit(c.toLong * 7L + 1L), lit(nd0))): _*)).as("dst"))
+    }
+    // a replicated entity keyspace of sequential low-entropy names: cross-
+    // copy names pair too (the offset digit is one substitution away), so
+    // every copy chains into ONE giant component
+    lazy val names: DataFrame = docs.select(col("doc_id").as("ent_id"),
+      format_string("Entity#%09d", col("doc_id")).as("name"))
+    // 5000·f deterministic vectors over 8 partitions, queried by the first 16
+    lazy val vectors: DataFrame = shared(spark.range(5000L * f).as[Long]
+      .map(id => (id, probeVec(id))).toDF("vec_id", "embedding").repartition(8))
+    // 20M XL ticks, both plan shapes warmed at 1/100 scale first: each form
+    // cycles distinct window/aggregate shapes whose first-ever Janino
+    // compile + first spill otherwise lands on whichever timed run goes
+    // first — measured 124 s cold vs 6-8 s warm on the bucketed form
+    lazy val xlTicks: (DataFrame, DataFrame) = {
+      val id = col("id")
+      val l = shared(spark.range(20000000L).select(hotTicks(id, 100000000L, 7919L, "lv"): _*))
+      val r = shared(spark.range(20000000L).select(hotTicks(id, 100000000L, 104729L, "rv"): _*))
+      nonNull(Temporal.asofJoin(l.limit(200000), r.limit(200000), Seq("k"), "t"), "r_rv")
+      nonNull(Temporal.asofJoinBucketed(l.limit(200000), r.limit(200000), Seq("k"), "t",
+        1000000L), "r_rv")
+      (l, r)
+    }
+  }
+
+  /** Non-null count of one parsed/extracted column: a bare count() lets
+    * Catalyst prune a typed map or an unused window, timing a scan instead
+    * of the operator (the Bench noop-sink lesson). */
+  private def nonNull(ds: Dataset[_], column: String): Long =
+    ds.agg(count(col(column))).head.getLong(0)
+
+  /** A workload: given the factor's corpus, any untimed setup, then the
+    * timed body, which returns the row count the JSON line reports. */
+  private type Workload = (String, Corpus => () => Long)
+
+  private val sweep: Seq[Workload] = Seq(
+    ("minhash_pairs", c => () => Dedup.minhashPairs(c.docs, "doc_id", "text", threshold = 0.3).count()),
+    ("simhash_pairs", c => () => Dedup.simhashPairs(c.docs, "doc_id", "text", maxHamming = 10).count()),
+    ("ann_lsh_window_10q", c => () =>
+      Ann.lshTopK(c.embs, c.embs.filter(col("vec_id") < 10), "vec_id", "embedding", 10).count()),
+    ("ann_lsh_agg_manyq", c => () => Ann.lshTopKAgg(c.embs, c.qMany, "vec_id", "embedding", 10).count()),
+    // the index (and the code table below) feed the search workloads
+    ("ivf_train_index", c => () => c.ivf._2.count()),
+    ("ivf_searchagg_manyq", c => () =>
+      Ivf.searchAgg(c.ivf._2, c.ivf._1, c.qMany, k = 10, nprobe = 4).count()),
+    // round-5 operators: duplicate-cluster contraction over the pair
+    // graph, PQ train+encode, and the IVF-PQ composed search
+    ("dedup_cluster_canonical", c => () => {
+      val pairs = Dedup.minhashPairs(c.docs, "doc_id", "text", threshold = 0.3).select("id_a", "id_b")
+      Dedup.clusters(c.docs, "doc_id", pairs).filter(col("is_canonical")).count()
+    }),
+    ("pq_train_encode", c => () => c.pq._2.count()),
+    ("ivfpq_searchadc_manyq", c => () =>
+      Pq.searchIvfAdc(c.pq._2.join(c.ivf._2.select("vec_id", "list_id"), Seq("vec_id")),
+        c.ivf._1, c.pq._1, c.qMany, 8, 8, 10, nprobe = 4).count()),
+    // round-6 operators: repeated spans (replicated corpus = worst case,
+    // every doc repeats across copies), domain caps (50 synthetic hot
+    // domains, bounded output), LM scoring vs a FIXED reference (the
+    // realistic shape: the LM never grows with the corpus)
+    ("repeated_spans", c => () => Dedup.repeatedSpans(c.docs, "doc_id", "text", k = 13).count()),
+    // the spans APPLIED: the per-doc span-array join-back and the cut
+    // kernel on top of discovery; rows = docs scrubbed
+    ("scrub_repeated_spans", c => { val nd = c.docs.count(); () => {
+      Dedup.scrubRepeatedSpans(c.docs, "doc_id", "text", k = 13).agg(sum("removed_tokens")).head()
+      nd
+    } }),
+    ("domain_cap100", c => () => graft.llm.Sampling.capPerDomain(
+      c.docs.withColumn("dom", pmod(col("doc_id"), lit(50))), "doc_id", "dom", 100).count()),
+    ("lm_score_fixed_ref", c => () => graft.llm.TextAnalysis.lmScore(c.docs, "doc_id", "text",
+      c.docs0.filter(col("doc_id") % 5 === 0), "text").count()),
+    // round-6 wave 2: sketching, membership, sharding, sub-doc dedup,
+    // snapshot diffing — each should be flat-to-linear in corpus size
+    ("hll_registers", c => () => graft.llm.Sketches.hllRegisters(c.docs, "text", p = 8).count()),
+    ("bloom_build_probe", c => () => {
+      val filter = graft.llm.Bloom.build(c.docs0.filter(col("doc_id") % 11 === 0), "text",
+        bits = 1 << 20, k = 3)
+      graft.llm.Bloom.probe(c.docs, "doc_id", "text", filter, k = 3).filter(col("maybe_member")).count()
+    }),
+    ("shuffle_shards32", c => () => graft.llm.Sampling.shuffleShards(c.docs, "doc_id", nShards = 32).count()),
+    ("paragraph_dedup", c => () => {
+      val paraDocs = c.docs.withColumn("text",
+        expr("""array_join(transform(
+          |  sequence(0, greatest((size(split(text, ' ')) + 7) div 8, 1) - 1),
+          |  i -> array_join(slice(split(text, ' '), CAST(i * 8 + 1 AS INT), 8), ' ')), '\n\n')""".stripMargin))
+      Dedup.dedupParagraphs(paraDocs, "doc_id", "text").filter(col("n_kept") > 0).count()
+    }),
+    ("corpus_diff", c => () => graft.llm.Snapshot.corpusDiff(c.docs,
+      c.docs.filter(col("doc_id") % 7 =!= 3), "doc_id", "text").groupBy("status").count().count()),
+    ("decontaminate_bloom", c => () => {
+      val benchFix = c.docs0.filter(col("doc_id") % 37 === 0)
+        .select(expr("array_join(slice(split(text, ' '), 11, 30), ' ')").as("text"))
+      Dedup.decontaminateBloom(c.docs, "doc_id", "text", benchFix, "text",
+        k = 13, bloomBits = 1 << 20, bloomK = 3).filter(col("contaminated")).count()
+    }),
+    ("heavy_hitters_cms", c => () => graft.llm.Sketches.heavyHitters(
+      c.docs.selectExpr("explode(split(lower(text), ' ')) AS term"), "term",
+      threshold = 1000L, depth = 4, width = 1024).count()),
+    // round-6 wave 3: retrieval + selection operators. Fixed query /
+    // target / model sides (the realistic shape — the corpus grows, the
+    // trusted sets don't); scoring should scale linearly.
+    ("bm25_fixed_queries", c => () => {
+      val bmQ = c.docs0.filter(col("doc_id") % 170 === 0).select(col("doc_id").as("q_id"),
+        expr("array_join(slice(split(text, ' '), 3, 10), ' ')").as("q_text"))
+      graft.llm.TextAnalysis.bm25TopK(c.docs, "doc_id", "text", bmQ, "q_id", "q_text", topK = 5).count()
+    }),
+    ("dsir_weights_fixed_target", c => () => graft.llm.Sampling.dsirWeights(c.docs, "doc_id", "text",
+      c.docs0.filter(col("doc_id") % 7 === 0), "text", buckets = 1024).count()),
+    ("nb_quality_fixed_model", c => () => graft.llm.QualityClassifier.nbQualityFilter(
+      c.docs, "doc_id", "text", c.docs0.filter(col("doc_id") % 7 === 0), "text",
+      c.docs0.filter(col("doc_id") % 7 =!= 0), "text", buckets = 1024).filter(col("keep")).count()),
+    ("semdedup_canonical", c => () => Dedup.semanticDedup(c.embs, "vec_id", "embedding",
+      threshold = 0.3, k = 16, iters = 2).filter(col("is_canonical")).count()),
+    // round-9: the iterative graph ops (2 keyed shuffles per pageRank
+    // iteration, 2 per HITS half-iteration, lineage capped by
+    // localCheckpoint)
+    ("pagerank_5it", c => () => graft.ops.Graphs.pageRank(c.linkEdges, "src", "dst", iters = 5).count()),
+    ("hits_3it", c => () => graft.ops.Graphs.hits(c.linkEdges, "src", "dst", iters = 3).count()),
+    // round-9: the edit-distance join family (deletion-neighborhood regime)
+    ("fuzzy_join_d1", c => () => graft.llm.Fuzzy.editDistanceJoinShort(c.names, "ent_id", "name", 1).count()),
+    ("fuzzy_cluster_canonical", c => () => graft.llm.Fuzzy.fuzzyClusters(c.names, "ent_id", "name",
+      maxDist = 1, shortStrings = true).filter(col("is_canonical")).count()),
+    // round-11: the media near-dup family. Decode+hash is a pure map
+    // stage; candidates ride the banded-Hamming join (image/audio) resp.
+    // the frame-hash equi-join with the blank-frame bucket cap (video), so
+    // join fanout is the planted C(f,2)-per-local twins plus rare splitmix
+    // accidents — never all-pairs.
+    ("image_neardup_pairs", c => () =>
+      Multimodal.imageNearDupPairs(c.media(probeImageMedia), maxHamming = 2).count()),
+    ("audio_neardup_pairs", c => () =>
+      Multimodal.audioNearDupPairs(c.media(probeAudioMedia), maxHamming = 2).count()),
+    ("video_neardup_pairs", c => () => Multimodal.videoNearDupPairs(c.media(probeVideoMedia),
+      sampleFrames = 12, minShared = 8).count()),
+    // the q_pipeline_media composition: decode → hash → pairs → transitive
+    // clusters → canonical, ONE plan; the CC closure moves 16-byte edges only
+    ("media_pipeline_canonical", c => () => {
+      val pairs = Multimodal.imageNearDupPairs(c.media(probeImageMedia), maxHamming = 2)
+        .select("id_a", "id_b")
+      Dedup.clusters(c.docs.select(col("doc_id")), "doc_id", pairs).filter(col("is_canonical")).count()
+    }),
+    // round-12: the codec-wave decode CPU rows — hash stage only
+    ("image_hash_cross_container6", c => () =>
+      nonNull(Multimodal.imageDHash(c.media(probeImageCrossMedia)), "dhash")),
+    ("audio_hash_cross_encoding8", c => () =>
+      nonNull(Multimodal.audioEnvelopeHash(c.media(probeAudioCrossMedia)), "dhash")),
+    ("video_hash_cross_container2", c => () =>
+      nonNull(Multimodal.videoFrameHashes(c.media(probeVideoCrossMedia), sampleFrames = 12), "dhash")),
+    // round-13: adversarial compositor chains on a quarter corpus, two
+    // chain lengths — the pair's ratio pins CPU ∝ total frames, the factor
+    // sweep pins linear-in-corpus
+    ("video_gif_adversarial_chain24", c => () => nonNull(Multimodal.videoFrameHashes(
+      c.media(probeVideoAdversarialMedia(24), every = 4), sampleFrames = 4), "dhash")),
+    ("video_gif_adversarial_chain96", c => () => nonNull(Multimodal.videoFrameHashes(
+      c.media(probeVideoAdversarialMedia(96), every = 4), sampleFrames = 4), "dhash")),
+    // round-13: admission walks, WARC ingest/extract, the seven-format
+    // document router, dump/shard ingestion and the boilerplate classifier
+    ("webp_meta_walk", c => () =>
+      nonNull(graft.llm.Containers.decodeWebpMeta(c.media(probeWebpMedia)), "width")),
+    ("mkv_meta_walk", c => () =>
+      nonNull(graft.llm.Containers.decodeMkvMeta(c.media(probeMkvMedia)), "duration_ms")),
+    ("warc_ingest_records", c => () =>
+      nonNull(graft.llm.Warc.readWarc(c.media(probeWarcMedia)), "content_length")),
+    ("warc_html_extract", c => () => nonNull(graft.llm.Warc.htmlTextRecords(c.media(probeWarcMedia))
+      .toDF("doc_id", "rec_idx", "text"), "text")),
+    ("doc_router_extract", c => () => nonNull(graft.llm.Docs.routedTexts(c.media(probeDocMedia))
+      .toDF("doc_id", "format", "text"), "text")),
+    ("wiki_ingest_extract", c => () => nonNull(graft.llm.Wiki.wikiPages(c.media(probeWikiMedia))
+      .map(p => graft.llm.Wiki.wikitextToText(p.text))(Encoders.STRING), "value")),
+    ("jsonl_shard_lines", c => () =>
+      nonNull(graft.llm.Archives.jsonlLines(c.media(probeJsonlMedia)), "line")),
+    ("boilerplate_content_blocks", c => () => nonNull(
+      graft.llm.Boilerplate.htmlBlocks(c.media(probeBoilerMedia)).filter(col("is_content")), "text")),
+    ("stackexchange_posts", c => () =>
+      nonNull(graft.llm.StackExchange.posts(c.media(probeSeMedia)), "body_text")),
+    // PCA: the covariance pass is the corpus-linear part; Jacobi is O(d³)
+    // once on the driver, invariant in the factor
+    ("pca_fit_project", c => () => {
+      val model = graft.llm.Pca.fit(c.embs, "embedding")
+      nonNull(graft.llm.Pca.project(c.embs, "vec_id", "embedding", model, 2), "pc_0")
+    }),
+    // round-10: the as-of family under a HOT key. The plain window
+    // serializes key 0 into ONE task's sort; the bucketed form (width 10⁴
+    // over a fixed 10⁶ time span = 100 cuts) spreads it. Right-side (k, t)
+    // ties only perturb WHICH equal-time payload wins, never the count of
+    // matched left rows reported.
+    ("asof_hotkey_plain", c => () => nonNull(Temporal.asofJoin(
+      c.docs.select(hotTicks(col("doc_id"), 1000000L, 7919L, "lv"): _*),
+      c.docs.select(hotTicks(col("doc_id"), 1000000L, 104729L, "rv"): _*), Seq("k"), "t"), "r_rv")),
+    ("asof_hotkey_bucketed", c => () => nonNull(Temporal.asofJoinBucketed(
+      c.docs.select(hotTicks(col("doc_id"), 1000000L, 7919L, "lv"): _*),
+      c.docs.select(hotTicks(col("doc_id"), 1000000L, 104729L, "rv"): _*), Seq("k"), "t", 10000L),
+      "r_rv")),
+    // round-14: VP8L decode, the animated-WebP compositor (keyframe +
+    // overwrite + dispose + semi-transparent blend), frame-energy VAD
+    ("webp_vp8l_dhash", c => () =>
+      nonNull(Multimodal.imageDHash(c.media(probeVp8lMedia)).filter(col("ok")), "dhash")),
+    ("webp_anim_frame_hashes", c => () =>
+      nonNull(Multimodal.videoFrameHashes(c.media(probeWebpAnimMedia), sampleFrames = 4), "dhash")),
+    ("audio_vad_segments", c => () =>
+      nonNull(graft.llm.AudioStats.vadSegments(c.media(probeVadMedia)), "seg_idx")),
+    // wiki slices: ONE on-disk multistream dump of 60·f streams / 300·f
+    // pages; slim slice rows fan out to ranged-read tasks, so the wall
+    // should track pages/streams, never the dump's monolithic size
+    ("wiki_slice_ranged_decode", c => {
+      import c.spark.implicits._
+      val pages = (0 until 300 * c.f).map(i =>
+        (s"P $i", 0, i.toLong, "", s"probe body $i " + ("w " * 40)))
+      val (dump, index) = graft.llm.Wiki.syntheticMultistreamIndexed(pages, 60 * c.f)
+      val file = java.io.File.createTempFile("graft-probe-ms", ".xml.bz2")
+      file.deleteOnExit()
+      java.nio.file.Files.write(file.toPath, dump)
+      val path = file.getAbsolutePath
+      val src = Seq(graft.llm.Wiki.WikiIndexSrc(0L, index, dump.length.toLong)).toDS()
+      () => nonNull(graft.llm.Wiki.slicePagesFs(graft.llm.Wiki.indexSlices(src)
+        .map(s => (s, path)).repartition(c.spark.sparkContext.defaultParallelism)), "page_id")
+    }),
+    // round-15: composite-font and modern-layout PDF text, charset-resolved
+    // WARC ingest, and the stupid-backoff LM against a reference held
+    // CONSTANT across factors (the CCNet premise)
+    ("pdf_cid_text", c => () => nonNull(graft.llm.Pdf.pdfPages(c.media(probeCidMedia)), "text")),
+    ("pdf_objstm_filters_text", c => () =>
+      nonNull(graft.llm.Pdf.pdfPages(c.media(probeModernPdfMedia)), "text")),
+    ("warc_charset_ingest", c => () =>
+      nonNull(graft.llm.Warc.readWarc(c.media(probeCharsetMedia)), "charset")),
+    ("lm_backoff_score", c => () => nonNull(graft.llm.TextAnalysis.lmScoreBackoff(c.docs,
+      "doc_id", "text", c.docs0.filter(col("doc_id") % 5 === 0), "text"), "surprisal_micronats")),
+    // round-15 second wave: CDX indexing, revisit dedup (the one shuffle
+    // that follows it), the WHT spectral fingerprint, image wHash
+    ("cdx_index", c => () => nonNull(graft.llm.Warc.cdxRecords(c.media(probeCdxMedia)), "digest")),
+    ("cdx_revisit_dedup", c => () => graft.llm.Warc.revisitDedup(
+        graft.llm.Warc.cdxRecords(c.media(probeCdxMedia)).toDF().filter(col("rec_type") === "response"))
+      .agg(sum(col("keep"))).head.getLong(0)),
+    ("audio_spectral", c => () =>
+      nonNull(graft.llm.AudioStats.spectralFingerprint(c.media(probeSpectralMedia)), "hash32")),
+    ("image_whash", c => () =>
+      nonNull(Multimodal.imageWHash(c.media(probeWhashMedia)).filter(col("ok")), "dhash")),
+    // ranged fetch: the archive GROWS with the factor but the wanted subset
+    // stays CONSTANT (100 captures); archive synthesis and the file install
+    // stay untimed, so wall must be flat in archive size — the point of
+    // carrying a CDX index instead of scanning
+    ("cdx_ranged_fetch_const_subset", c => {
+      val recs = (0 until 500 * c.f).map(i =>
+        (s"http://fp.net/p$i", "2026-08-01T00:00:00Z", s"<p>f $i ${"pad " * 20}</p>"))
+      val archive = graft.llm.Warc.syntheticWarcDated(recs, gzipped = true)
+      val file = java.io.File.createTempFile("graft_w5_fetch", ".warc.gz")
+      file.deleteOnExit()
+      java.nio.file.Files.write(file.toPath, archive)
+      val wanted = graft.llm.Warc.cdxIndex(archive).filter(r => r.rec_type == "response")
+        .take(100).map(r => (r, file.getAbsolutePath))
+      val rows = c.spark.createDataset(wanted)(
+        Encoders.product[(graft.llm.Warc.CdxRow, String)]).repartition(8)
+      () => nonNull(graft.llm.Warc.fetchRecords(rows), "payload")
+    }),
+    // f INDEPENDENT brute mining jobs over constant embedding slices: the
+    // per-job cost is fixed, so wall should track f — what scales in a
+    // real pipeline is how many shard-pair candidate jobs LSH/IVF feed
+    ("bitext_margin", c => () => (0 until c.f).map { _ =>
+      nonNull(graft.llm.Bitext.marginPairs(c.embs0.filter(col("vec_id") % 2 === 0),
+        c.embs0.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", k = 4), "margin")
+    }.sum),
+    // round-15 third wave: NSW graph ANN over a corpus scaling with the
+    // factor at a constant 16-query set (the brute reference shows the
+    // |corpus| × |queries| baseline it beats), and RRF fusion over a query
+    // count scaling with the factor — |queries| × k slim triples, no
+    // corpus-sized stage anywhere
+    ("nsw_build_search", c => { val v = c.vectors; () => nonNull(Nsw.searchTopK(v,
+      v.filter(col("vec_id") < 16), "vec_id", "embedding", k = 10, m = 8, efConstruction = 32,
+      ef = 64), "nn_id") }),
+    ("ann_brute_ref", c => { val v = c.vectors; () => nonNull(Ann.bruteForceTopK(v,
+      v.filter(col("vec_id") < 16), "vec_id", "embedding", 10), "nn_id") }),
+    ("rrf_fuse", c => () => {
+      import c.spark.implicits._
+      // two top-10 lists per query, ids offset so the overlap (and thus
+      // the sum path) is exercised on every query
+      def ranks(shift: Int) = c.spark.range(2500L * c.f).as[Long].flatMap(q =>
+        (1 to 10).map(r => (q, (q * 7 + r + shift) % 1000, r.toLong))).toDF("q_id", "nn_id", "rank")
+      nonNull(Retrieval.rrfFuse(Seq(ranks(0), ranks(5)), "q_id", "nn_id", "rank", topK = 10), "nn_id")
+    }))
+
+  /** Factor-independent, corpus-free rows, run once after the sweep: the
+    * in-factor as-of pair shows parity because a few-hundred-thousand-row
+    * hot key sorts in one task faster than the bucket-summary pass costs.
+    * THIS is the regime the bucketed form exists for: 20M ticks, HALF on
+    * one key — plain asofJoin sorts 10M rows in a single task while every
+    * other core idles; the bucketed form (width 10⁶ over a 10⁸ span = 100
+    * cuts) spreads that sort. */
+  private val fixed: Seq[Workload] = Seq(
+    ("asof_hotkey_xl_plain", c => { val (l, r) = c.xlTicks; () =>
+      nonNull(Temporal.asofJoin(l, r, Seq("k"), "t"), "r_rv") }),
+    ("asof_hotkey_xl_bucketed", c => { val (l, r) = c.xlTicks; () =>
+      nonNull(Temporal.asofJoinBucketed(l, r, Seq("k"), "t", 1000000L), "r_rv") }))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 4, 10)
-    val spark = SparkSession.builder()
-      .appName("graft-scale-probe").master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // NTZ-inferred parquet timestamps resolve against the session tz;
-      // every graft entry point pins UTC so window epochs are tz-stable
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val spark = Session()
     try {
       // warm the iterative-graph plan shapes on an 8-edge graph (Bench's
       // posture): the loops cycle several distinct shapes per iteration
@@ -349,397 +784,39 @@ object ScaleProbe {
           .write.format("noop").mode("overwrite").save()
       } catch { case e: Throwable =>
         System.err.println(s"[probe] warmup failed: ${e.getMessage}") }
-      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-      val embs0 = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
       // cross-workload hygiene, the Bench r9/r10 lesson applied to the
-      // probe: operator-internal persists and loop checkpoints that
-      // outlive their workload pile up across the ~30 workloads of a
-      // factor and tax whatever runs late in the JVM (pre-fix the factor-
-      // 10 tail read 30-60 s on workloads whose 4x time was 1-2 s —
-      // block-manager residue, not operator scaling). `kept` holds the
-      // probe's own deliberately-shared frames (docs/embs/index/codes);
-      // everything else unpersists the moment its workload reports.
-      var kept: Set[Int] = Set.empty
-      def keepCurrent(): Unit =
-        kept = spark.sparkContext.getPersistentRDDs.keys.toSet
+      // probe: operator-internal persists and loop checkpoints that outlive
+      // their workload pile up across a factor's workloads and tax whatever
+      // runs late in the JVM (pre-fix the factor-10 tail read 30-60 s on
+      // workloads whose 4x time was 1-2 s — block-manager residue, not
+      // operator scaling)
       var nReports = 0
-      for (f <- factors) {
-        val docs = replicateDocs(docs0, f).persist()
-        val embs = replicateEmbs(embs0, f).persist()
-        val (nd, ne) = (docs.count(), embs.count())
-        keepCurrent()
-        def report(workload: String, sec: Double, rows: Long): Unit = {
-          println(s"""{"factor":$f,"docs":$nd,"vecs":$ne,"workload":"$workload","sec":${math.round(sec * 1000) / 1000.0},"rows":$rows}""")
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!kept.contains(id)) rdd.unpersist(blocking = false)
+      def run(f: Int, workloads: Seq[Workload]): Unit = {
+        val selected = workloads.filter { case (name, _) => only.forall(_.contains(name)) }
+        if (selected.nonEmpty) {
+          val c = new Corpus(spark, sfDir, f)
+          // materialize the shared corpora before the first timed row
+          val sizes = if (f == 0) "" else { c.ids; s""""docs":${c.docs.count()},"vecs":${c.embs.count()},""" }
+          selected.foreach { case (name, body) =>
+            val timed = body(c)
+            val t0 = System.nanoTime()
+            val rows = timed()
+            val sec = (System.nanoTime() - t0) / 1e9
+            println(s"""{"factor":$f,$sizes"workload":"$name","sec":${math.round(sec * 1000) / 1000.0},"rows":$rows}""")
+            spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+              if (!c.kept.contains(id)) rdd.unpersist(blocking = false)
+            }
+            nReports += 1
+            // periodic full GC drains the ContextCleaner's weak-ref queue
+            // (shuffle files, broadcasts) before the old gen fills
+            if (nReports % 8 == 0) System.gc()
           }
-          nReports += 1
-          // periodic full GC drains the ContextCleaner's weak-ref queue
-          // (shuffle files, broadcasts) before the old gen fills
-          if (nReports % 8 == 0) System.gc()
+          spark.catalog.clearCache()
+          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         }
-        val (tMh, nMh) = time(Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.3).count())
-        report("minhash_pairs", tMh, nMh)
-        val (tSh, nSh) = time(Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 10).count())
-        report("simhash_pairs", tSh, nSh)
-        val qFew = embs.filter(col("vec_id") < 10)
-        val (tLshW, nLshW) = time(Ann.lshTopK(embs, qFew, "vec_id", "embedding", 10).count())
-        report("ann_lsh_window_10q", tLshW, nLshW)
-        val qMany = embs.filter(col("vec_id") % 37 === 0) // ~2.7% of corpus as queries
-        val (tLshA, nLshA) = time(Ann.lshTopKAgg(embs, qMany, "vec_id", "embedding", 10).count())
-        report("ann_lsh_agg_manyq", tLshA, nLshA)
-        val (tIvf, (cents, indexed)) = time {
-          val c = Ivf.train(embs, k = 16, iters = 2)
-          val ix = Ivf.index(embs, c).persist()
-          ix.count()
-          (c, ix)
-        }
-        keepCurrent() // the index feeds the search workloads below
-        report("ivf_train_index", tIvf, indexed.count())
-        val (tIvfA, nIvfA) = time(
-          Ivf.searchAgg(indexed, cents, qMany, k = 10, nprobe = 4).count())
-        report("ivf_searchagg_manyq", tIvfA, nIvfA)
-        // round-5 operators: duplicate-cluster contraction over the pair
-        // graph, PQ train+encode, and the IVF-PQ composed search
-        val (tCc, nCc) = time {
-          val pairs = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.3)
-            .select("id_a", "id_b")
-          Dedup.clusters(docs, "doc_id", pairs).filter(col("is_canonical")).count()
-        }
-        report("dedup_cluster_canonical", tCc, nCc)
-        val (tPq, encoded) = time {
-          val cb = Pq.train(embs, m = 8, ksub = 8, iters = 2)
-          val enc = Pq.encode(embs, cb, 8, 8).persist()
-          enc.count()
-          (cb, enc)
-        }
-        keepCurrent() // the code table feeds the ADC workload below
-        report("pq_train_encode", tPq, encoded._2.count())
-        val (tAdc, nAdc) = time(
-          Pq.searchIvfAdc(encoded._2.join(indexed.select("vec_id", "list_id"), Seq("vec_id")),
-            cents, encoded._1, qMany, 8, 8, 10, nprobe = 4).count())
-        report("ivfpq_searchadc_manyq", tAdc, nAdc)
-        // round-6 operators: repeated spans (replicated corpus = worst case,
-        // every doc repeats across copies), domain caps (50 synthetic hot
-        // domains, bounded output), LM scoring vs a FIXED reference (the
-        // realistic shape: the LM never grows with the corpus)
-        val (tSp, nSp) = time(Dedup.repeatedSpans(docs, "doc_id", "text", k = 13).count())
-        report("repeated_spans", tSp, nSp)
-        // round-8: the spans APPLIED — adds the per-doc span-array join-back
-        // (text crosses the wire once) and the cut kernel on top of the
-        // discovery pipeline; replicated corpus = worst case (every doc is
-        // near-fully covered, maximal removal work)
-        val (tScr, nScr) = time {
-          Dedup.scrubRepeatedSpans(docs, "doc_id", "text", k = 13)
-            .agg(sum("removed_tokens")).head()
-          nd
-        }
-        report("scrub_repeated_spans", tScr, nScr)
-        val withDom = docs.withColumn("dom", pmod(col("doc_id"), lit(50)))
-        val (tCap, nCap) = time(
-          graft.llm.Sampling.capPerDomain(withDom, "doc_id", "dom", 100).count())
-        report("domain_cap100", tCap, nCap)
-        val lmRef = docs0.filter(col("doc_id") % 5 === 0)
-        val (tLm, nLm) = time(
-          graft.llm.TextAnalysis.lmScore(docs, "doc_id", "text", lmRef, "text").count())
-        report("lm_score_fixed_ref", tLm, nLm)
-        // round-6 wave 2: sketching, membership, sharding, sub-doc dedup,
-        // snapshot diffing — each should be flat-to-linear in corpus size
-        val (tHll, nHll) = time(graft.llm.Sketches.hllRegisters(docs, "text", p = 8).count())
-        report("hll_registers", tHll, nHll)
-        val blockRef = docs0.filter(col("doc_id") % 11 === 0) // fixed reference
-        val (tBl, nBl) = time {
-          val f = graft.llm.Bloom.build(blockRef, "text", bits = 1 << 20, k = 3)
-          graft.llm.Bloom.probe(docs, "doc_id", "text", f, k = 3)
-            .filter(col("maybe_member")).count()
-        }
-        report("bloom_build_probe", tBl, nBl)
-        val (tShf, nShf) = time(
-          graft.llm.Sampling.shuffleShards(docs, "doc_id", nShards = 32).count())
-        report("shuffle_shards32", tShf, nShf)
-        val paraDocs = docs.withColumn("text",
-          expr("""array_join(transform(
-            |  sequence(0, greatest((size(split(text, ' ')) + 7) div 8, 1) - 1),
-            |  i -> array_join(slice(split(text, ' '), CAST(i * 8 + 1 AS INT), 8), ' ')), '\n\n')""".stripMargin))
-        val (tPara, nPara) = time(
-          Dedup.dedupParagraphs(paraDocs, "doc_id", "text").filter(col("n_kept") > 0).count())
-        report("paragraph_dedup", tPara, nPara)
-        val newSnap = docs.filter(col("doc_id") % 7 =!= 3)
-        val (tDiff, nDiff) = time(
-          graft.llm.Snapshot.corpusDiff(docs, newSnap, "doc_id", "text")
-            .groupBy("status").count().count())
-        report("corpus_diff", tDiff, nDiff)
-        val benchFix = docs0.filter(col("doc_id") % 37 === 0)
-          .select(expr("array_join(slice(split(text, ' '), 11, 30), ' ')").as("text"))
-        val (tDb, nDb) = time(
-          Dedup.decontaminateBloom(docs, "doc_id", "text", benchFix, "text",
-            k = 13, bloomBits = 1 << 20, bloomK = 3)
-            .filter(col("contaminated")).count())
-        report("decontaminate_bloom", tDb, nDb)
-        val terms = docs.selectExpr("explode(split(lower(text), ' ')) AS term")
-        val (tHh, nHh) = time(
-          graft.llm.Sketches.heavyHitters(terms, "term", threshold = 1000L,
-            depth = 4, width = 1024).count())
-        report("heavy_hitters_cms", tHh, nHh)
-        // round-6 wave 3: retrieval + selection operators. Fixed query /
-        // target / model sides (the realistic shape — the corpus grows,
-        // the trusted sets don't); scoring should scale linearly.
-        val bmQ = docs0.filter(col("doc_id") % 170 === 0)
-          .select(col("doc_id").as("q_id"),
-            expr("array_join(slice(split(text, ' '), 3, 10), ' ')").as("q_text"))
-        val (tBm, nBm) = time(
-          graft.llm.TextAnalysis.bm25TopK(docs, "doc_id", "text",
-            bmQ, "q_id", "q_text", topK = 5).count())
-        report("bm25_fixed_queries", tBm, nBm)
-        val dsirTarget = docs0.filter(col("doc_id") % 7 === 0)
-        val (tDw, nDw) = time(
-          graft.llm.Sampling.dsirWeights(docs, "doc_id", "text",
-            dsirTarget, "text", buckets = 1024).count())
-        report("dsir_weights_fixed_target", tDw, nDw)
-        val (tNb, nNb) = time(
-          graft.llm.QualityClassifier.nbQualityFilter(docs, "doc_id", "text",
-            dsirTarget, "text", docs0.filter(col("doc_id") % 7 =!= 0), "text",
-            buckets = 1024).filter(col("keep")).count())
-        report("nb_quality_fixed_model", tNb, nNb)
-        val (tSd, nSd) = time(
-          Dedup.semanticDedup(embs, "vec_id", "embedding",
-            threshold = 0.3, k = 16, iters = 2).filter(col("is_canonical")).count())
-        report("semdedup_canonical", tSd, nSd)
-        // round-9: the iterative graph ops on a replicated link graph.
-        // Each copy is a self-contained subgraph (3 deterministic
-        // within-copy out-links per doc: dst = copyBase + (local·31 + c)
-        // mod |copy|), so edges AND nodes grow linearly with the factor —
-        // per-iteration shuffle volume is the linear-growth worst case
-        // while iteration count stays fixed, which is exactly the curve
-        // the SCALING.md rows claim (2 keyed shuffles per pageRank iter,
-        // 2 per HITS half-iteration, lineage capped by localCheckpoint).
-        val nd0 = docs0.count()
-        val copyBase = (col("doc_id").cast("long") / 1000000L).cast("long") * 1000000L
-        val localId = pmod(col("doc_id"), lit(1000000L))
-        val linkEdges = docs.select(col("doc_id").as("src"),
-            explode(array((1 to 3).map(c =>
-              copyBase + pmod(localId * 31L + lit(c.toLong * 7L + 1L), lit(nd0))): _*))
-              .as("dst"))
-        val (tPr, nPr) = time(
-          graft.ops.Graphs.pageRank(linkEdges, "src", "dst", iters = 5).count())
-        report("pagerank_5it", tPr, nPr)
-        val (tHt, nHt) = time(
-          graft.ops.Graphs.hits(linkEdges, "src", "dst", iters = 3).count())
-        report("hits_3it", tHt, nHt)
-        // round-9: the edit-distance join family on a replicated entity
-        // keyspace (sequential low-entropy names — the deletion-
-        // neighborhood regime). Cross-copy names DO pair (the offset digit
-        // is one substitution away), so pairs grow ~linearly-with-constant
-        // per copy AND every copy chains into ONE giant component — the
-        // worst case for both candidate volume and the CC closure.
-        val names = docs.select(col("doc_id").as("ent_id"),
-          format_string("Entity#%09d", col("doc_id")).as("name"))
-        val (tFz, nFz) = time(
-          graft.llm.Fuzzy.editDistanceJoinShort(names, "ent_id", "name", 1).count())
-        report("fuzzy_join_d1", tFz, nFz)
-        val (tFc, nFc) = time(
-          graft.llm.Fuzzy.fuzzyClusters(names, "ent_id", "name",
-            maxDist = 1, shortStrings = true).filter(col("is_canonical")).count())
-        report("fuzzy_cluster_canonical", tFc, nFc)
-        // round-11: the media near-dup family. Decode+hash is a pure map
-        // stage (media bytes never shuffle; rendering the synthetic
-        // container is part of the timed map, standing in for decode
-        // I/O); candidates ride the banded-Hamming join (image/audio)
-        // resp. the frame-hash equi-join with the blank-frame bucket cap
-        // (video), so join fanout is the planted C(f,2)-per-local twins
-        // plus rare splitmix accidents — never all-pairs.
-        locally {
-          import spark.implicits._
-          val mediaIds = docs.select(col("doc_id")).as[Long]
-          val (tIm, nIm) = time(
-            graft.llm.Multimodal.imageNearDupPairs(
-              mediaIds.map(probeImageMedia _), maxHamming = 2).count())
-          report("image_neardup_pairs", tIm, nIm)
-          val (tAu, nAu) = time(
-            graft.llm.Multimodal.audioNearDupPairs(
-              mediaIds.map(probeAudioMedia _), maxHamming = 2).count())
-          report("audio_neardup_pairs", tAu, nAu)
-          val (tVi, nVi) = time(
-            graft.llm.Multimodal.videoNearDupPairs(
-              mediaIds.map(probeVideoMedia _), sampleFrames = 12, minShared = 8).count())
-          report("video_neardup_pairs", tVi, nVi)
-          // the q_pipeline_media composition: decode → hash → pairs →
-          // transitive clusters → canonical, ONE plan; the CC closure
-          // moves 16-byte edges only
-          val (tMp, nMp) = time {
-            val pairs = graft.llm.Multimodal.imageNearDupPairs(
-                mediaIds.map(probeImageMedia _), maxHamming = 2)
-              .select("id_a", "id_b")
-            Dedup.clusters(docs.select(col("doc_id")), "doc_id", pairs)
-              .filter(col("is_canonical")).count()
-          }
-          report("media_pipeline_canonical", tMp, nMp)
-          // round-12: the codec-wave decode CPU rows — hash stage only,
-          // aggregated on the hash column (a bare count() can't prune a
-          // typed map, but the forcing is uniform with the as-of lesson)
-          val (tIc, nIc) = time(
-            graft.llm.Multimodal.imageDHash(mediaIds.map(probeImageCrossMedia _))
-              .agg(count(col("dhash"))).head.getLong(0))
-          report("image_hash_cross_container6", tIc, nIc)
-          val (tAc, nAc) = time(
-            graft.llm.Multimodal.audioEnvelopeHash(mediaIds.map(probeAudioCrossMedia _))
-              .agg(count(col("dhash"))).head.getLong(0))
-          report("audio_hash_cross_encoding8", tAc, nAc)
-          val (tVc, nVc) = time(
-            graft.llm.Multimodal.videoFrameHashes(mediaIds.map(probeVideoCrossMedia _),
-              sampleFrames = 12).agg(count(col("dhash"))).head.getLong(0))
-          report("video_hash_cross_container2", tVc, nVc)
-          // round-13: adversarial compositor chains (see the generator's
-          // comment) on a quarter corpus, two chain lengths — the pair's
-          // ratio pins CPU ∝ total frames, the factor sweep pins
-          // linear-in-corpus
-          val quarterIds = mediaIds.filter(_ % 4 == 0)
-          val (tA24, nA24) = time(
-            graft.llm.Multimodal.videoFrameHashes(
-              quarterIds.map(probeVideoAdversarialMedia(24) _), sampleFrames = 4)
-              .agg(count(col("dhash"))).head.getLong(0))
-          report("video_gif_adversarial_chain24", tA24, nA24)
-          val (tA96, nA96) = time(
-            graft.llm.Multimodal.videoFrameHashes(
-              quarterIds.map(probeVideoAdversarialMedia(96) _), sampleFrames = 4)
-              .agg(count(col("dhash"))).head.getLong(0))
-          report("video_gif_adversarial_chain96", tA96, nA96)
-          // round-13: admission walks + WARC ingest/extract — the count
-          // aggregates a parsed column so the typed map can't be pruned
-          val (tWp, nWp) = time(
-            graft.llm.Containers.decodeWebpMeta(mediaIds.map(probeWebpMedia _))
-              .agg(count(col("width"))).head.getLong(0))
-          report("webp_meta_walk", tWp, nWp)
-          val (tMk, nMk) = time(
-            graft.llm.Containers.decodeMkvMeta(mediaIds.map(probeMkvMedia _))
-              .agg(count(col("duration_ms"))).head.getLong(0))
-          report("mkv_meta_walk", tMk, nMk)
-          val (tWr, nWr) = time(
-            graft.llm.Warc.readWarc(mediaIds.map(probeWarcMedia _))
-              .agg(count(col("content_length"))).head.getLong(0))
-          report("warc_ingest_records", tWr, nWr)
-          val (tWh, nWh) = time(
-            graft.llm.Warc.htmlTextRecords(mediaIds.map(probeWarcMedia _))
-              .toDF("doc_id", "rec_idx", "text")
-              .agg(count(col("text"))).head.getLong(0))
-          report("warc_html_extract", tWh, nWh)
-          // round-13: the heterogeneous document router — detect +
-          // extract across all seven formats in one flatMap; the count
-          // aggregates the extracted text so nothing prunes away. The
-          // pdf slice is the CPU-heavy one (3 flate pages per doc).
-          val (tDr, nDr) = time(
-            graft.llm.Docs.routedTexts(mediaIds.map(probeDocMedia _))
-              .toDF("doc_id", "format", "text")
-              .agg(count(col("text"))).head.getLong(0))
-          report("doc_router_extract", tDr, nDr)
-          // round-13 wave 2: dump/shard ingestion and the boilerplate
-          // classifier — all pure flatMap kernels whose codec slices
-          // (gzip/bz2/zstd/xz per id) decompress inside the timed map;
-          // counts aggregate a parsed/extracted column so nothing prunes
-          val (tWk, nWk) = time(
-            graft.llm.Wiki.wikiPages(mediaIds.map(probeWikiMedia _))
-              .map(p => graft.llm.Wiki.wikitextToText(p.text))
-              .agg(count(col("value"))).head.getLong(0))
-          report("wiki_ingest_extract", tWk, nWk)
-          val (tJl, nJl) = time(
-            graft.llm.Archives.jsonlLines(mediaIds.map(probeJsonlMedia _))
-              .agg(count(col("line"))).head.getLong(0))
-          report("jsonl_shard_lines", tJl, nJl)
-          val (tBp, nBp) = time(
-            graft.llm.Boilerplate.htmlBlocks(mediaIds.map(probeBoilerMedia _))
-              .filter(col("is_content")).agg(count(col("text"))).head.getLong(0))
-          report("boilerplate_content_blocks", tBp, nBp)
-          val (tSe, nSe) = time(
-            graft.llm.StackExchange.posts(mediaIds.map(probeSeMedia _))
-              .agg(count(col("body_text"))).head.getLong(0))
-          report("stackexchange_posts", tSe, nSe)
-        }
-        // round-13 wave 2: PCA — the covariance pass is the corpus-linear
-        // part (treeReduce of a d(d+3)/2-double accumulator); Jacobi is
-        // O(d³) once on the driver, invariant in the factor
-        val (tPc, nPc) = time {
-          val model = graft.llm.Pca.fit(embs, "embedding")
-          graft.llm.Pca.project(embs, "vec_id", "embedding", model, 2)
-            .agg(count(col("pc_0"))).head.getLong(0)
-        }
-        report("pca_fit_project", tPc, nPc)
-        // round-10: the as-of family under a HOT key — half of every
-        // tick lands on key 0 (the single-instrument-with-10⁹-ticks shape
-        // the asofJoin scaladoc warns about). The plain window serializes
-        // key 0 into ONE task's sort; the bucketed form (width 10⁴ over a
-        // fixed 10⁶ time span = 100 cuts) spreads it — the probe measures
-        // exactly that divergence growing with the factor. Right-side
-        // (k, t) ties only perturb WHICH equal-time payload wins, never
-        // the row count the timing actions count.
-        val hotK = when(pmod(col("doc_id"), lit(2)) === 0, lit(0L))
-          .otherwise(pmod(col("doc_id"), lit(64)))
-        val ticksL = docs.select(hotK.as("k"),
-          pmod(col("doc_id") * 7919L, lit(1000000L)).as("t"),
-          col("doc_id").as("lv"))
-        val ticksR = docs.select(hotK.as("k"),
-          pmod(col("doc_id") * 104729L, lit(1000000L)).as("t"),
-          col("doc_id").as("rv"))
-        // count the MATCHED column, not the rows: a bare count() lets
-        // Catalyst prune the unused window/match columns and the probe
-        // times a scan instead of the operator (the Bench noop-sink
-        // lesson); rows = matched left rows
-        val (tAsP, nAsP) = time(
-          graft.ops.Temporal.asofJoin(ticksL, ticksR, Seq("k"), "t")
-            .agg(count(col("r_rv"))).head.getLong(0))
-        report("asof_hotkey_plain", tAsP, nAsP)
-        val (tAsB, nAsB) = time(
-          graft.ops.Temporal.asofJoinBucketed(ticksL, ticksR, Seq("k"), "t", 10000L)
-            .agg(count(col("r_rv"))).head.getLong(0))
-        report("asof_hotkey_bucketed", tAsB, nAsB)
-        encoded._2.unpersist()
-        indexed.unpersist()
-        docs.unpersist(); embs.unpersist()
-        kept = Set.empty
       }
-      // XL as-of probe, factor-independent and corpus-free: the in-factor
-      // pair shows parity because a few-hundred-thousand-row hot key sorts
-      // in one task faster than the bucket-summary pass costs. THIS is the
-      // regime the bucketed form exists for: 20M ticks, HALF on one key —
-      // plain asofJoin sorts 10M rows in a single task while 31 threads
-      // idle; the bucketed form (width 10⁶ over a 10⁸ span = 100 cuts)
-      // spreads that sort. Built from spark.range so probing the operator
-      // needs no corpus replication.
-      {
-        val n = sys.env.getOrElse("SPARK_GRAFT_ASOF_XL_ROWS", "20000000").toLong
-        def ticks(mult: Long, payload: String) = spark.range(n).select(
-          when(pmod(col("id"), lit(2)) === 0, lit(0L))
-            .otherwise(pmod(col("id"), lit(64))).as("k"),
-          pmod(col("id") * mult, lit(100000000L)).as("t"),
-          col("id").as(payload))
-        val xlL = ticks(7919L, "lv").persist()
-        val xlR = ticks(104729L, "rv").persist()
-        val nx = xlL.count(); xlR.count()
-        keepCurrent()
-        // warm BOTH plan shapes at 1/100 scale first (the Bench posture):
-        // each form cycles distinct window/aggregate shapes whose
-        // first-ever Janino compile + first spill otherwise lands on
-        // whichever timed run goes first — measured 124 s cold vs 6-8 s
-        // warm on the bucketed form
-        val lw = xlL.limit(200000)
-        val rw = xlR.limit(200000)
-        graft.ops.Temporal.asofJoin(lw, rw, Seq("k"), "t")
-          .agg(count(col("r_rv"))).head
-        graft.ops.Temporal.asofJoinBucketed(lw, rw, Seq("k"), "t", 1000000L)
-          .agg(count(col("r_rv"))).head
-        def reportXl(workload: String, sec: Double, rows: Long): Unit =
-          println(s"""{"factor":0,"docs":$nx,"vecs":0,"workload":"$workload","sec":${math.round(sec * 1000) / 1000.0},"rows":$rows}""")
-        // same matched-column forcing as the in-factor pair: bare count()
-        // would prune the window and time a scan
-        val (tP, nP) = time(
-          graft.ops.Temporal.asofJoin(xlL, xlR, Seq("k"), "t")
-            .agg(count(col("r_rv"))).head.getLong(0))
-        reportXl("asof_hotkey_xl_plain", tP, nP)
-        val (tB, nB) = time(
-          graft.ops.Temporal.asofJoinBucketed(xlL, xlR, Seq("k"), "t", 1000000L)
-            .agg(count(col("r_rv"))).head.getLong(0))
-        reportXl("asof_hotkey_xl_bucketed", tB, nB)
-        xlL.unpersist(); xlR.unpersist()
-      }
+      factors.foreach(run(_, sweep))
+      run(0, fixed)
     } finally spark.stop()
   }
 }

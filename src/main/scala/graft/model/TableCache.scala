@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Every `spark.read.parquet(path)` call re-resolves the source: a fresh
   * DataSource, a glob walk, and parquet footer schema inference — ~100–150 ms
-  * of driver-side work per call measured by [[graft.FloorProbe]] (steady
+  * of driver-side work per call measured by [[graft.Probe]] (steady
   * state, q_wc: build 133 ms vs 137 ms for the whole execution). The bench
   * and verify harnesses build every query's frame from scratch per rep, so
   * across 319 queries × 2 reps this metadata tax alone was ~30–40 s of suite

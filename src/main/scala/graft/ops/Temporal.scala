@@ -34,7 +34,7 @@ object Temporal {
     * key (a single instrument carrying 10⁹ ticks) serializes its rows into
     * one task's sort. [[asofJoinBucketed]] is the built-in mitigation.
     *
-    * WHICH FORM TO PICK (the measured rule, graft.AsofProbe numbers):
+    * WHICH FORM TO PICK (the measured rule, graft.ScaleProbe as-of rows):
     *  - max rows on any single key ≲ 10⁵–10⁶ AND the per-task sort fits
     *    in executor memory → THIS form. The probe's in-corpus hot key
     *    (~hundreds of thousands of rows) shows parity-or-better for the
@@ -102,8 +102,8 @@ object Temporal {
     * arithmetic. Extra cost over [[asofJoin]]: one slim (key, bucket)
     * aggregate and a bucket-level window — pay it when key histograms are
     * skewed; the uniform-keyspace default remains [[asofJoin]]. Measured
-    * (graft.AsofProbe, 20 M ticks with HALF on one key, local[32], warm
-    * min-of-reps): plain 36.2 s — the hot key sorts in a single spilling
+    * (graft.ScaleProbe's asof_hotkey_xl rows, 20 M ticks with HALF on one
+    * key, local[32], warm min-of-reps): plain 36.2 s — the hot key sorts in a single spilling
     * task — vs 6.1 s here at width 10⁶ over a 10⁸ span, a ~6× win that
     * grows with per-key volume since per-task sort size is capped at
     * span/width. */
@@ -184,8 +184,8 @@ object Temporal {
     * the scaladoc decision rule on [[asofJoin]] then picks:
     *
     *  - max per-key rows < `hotKeyThreshold` (default 10⁶, where the
-    *    AsofProbe measured the plain window's single-task sort start to
-    *    lose badly) → [[asofJoin]], no extra cost beyond the histogram;
+    *    ScaleProbe's XL as-of rows measured the plain window's single-task
+    *    sort start to lose badly) → [[asofJoin]], no extra cost beyond the histogram;
     *  - otherwise → [[asofJoinBucketed]] with width chosen so the
     *    hottest key lands ~`targetBucketRows` rows per (key, bucket)
     *    task (cuts clamped to [16, 4096] so tiny spans don't degenerate

@@ -35,7 +35,7 @@ object Windows {
     * input column's type (parquet writers differ); unix_millis only accepts
     * the former. The cast is a no-op for TIMESTAMP and value-preserving for
     * NTZ under the UTC session timezone every graft entry point sets
-    * (Smoke/Plans/Verify/Bench/ScaleProbe builders all pin it).
+    * (every session [[graft.Session]] builds pins it).
     * Driver-supplied sessions (SparkEntry) must likewise set
     * spark.sql.session.timeZone=UTC, or NTZ window epochs shift by the
     * JVM's tz offset. */

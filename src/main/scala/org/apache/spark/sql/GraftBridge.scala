@@ -10,6 +10,9 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Block until every listener event posted so far has been delivered. */
+  def waitUntilEmpty(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Drop the materialized blocks behind a `localCheckpoint()`ed Dataset.
     *
     * `Dataset.unpersist` only touches the SQL cache and

@@ -18,8 +18,8 @@ import org.apache.spark.{SparkEnv, SparkException}
   * and `ClosureCleaner.clean` re-reads and ASM-re-scans the closure's
   * capturing class bytecode each time (getClassReader → inflate the class
   * file out of the jar → ClassReader.accept over every method). Driver
-  * thread samples during a 3000-job loop put ~50% of the per-job fixed
-  * cost there: ~12–18 ms/job at local[32], measured by
+  * thread samples during a loop of 1-task count jobs put ~50% of the
+  * per-job fixed cost there: ~12–18 ms/job at local[32], measured by
   * [[graft.JobOverheadProbe]], across a suite that submits thousands of
   * jobs (AQE runs one job per query stage; the iterative operators run
   * 40–70 jobs per query). The scan's outcome for a given closure CLASS

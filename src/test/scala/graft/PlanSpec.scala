@@ -656,7 +656,12 @@ class PlanSpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan.toString
       for (bad <- Seq("CartesianProduct", "BroadcastNestedLoopJoin", "Window "))
         assert(!plan.contains(bad), s"fuzzy $regime path contains $bad:\n$plan")
-      assert(plan.contains("levenshtein"), s"fuzzy $regime path lost the verify:\n$plan")
+      // the verify is the typed banded-Levenshtein kernel: a MapPartitions
+      // over Fuzzy's own lambda (the blocking flatMaps show Spark's
+      // UDFAdaptors lambda instead); FuzzySpec pins the kernel's
+      // distances == Spark's levenshtein(a, b, d)
+      assert(plan.linesIterator.exists(l => l.contains("MapPartitions") && l.contains("graft.llm.Fuzzy$")),
+        s"fuzzy $regime path lost the typed verify kernel:\n$plan")
     }
   }
 
@@ -734,18 +739,38 @@ class PlanSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     // the load-bearing part is the ROOT: s"$dir/..." — the table-name
     // segment may itself be a simple interpolated name (TpchQueries' t())
-    val ok = """TableCache\.parquet\(\s*\w+\s*,\s*s"\$\{?(dir|sfDir)\}?/\$?[A-Za-z0-9_]+\.parquet"\s*\)""".r
+    // whitespace is normalized first, so a call wrapped over several
+    // lines is judged by its shape alone
+    val ok = """TableCache\.parquet\( ?\w+ ?, ?s"\$\{?(dir|sfDir)\}?/\$?[A-Za-z0-9_]+\.parquet" ?\)""".r
     val offenders = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(_.getFileName.toString == "TableCache.scala")
       .flatMap { p =>
-        val src = Files.readString(p)
+        val src = Files.readString(p).replaceAll("\\s+", " ")
         // every call site must be consumed by the fixture-shape regex
         val calls = """TableCache\.parquet\(""".r.findAllIn(src).size
         val good = ok.findAllIn(src).size
         if (calls != good) Some(s"$p: $calls call(s), $good matching the fixture shape") else None
       }.toSeq
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("every session is built by graft.Session (one configuration, verified = benchmarked)") {
+    // one factory: a second place that constructs a session under src/ is
+    // how the oracle once checked different physical plans from the timed
+    // ones
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val construct = """SparkSession\s*\.\s*builder""".r
+    val offenders = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_ == Paths.get("src/main/scala/graft/Session.scala"))
+      .filter(p => construct.findFirstIn(Files.readString(p)).isDefined)
+      .toSeq
+    assert(offenders.isEmpty, s"SparkSession built outside graft.Session: ${offenders.mkString(", ")}")
+    assert(SparkSpec.session.conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true",
+      "the test session lacks the bench's cached-plan coalescing flag")
   }
 
   test("TableCache retains at most one session's relations (single-slot memo)") {
