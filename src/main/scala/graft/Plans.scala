@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Dumps formatted physical plans of representative queries to PLANS.md —
-  * the .explain("formatted") evidence for the plan-shape claims in
-  * SCALING.md (broadcasts, pushdown, pruning, codegen, bucketed joins). */
+/** Dumps formatted physical plans of representative queries to PLANS.md
+  * in the working directory — the .explain("formatted") evidence for the
+  * plan-shape claims in SCALING.md (broadcasts, pushdown, pruning,
+  * codegen, bucketed joins). */
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
@@ -66,7 +67,7 @@ object Plans {
       sb.append(df.queryExecution.executedPlan.toString.take(6000))
       sb.append("\n```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.result())
+    Files.writeString(Paths.get("PLANS.md"), sb.result())
     println("[plans] wrote PLANS.md")
     spark.stop()
   }

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Envelope
 import graft.ops.AddOns
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` / `oracleSql` aggregate the per-module registries under
-  * graft.queries; each implemented operator from SURVEY §2 is registered
-  * there with a DuckDB-runnable oracle where SQL-expressible.
+  * `queries` / `oracleSql` are views of `all`, the `Q` records of the
+  * registries under graft.queries: each implemented operator from SURVEY
+  * §2 is declared there once, with its Spark build and its DuckDB oracle.
   */
 object SparkEntry {
 
@@ -31,30 +32,25 @@ object SparkEntry {
       count(lit(1)).as("n"), sum("k").as("sum_k"))
   }
 
+  def registries: Seq[Registry] = Seq(BatchQueries, ZSetQueries, WindowQueries,
+    SerdeQueries, LlmQueries, StorageQueries, TpchQueries, ScaleQueries,
+    TemporalQueries, FuzzyQueries)
+
+  /** Every registry's records in one sequence; a name declared in two
+    * registries (or twice in one) stops the program here instead of one
+    * record silently replacing the other in the maps below. */
+  lazy val all: Seq[Q] = {
+    val qs = registries.flatMap(_.all)
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query names declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.BatchQueries.queries ++
-      graft.queries.ZSetQueries.queries ++
-      graft.queries.WindowQueries.queries ++
-      graft.queries.SerdeQueries.queries ++
-      graft.queries.LlmQueries.queries ++
-      graft.queries.StorageQueries.queries ++
-      graft.queries.TpchQueries.queries ++
-      graft.queries.ScaleQueries.queries ++
-      graft.queries.TemporalQueries.queries ++
-      graft.queries.FuzzyQueries.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.BatchQueries.oracles ++
-      graft.queries.ZSetQueries.oracles ++
-      graft.queries.WindowQueries.oracles ++
-      graft.queries.SerdeQueries.oracles ++
-      graft.queries.LlmQueries.oracles ++
-      graft.queries.StorageQueries.oracles ++
-      graft.queries.TpchQueries.oracles ++
-      graft.queries.ScaleQueries.oracles ++
-      graft.queries.TemporalQueries.oracles ++
-      graft.queries.FuzzyQueries.oracles
+    * the same parquet tables. Every query has one. */
+  lazy val oracleSql: Map[String, String] = all.map(q => q.name -> q.oracle).toMap
 }

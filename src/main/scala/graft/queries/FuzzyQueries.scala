@@ -12,20 +12,27 @@ import graft.llm.Fuzzy
   * q_dedup_cluster-style recursive closure for the cluster form. Two
   * independent algorithms (blocked vs exhaustive) must agree pair-for-pair.
   */
-object FuzzyQueries {
+object FuzzyQueries extends Registry {
 
   private def customer(s: SparkSession, dir: String): DataFrame =
     TableCache.parquet(s, s"$dir/customer.parquet")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[Q] = Seq(
     // near-identical entity strings one substituted character apart — the
     // low-entropy keyspace ("Customer#000014999") that is exactly the
     // deletion-neighborhood regime: every gram is corpus-frequent, so
     // gram-prefix buckets go quadratic while deletion variants collide
     // almost only on true pairs (50.8 s vs 2.5 s at sf0.1, same answer)
-    "q_fuzzy_join" -> ((s, dir) =>
+    Q("q_fuzzy_join", (s, dir) =>
       Fuzzy.editDistanceJoinShort(customer(s, dir), "c_custkey", "c_name", maxDist = 1)
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b"),
+      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
+        |       levenshtein(a.c_name, b.c_name) AS dist
+        |FROM customer a, customer b
+        |WHERE a.c_custkey < b.c_custkey
+        |  AND abs(length(a.c_name) - length(b.c_name)) <= 1
+        |  AND levenshtein(a.c_name, b.c_name) <= 1
+        |ORDER BY id_a, id_b""".stripMargin),
 
     // the fuzzy pairs closed transitively: cluster_id = min custkey of the
     // edit-distance component. The every-7th slice sparsifies the
@@ -34,34 +41,10 @@ object FuzzyQueries {
     // chain the contiguous keyspace degenerates to — the full corpus
     // collapses to a single component in 4 star-contraction rounds
     // (measured), correct but uninformative as a fixture
-    "q_fuzzy_cluster" -> ((s, dir) =>
+    Q("q_fuzzy_cluster", (s, dir) =>
       Fuzzy.fuzzyClusters(customer(s, dir).filter(col("c_custkey") % 7 === 0),
           "c_custkey", "c_name", maxDist = 1, shortStrings = true)
-        .orderBy("c_custkey")),
-
-    // duplicate-heavy input (64 distinct p_names over 2000 rows):
-    // collapse multiplicity FIRST (distinct name, min partkey as
-    // representative), then fuzzy-join the representatives — the
-    // documented composition that keeps near-identical corpora from
-    // going quadratic in the candidate buckets
-    "q_fuzzy_reps" -> ((s, dir) => {
-      val reps = TableCache.parquet(s, s"$dir/part.parquet")
-        .groupBy("p_name").agg(min("p_partkey").as("rep_id"))
-      Fuzzy.editDistanceJoin(reps, "rep_id", "p_name", maxDist = 2)
-        .orderBy("id_a", "id_b")
-    }))
-
-  val oracles: Map[String, String] = Map(
-    "q_fuzzy_join" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-        |       levenshtein(a.c_name, b.c_name) AS dist
-        |FROM customer a, customer b
-        |WHERE a.c_custkey < b.c_custkey
-        |  AND abs(length(a.c_name) - length(b.c_name)) <= 1
-        |  AND levenshtein(a.c_name, b.c_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_fuzzy_cluster" ->
+        .orderBy("c_custkey"),
       """WITH RECURSIVE cu AS (SELECT * FROM customer WHERE c_custkey % 7 = 0),
         |pr AS (
         |  SELECT a.c_custkey AS id_a, b.c_custkey AS id_b
@@ -77,9 +60,19 @@ object FuzzyQueries {
         |  SELECT e.u, reach.r FROM e JOIN reach ON reach.id = e.v),
         |cl AS (SELECT id AS c_custkey, min(r) AS cluster_id FROM reach GROUP BY id)
         |SELECT c_custkey, cluster_id, c_custkey = cluster_id AS is_canonical
-        |FROM cl ORDER BY c_custkey""".stripMargin,
+        |FROM cl ORDER BY c_custkey""".stripMargin),
 
-    "q_fuzzy_reps" ->
+    // duplicate-heavy input (64 distinct p_names over 2000 rows):
+    // collapse multiplicity FIRST (distinct name, min partkey as
+    // representative), then fuzzy-join the representatives — the
+    // documented composition that keeps near-identical corpora from
+    // going quadratic in the candidate buckets
+    Q("q_fuzzy_reps", (s, dir) => {
+      val reps = TableCache.parquet(s, s"$dir/part.parquet")
+        .groupBy("p_name").agg(min("p_partkey").as("rep_id"))
+      Fuzzy.editDistanceJoin(reps, "rep_id", "p_name", maxDist = 2)
+        .orderBy("id_a", "id_b")
+    },
       """WITH reps AS (SELECT p_name, min(p_partkey) AS rep_id
         |              FROM part GROUP BY p_name)
         |SELECT a.rep_id AS id_a, b.rep_id AS id_b,
@@ -88,5 +81,5 @@ object FuzzyQueries {
         |WHERE a.rep_id < b.rep_id
         |  AND abs(length(a.p_name) - length(b.p_name)) <= 2
         |  AND levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin)
+        |ORDER BY id_a, id_b""".stripMargin))
 }

@@ -10,7 +10,7 @@ import graft.storage.FileStorage
 /** Correctness wiring for the FileStorage log: a full produce → consume
   * roundtrip (partitioner + offset assignment + scan) checked against the
   * same derivation in DuckDB. */
-object StorageQueries {
+object StorageQueries extends Registry {
 
   /** Recursive delete that closes its directory stream (walk leaks an fd
     * per call otherwise — these queries run repeatedly in one bench JVM). */
@@ -20,8 +20,8 @@ object StorageQueries {
       try s.iterator().asScala.toSeq.reverse.foreach(JFiles.delete) finally s.close()
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_storage_roundtrip" -> ((s, dir) => {
+  val all: Seq[Q] = Seq(
+    Q("q_storage_roundtrip", (s, dir) => {
       val root = "/tmp/graft_storage_rt"
       deleteTree(Paths.get(root))
       val fs = new FileStorage(s, root)
@@ -35,9 +35,10 @@ object StorageQueries {
         .select(col("partition"), col("offset"), col("key"), col("value"),
           Envelope.tsMs(col("timestamp")).as("ts_ms"))
         .orderBy("partition", "offset")
-    }),
+    },
+      s"""${BatchQueries.envCte} SELECT partition, "offset", key, value, ts_ms FROM env ORDER BY partition, "offset""""),
 
-    "q_storage_offsets_for_times" -> ((s, dir) => {
+    Q("q_storage_offsets_for_times", (s, dir) => {
       // reuses the topic written by q_storage_roundtrip when run in order;
       // rebuild defensively if missing
       val root = "/tmp/graft_storage_oft"
@@ -48,13 +49,7 @@ object StorageQueries {
         Envelope.fromEvents(s, dir).select("key", "value", "partition", "timestamp"))
       fs.offsetsForTimes("events", 1705276800000L) // 2024-01-15T00:00Z
         .orderBy("partition")
-    }))
-
-  val oracles: Map[String, String] = Map(
-    "q_storage_roundtrip" ->
-      s"""${BatchQueries.envCte} SELECT partition, "offset", key, value, ts_ms FROM env ORDER BY partition, "offset"""",
-
-    "q_storage_offsets_for_times" ->
+    },
       s"""${BatchQueries.envCte} SELECT partition, min("offset") AS "offset" FROM env
-         |WHERE ts_ms >= 1705276800000 GROUP BY partition ORDER BY partition""".stripMargin)
+         |WHERE ts_ms >= 1705276800000 GROUP BY partition ORDER BY partition""".stripMargin))
 }

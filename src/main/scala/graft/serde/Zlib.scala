@@ -36,7 +36,12 @@ object Zlib {
 
   /** Run `f` with a pooled Inflater in the given wrapping mode. The
     * instance is reset before and after use; nested calls (same thread,
-    * same mode) get distinct instances from the free-list. */
+    * same mode) get distinct instances from the free-list.
+    *
+    * Bound: an instance is created only when the free-list is empty and
+    * returns to it only in the `finally` after `f`, so a thread's list
+    * never holds more inflaters than that thread's deepest nesting of
+    * decodes in that mode. The pool needs no cap. */
   def withInflater[T](nowrap: Boolean)(f: Inflater => T): T = {
     val p = if (nowrap) pools.get()._1 else pools.get()._2
     val inf = {

@@ -42,7 +42,9 @@ import org.apache.spark.{SparkEnv, SparkException}
   * The stock wrapper's body (decompiled from spark-core 4.1.2:
   * clean → if (isClosure && checkSerializable && SparkEnv.get != null)
   * serialize-probe → SparkException("Task not serializable")) is
-  * replicated verbatim below the memo.
+  * replicated verbatim below the memo. PlanSpec's "the closure-cleaner
+  * shadow is pinned to the spark-core it copies" fails on any other Spark
+  * version, and when the stock class loads ahead of this one.
   *
   * This is driver-overhead engineering, not bench shaping: a production
   * driver submitting tens of thousands of stages pays the same redundant

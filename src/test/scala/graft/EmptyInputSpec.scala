@@ -79,24 +79,14 @@ class EmptyInputSpec extends SparkSpec {
     }
   }
 
-  test("no duplicate query keys in the registry source") {
-    // Map literals collapse duplicate keys silently (last wins), so a
-    // new entry reusing an old name would SHADOW one of the pair —
-    // query and oracle could even resolve to a CONSISTENT stale pair
-    // and stay green while the new code never runs (caught live in
-    // round 15: a second "q_pipeline_crawl"). Count source-level
-    // occurrences: each name may appear at most twice (once in the
-    // queries map, once in the oracles map) per file.
-    val re = """"(q_[a-z0-9_]+)"\s*->""".r
-    for (f <- Seq("LlmQueries", "BatchQueries", "FuzzyQueries", "ScaleQueries",
-        "SerdeQueries", "StorageQueries", "TemporalQueries", "TpchQueries",
-        "WindowQueries", "ZSetQueries")) {
-      val src = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"src/main/scala/graft/queries/$f.scala")), "UTF-8")
-      val counts = re.findAllMatchIn(src).map(_.group(1)).toSeq
-        .groupBy(identity).view.mapValues(_.size)
-      val dups = counts.filter(_._2 > 2).keys.toSeq.sorted
-      assert(dups.isEmpty, s"$f.scala: names bound more than twice: $dups")
-    }
+  test("query names are distinct across all registries") {
+    // a name declared twice, in one registry or in two, would leave one
+    // record unreachable through the name-keyed maps (last wins) — query
+    // and oracle could even resolve to a CONSISTENT stale pair and stay
+    // green while the new code never runs (caught live in round 15: a
+    // second "q_pipeline_crawl")
+    val names = SparkEntry.registries.flatMap(_.all).map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
+    assert(dups.isEmpty, s"query names declared more than once: ${dups.toSeq.sorted}")
   }
 }

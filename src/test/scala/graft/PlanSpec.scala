@@ -773,6 +773,19 @@ class PlanSpec extends SparkSpec {
       "the test session lacks the bench's cached-plan coalescing flag")
   }
 
+  test("the closure-cleaner shadow is pinned to the spark-core it copies") {
+    // SparkClosureCleanerShadow.scala replicates spark-core 4.1.2's wrapper
+    // body below its memo: another Spark could change that body while the
+    // shadow silently keeps the old one. And the shadow only acts if the
+    // project's class, not the jar's, is the one the JVM loads.
+    assert(org.apache.spark.SPARK_VERSION == "4.1.2",
+      s"Spark ${org.apache.spark.SPARK_VERSION}: re-derive SparkClosureCleanerShadow.scala from its spark-core, then move this pin")
+    val loadedFrom = Class.forName("org.apache.spark.util.SparkClosureCleaner$")
+      .getProtectionDomain.getCodeSource.getLocation.toString
+    assert(!loadedFrom.contains("spark-core"),
+      s"SparkClosureCleaner$$ loaded from $loadedFrom: the shadow is not on the classpath ahead of Spark")
+  }
+
   test("TableCache retains at most one session's relations (single-slot memo)") {
     // r15 ADVICE: the old WeakHashMap pinned every session it ever saw
     // (map values strongly reach their session). The single-slot memo must

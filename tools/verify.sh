@@ -1,7 +1,7 @@
 #!/bin/bash
 # Compile, run graft.Verify at sf0.01, then DuckDB-compare (tools/check.py).
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/graft_verify}
 sbt -batch compile < /dev/null
