@@ -2,15 +2,17 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Dumps formatted physical plans of representative queries to PLANS.md
-  * in the working directory — the .explain("formatted") evidence for the
-  * plan-shape claims in SCALING.md (broadcasts, pushdown, pruning,
-  * codegen, bucketed joins). */
+/** Dumps the final (post-AQE) physical plans of representative queries to
+  * PLANS.md in the working directory — the evidence for the plan-shape
+  * claims in SCALING.md (broadcasts, pushdown, pruning, codegen, bucketed
+  * joins). `SPARK_GRAFT_ONLY=q_a,q_b` dumps those queries instead of the
+  * pick list. Usage: `Plans [sfDir]`. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = Session("ERROR")
-    val picks = Seq(
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+    val picks = only.fold(Seq(
       "q1_pricing" -> "single-scan pricing summary: pushed date filter, column pruning, 2-phase agg",
       "q3_topk" -> "dimension-chain broadcast joins + top-k",
       "q_compact" -> "compact as one max_by hash aggregation (no window sort)",
@@ -55,17 +57,19 @@ object Plans {
       "q_pipeline_frontier" -> "crawl-admission pipeline: sitemap walk -> surt keys, CDX -> revisit dedup -> history, LEFT JOIN fetch decision — only the dedup window and the key join shuffle (round 15)",
       "q_ann_nsw" -> "graph ANN: per-partition NSW build + beam search in ONE mapPartitions over the embedding scan, then the bounded top-k merge — |shards|x|queries|xk slim rows are all that shuffles (round 15)",
       "q_retrieval_rrf" -> "RRF hybrid: BM25 chain + brute ANN chain feed one (q_id, nn_id)-keyed integer-sum aggregation + bounded top-k — rank fusion adds NO window and no corpus-sized stage (round 15)",
-      "q_pipeline_retrieval" -> "hybrid retrieval pipeline: BM25 postings chain + NSW graph search (mapPartitions, no query join) -> RRF sum-agg -> label join -> k-bounded interleave windows, ONE plan end to end (round 15)")
+      "q_pipeline_retrieval" -> "hybrid retrieval pipeline: BM25 postings chain + NSW graph search (mapPartitions, no query join) -> RRF sum-agg -> label join -> k-bounded interleave windows, ONE plan end to end (round 15)"))(_.map(_ -> ""))
+    val run = new Run(spark)
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of representative queries\n\n")
     sb.append(s"Generated by `graft.Plans` on `$dir`. After execution, codegen'd\n")
     sb.append("operators carry the `*(n)` prefix (AQE final plans).\n")
     picks.foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, dir)
-      df.collect() // finalize the AQE plan
-      sb.append(s"\n## $name — $why\n\n```\n")
-      sb.append(df.queryExecution.executedPlan.toString.take(6000))
-      sb.append("\n```\n")
+      run(SparkEntry.queries(name)(spark, dir)) { df =>
+        df.collect() // finalize the AQE plan
+        sb.append(s"\n## $name${if (why.isEmpty) "" else s" — $why"}\n\n```\n")
+        sb.append(df.queryExecution.executedPlan.toString.take(6000))
+        sb.append("\n```\n")
+      }.error.foreach(e => System.err.println(s"[plans] $name failed: ${e.getMessage}"))
     }
     Files.writeString(Paths.get("PLANS.md"), sb.result())
     println("[plans] wrote PLANS.md")

@@ -10,14 +10,10 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = Session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val run = new Run(spark)
+    SparkEntry.all.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+      run(q.build(spark, sfDir))(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}"))
+        .error.foreach(e => System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

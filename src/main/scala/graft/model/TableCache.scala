@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Every `spark.read.parquet(path)` call re-resolves the source: a fresh
   * DataSource, a glob walk, and parquet footer schema inference — ~100–150 ms
-  * of driver-side work per call measured by [[graft.Probe]] (steady
-  * state, q_wc: build 133 ms vs 137 ms for the whole execution). The bench
+  * of driver-side work per call at r15 on local[32] (steady state, q_wc:
+  * build 133 ms vs 137 ms for the whole execution). The bench
   * and verify harnesses build every query's frame from scratch per rep, so
   * across 319 queries × 2 reps this metadata tax alone was ~30–40 s of suite
   * wall — the single largest component of the per-query floor.
@@ -45,8 +45,11 @@ object TableCache {
     * (session, path) and the schema per path. Returning the same immutable
     * DataFrame object is the plain df-reuse idiom (self-joins of a shared
     * frame go through DeduplicateRelations like any `df.join(df)`), and it
-    * skips the ~50 ms of per-call DataSource re-resolution that remained
-    * after the schema memo.
+    * skips the DataSource re-resolution that remains after the schema memo:
+    * at local[4] on a 4-core host, perfbench's 10 `floor` core queries at
+    * sf0.01 summed 419–539 ms of build time per rep with this memo and
+    * 617–946 ms with the schema memo alone ([[graft.Run]]'s build split,
+    * reps 3–6 of two runs each); plan time and job count did not move.
     *
     * Fixture tables ONLY: the relation memo snapshots the file listing at
     * first read, so a path whose files change mid-session would silently

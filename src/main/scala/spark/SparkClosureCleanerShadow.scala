@@ -19,8 +19,10 @@ import org.apache.spark.{SparkEnv, SparkException}
   * capturing class bytecode each time (getClassReader → inflate the class
   * file out of the jar → ClassReader.accept over every method). Driver
   * thread samples during a loop of 1-task count jobs put ~50% of the
-  * per-job fixed cost there: ~12–18 ms/job at local[32], measured by
-  * [[graft.JobOverheadProbe]], across a suite that submits thousands of
+  * per-job fixed cost there. At local[4] on a 4-core host,
+  * [[graft.JobOverheadProbe]]'s bare 1-task job took 12.8 and 18.5 ms
+  * with this shadow and 22.5 and 32.3 ms without it (two runs each; its
+  * noop writes moved within noise), and the suite submits thousands of
   * jobs (AQE runs one job per query stage; the iterative operators run
   * 40–70 jobs per query). The scan's outcome for a given closure CLASS
   * never changes within a JVM: JVM-lambda (indylambda) closures are
