@@ -1,9 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.llm.{Ann, Dedup, Hashing, Ivf, Multimodal, Nsw, Pq, Retrieval}
 import graft.ops.Temporal
+import graft.storage.FileStorage
+import graft.streaming.IncrementalJoin
+import graft.streams.ZSet
 
 /** Scale-up probe behind SCALING.md's measured table: replicates the
   * documents/embeddings corpora N× (ids offset per copy, text perturbed so
@@ -483,6 +487,49 @@ object ScaleProbe {
     // 5000·f deterministic vectors over 8 partitions, queried by the first 16
     lazy val vectors: DataFrame = shared(spark.range(5000L * f).as[Long]
       .map(id => (id, probeVec(id))).toDF("vec_id", "embedding").repartition(8))
+    // the file log and the incremental join, seeded with 10·f produce
+    // calls of 2000 messages (resp. 10·f join steps of 1000 orders) in a
+    // temporary directory that `close` deletes
+    private var dirs: List[java.nio.file.Path] = Nil
+    private def tempDir(): String = {
+      dirs ::= java.nio.file.Files.createTempDirectory("graft_probe")
+      dirs.head.toString
+    }
+    def close(): Unit = dirs.foreach { d =>
+      val s = java.nio.file.Files.walk(d)
+      try s.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete) finally s.close()
+    }
+    val logCalls: Int = 10 * f
+    def logBatch(i: Int): DataFrame = spark.range(i * 2000L, (i + 1) * 2000L).select(
+      (col("id") % 997).cast("string").as("key"), concat(lit("v"), col("id")).as("value"),
+      timestamp_millis(lit(1609459200000L) + col("id") * 1000L).as("timestamp"))
+    lazy val log: FileStorage = {
+      val fs = new FileStorage(spark, tempDir())
+      fs.createTopic("orders", 4)
+      (0 until logCalls).foreach(i => fs.produce("orders", logBatch(i)))
+      fs
+    }
+    /** Step i's deltas: 1000 orders over 200 customers plus 100 cancels of
+      * step i-5's orders; all customers at step 0, then one moving segment. */
+    def joinDeltas(i: Int): (DataFrame, DataFrame) = {
+      val orders = spark.range(i * 1000L, (i + 1) * 1000L).select(
+        concat(lit("c"), col("id") % 200).as("customer_id"), col("id").as("order_id"), lit(1L).as(ZSet.W))
+      val cancels = spark.range((i - 5) * 1000L, (i - 5) * 1000L + (if (i >= 5) 100 else 0)).select(
+        concat(lit("c"), col("id") % 200).as("customer_id"), col("id").as("order_id"), lit(-1L).as(ZSet.W))
+      val dims =
+        if (i == 0) spark.range(200).select(concat(lit("c"), col("id")).as("cid"),
+          (col("id") % 5).cast("string").as("segment"), lit(1L).as(ZSet.W))
+        else spark.range(2).select(lit(s"c${i % 200}").as("cid"),
+          ((lit(i % 200) + col("id")) % 5).cast("string").as("segment"),
+          when(col("id") === 0, -1L).otherwise(1L).as(ZSet.W))
+      (orders.unionByName(cancels), dims)
+    }
+    lazy val join: IncrementalJoin = {
+      val (a, b) = joinDeltas(0)
+      val j = new IncrementalJoin(spark, tempDir(), a.schema, b.schema, col("customer_id") === col("cid"))
+      (0 until logCalls).foreach { i => val (da, db) = joinDeltas(i); j.step(da, db).count() }
+      j
+    }
     // 20M XL ticks, both plan shapes warmed at 1/100 scale first: each form
     // cycles distinct window/aggregate shapes whose first-ever Janino
     // compile + first spill otherwise lands on whichever timed run goes
@@ -749,7 +796,22 @@ object ScaleProbe {
       def ranks(shift: Int) = c.spark.range(2500L * c.f).as[Long].flatMap(q =>
         (1 to 10).map(r => (q, (q * 7 + r + shift) % 1000, r.toLong))).toDF("q_id", "nn_id", "rank")
       nonNull(Retrieval.rrfFuse(Seq(ranks(0), ranks(5)), "q_id", "nn_id", "rank", topK = 10), "nn_id")
-    }))
+    }),
+    // the file log and the join state: one more produce, a range read of
+    // the fullest partition's last 125 offsets, one more join step — each
+    // reads the offset index or the join's O(log n) segments, never the
+    // whole log or state, so all three should stay flat as the factor grows
+    // the log and the join state. Rows: messages in the log, messages read,
+    // join output rows
+    ("log_produce", c => { val fs = c.log; () => {
+      fs.produce("orders", c.logBatch(c.logCalls))
+      fs.watermarks("orders").agg(sum(col("high") - col("low"))).head.getLong(0)
+    } }),
+    ("log_read_range", c => {
+      val high = c.log.watermarks("orders").select("high").as[Long](Encoders.scalaLong).collect().max
+      () => c.log.readRange("orders", high - 125, high).count()
+    }),
+    ("join_step", c => { val j = c.join; val (da, db) = c.joinDeltas(c.logCalls); () => j.step(da, db).count() }))
 
   /** Factor-independent, corpus-free rows, run once after the sweep: the
     * in-factor as-of pair shows parity because a few-hundred-thousand-row
@@ -813,6 +875,7 @@ object ScaleProbe {
           }
           spark.catalog.clearCache()
           spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+          c.close()
         }
       }
       factors.foreach(run(_, sweep))

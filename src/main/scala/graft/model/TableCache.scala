@@ -1,6 +1,7 @@
 package graft.model
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -39,7 +40,20 @@ object TableCache {
   // live one in every real caller — Bench/Verify/tests run queries against
   // one session at a time); an older session's entries are dropped, and the
   // session itself becomes collectable, the moment a new session arrives.
-  @volatile private var slot: (SparkSession, ConcurrentHashMap[String, DataFrame]) = null
+  // A new session's map is installed by compare-and-set, so threads of one
+  // session that race to install it end up sharing one map; a plain
+  // check-then-set let the last writer drop the others' entries.
+  private val slot = new AtomicReference[(SparkSession, ConcurrentHashMap[String, DataFrame])]()
+
+  @annotation.tailrec
+  private def relations(spark: SparkSession): ConcurrentHashMap[String, DataFrame] = {
+    val cur = slot.get
+    if (cur != null && (cur._1 eq spark)) cur._2
+    else {
+      val fresh = (spark, new ConcurrentHashMap[String, DataFrame]())
+      if (slot.compareAndSet(cur, fresh)) fresh._2 else relations(spark)
+    }
+  }
 
   /** `spark.read.parquet(path)` with the resolved relation memoized per
     * (session, path) and the schema per path. Returning the same immutable
@@ -60,12 +74,7 @@ object TableCache {
     * cannot work: tests legitimately point `dir` at read-only temp
     * fixtures, e.g. EmptyInputSpec's zero-row corpus.) */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    var cur = slot
-    if (cur == null || (cur._1 ne spark)) {
-      cur = (spark, new ConcurrentHashMap[String, DataFrame]())
-      slot = cur
-    }
-    val perSession = cur._2
+    val perSession = relations(spark)
     val hit = perSession.get(path)
     if (hit != null) hit
     else {

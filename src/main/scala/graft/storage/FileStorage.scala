@@ -1,10 +1,10 @@
 package graft.storage
 
-import java.nio.file.{Files => JFiles, Paths}
+import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.model.Envelope
 
 /** File-backed storage: a topic is a parquet table with the envelope columns
@@ -12,26 +12,28 @@ import graft.model.Envelope
   * fs_admin.py:206-261) re-expressed as what it actually is: a partitioned
   * columnar table with (partition, offset, timestamp) columns.
   *
-  * The reference encodes offsets/timestamps in batch-file NAMES and binary-
-  * searches them; here the same pruning falls out of parquet row-group
-  * statistics — an offset/ts predicate reaches the scan as a PushedFilter,
-  * so a seek reads only the row groups that overlap the range.
+  * The reference encodes offsets/timestamps in batch-file NAMES and derives
+  * watermarks from them (fs_admin.py:156-183); here a per-topic offset index
+  * records each data file's per-partition `[lo, hi)` range, so produce,
+  * watermarks and lags read no data, and `readRange` opens only the files
+  * whose range overlaps. Within a file, an offset/ts predicate reaches the
+  * scan as a PushedFilter, so a seek reads only the overlapping row groups.
   *
-  * `root` is a LOCAL filesystem path in this class: the metadata plane
-  * (meta.json, group offsets, the writer lock) uses java.nio precisely for
+  * `root` is a LOCAL filesystem path: the metadata plane (meta.json,
+  * index.json, group offsets, the writer lock) uses java.nio precisely for
   * its atomic CREATE_NEW / ATOMIC_MOVE guarantees, which object stores do
-  * not offer. Object-store backends (s3a://, abfss://) go through
-  * [[HadoopFileStorage]], which runs the same data plane over the Hadoop
-  * FileSystem API and documents the weaker metadata atomicity there.
+  * not offer.
   *
-  * Layout: `<root>/topics/<name>/data/` (parquet) + `meta.json`
-  * (partition count, fs_admin.py:349-369); `<root>/groups/<g>/<topic>.json`
-  * (committed offsets, fs_admin.py:371-415).
+  * Layout: `<root>/topics/<name>/data/` (parquet) + `meta.json` (partition
+  * count, fs_admin.py:349-369) + `index.json` (the offset index) +
+  * `.staging/` (a produce's files before they move into `data/`);
+  * `<root>/groups/<g>/<topic>.json` (committed offsets, fs_admin.py:371-415).
   *
   * Scale notes: offset assignment on produce is a row_number window keyed by
   * `partition` — per-partition sequencing is the log's own semantics (Kafka
   * brokers serialize the same way); everything else is append-only parquet
-  * with no global coordination.
+  * with no global coordination. The index grows by one entry per produced
+  * file (log compaction, which would bound it, is not implemented).
   */
 class FileStorage(spark: SparkSession, val root: String,
     lockWaitMs: Long = 30000, lockStaleMs: Long = 600000) extends Storage {
@@ -85,11 +87,7 @@ class FileStorage(spark: SparkSession, val root: String,
   private def usingStream[A](s: java.util.stream.Stream[java.nio.file.Path])(f: Iterator[java.nio.file.Path] => A): A =
     try f(s.iterator().asScala) finally s.close()
 
-  override def deleteTopic(topic: String): Unit = {
-    val dir = Paths.get(topicDir(topic))
-    if (JFiles.exists(dir))
-      usingStream(JFiles.walk(dir))(_.toSeq.reverse.foreach(JFiles.delete))
-  }
+  override def deleteTopic(topic: String): Unit = deleteTree(Paths.get(topicDir(topic)))
 
   override def exists(topic: String): Boolean = JFiles.exists(metaPath(topic))
 
@@ -242,10 +240,89 @@ class FileStorage(spark: SparkSession, val root: String,
     produceLocked(topic, df)
   }
 
+  /** Assign offsets past the indexed high watermarks, write the batch to
+    * `.staging/` (an Observation on the same write counts its rows per
+    * partition), move the files into `data/`, then commit the index. An
+    * empty batch appends nothing. A crash between the move and the commit
+    * leaves unlisted files, which the next `index` call recovers. */
   private def produceLocked(topic: String, df: DataFrame): Unit = withWriterLock(topic) {
-    LogProduce.assign(topic, df, partitions(topic), watermarks(topic))
-      .write.mode("append").parquet(dataDir(topic))
+    val (files, recovered) = index(topic)
+    val base = bounds(files).map { case (p, (_, hi)) => p -> hi }
+    val staging = Paths.get(s"${topicDir(topic)}/.staging")
+    deleteTree(staging) // residue of a crashed produce
+    val nParts = partitions(topic)
+    val obs = Observation()
+    val counts = (0 until nParts).map(p => count(when(col("partition") === p, 1)).as(p.toString))
+    LogProduce.assign(topic, df, nParts, base)
+      .observe(obs, counts.head, counts.tail: _*)
+      .write.parquet(staging.toString)
+    val written = obs.get.collect { case (p, n: Long) if n > 0 => p.toInt -> n }
+    val added =
+      if (written.isEmpty) Nil
+      else {
+        val ranges = written.map { case (p, n) => val lo = base.getOrElse(p, 0L); p -> (lo, lo + n) }
+        usingStream(JFiles.list(staging))(_.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+          .map { f =>
+            JFiles.move(f, Paths.get(dataDir(topic)).resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+            // every file of one produce gets the produce's ranges: a
+            // superset of its own rows' offsets, exact at one file
+            LogFile(f.getFileName.toString, ranges)
+          }
+      }
+    if (added.nonEmpty || recovered) writeIndex(topic, files ++ added)
+    deleteTree(staging)
   }
+
+  // ---- offset index (fs_admin.py:156-183: watermarks from metadata) ----
+
+  /** One data file and the `[lo, hi)` offset range it covers per partition. */
+  private case class LogFile(name: String, ranges: Map[Int, (Long, Long)])
+
+  private def indexPath(t: String) = Paths.get(s"${topicDir(t)}/index.json")
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (JFiles.exists(p)) usingStream(JFiles.walk(p))(_.toSeq.reverse.foreach(JFiles.delete))
+
+  private def writeIndex(topic: String, files: Seq[LogFile]): Unit =
+    writeAtomic(indexPath(topic), files.map { f =>
+      val ranges = f.ranges.toSeq.sortBy(_._1)
+        .map { case (p, (lo, hi)) => s""""$p": [$lo, $hi]""" }.mkString("{", ", ", "}")
+      s"""  {"file": "${esc(f.name)}", "ranges": $ranges}"""
+    }.mkString("{\"files\": [\n", ",\n", "\n]}\n"))
+
+  private def readIndex(topic: String): Seq[LogFile] =
+    if (!JFiles.exists(indexPath(topic))) Nil
+    else """\{"file": "((?:[^"\\]|\\.)*)", "ranges": \{([^}]*)\}\}""".r
+      .findAllMatchIn(JFiles.readString(indexPath(topic))).map { m =>
+        LogFile(unesc(m.group(1)), """"(\d+)": \[(\d+), (\d+)\]""".r.findAllMatchIn(m.group(2))
+          .map(r => r.group(1).toInt -> (r.group(2).toLong, r.group(3).toLong)).toMap)
+      }.toSeq
+
+  /** The topic's data files with their ranges, and whether any had to be
+    * recovered from the data. Files the index does not list (a crash
+    * between a produce's move and its index commit, or a topic written
+    * before the index existed) are aggregated, and only those; a listed
+    * file that is missing discards the index and aggregates every file. */
+  private def index(topic: String): (Seq[LogFile], Boolean) = {
+    val onDisk = usingStream(JFiles.list(Paths.get(dataDir(topic))))(
+      _.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet)
+    val stored = readIndex(topic)
+    val listed = if (stored.forall(f => onDisk(f.name))) stored else Nil
+    val unlisted = (onDisk -- listed.map(_.name)).toSeq.sorted
+    if (unlisted.isEmpty) (listed, false)
+    else {
+      val found = spark.read.schema(Envelope.schema).parquet(unlisted.map(f => s"${dataDir(topic)}/$f"): _*)
+        .groupBy(col("_metadata.file_name"), col("partition"))
+        .agg(min("offset"), max("offset") + 1).collect()
+        .groupMap(_.getString(0))(r => r.getInt(1) -> (r.getLong(2), r.getLong(3)))
+      (listed ++ unlisted.map(f => LogFile(f, found.get(f).fold(Map.empty[Int, (Long, Long)])(_.toMap))), true)
+    }
+  }
+
+  /** (low, high) per partition that holds at least one message. */
+  private def bounds(files: Seq[LogFile]): Map[Int, (Long, Long)] =
+    files.flatMap(_.ranges).groupMapReduce(_._1)(_._2) { case ((l1, h1), (l2, h2)) =>
+      (math.min(l1, l2), math.max(h1, h2)) }
 
   /** Streaming read of the topic log (streams source,
     * topologynode.py:977-989): each appended batch file becomes a
@@ -255,15 +332,27 @@ class FileStorage(spark: SparkSession, val root: String,
     spark.readStream.schema(Envelope.schema).parquet(dataDir(topic))
   }
 
-  override def watermarks(topic: String): DataFrame =
-    graft.ops.AddOns.watermarks(read(topic))
+  /** (partition, low, high) from the index: a local relation, no scan. */
+  override def watermarks(topic: String): DataFrame = {
+    require(exists(topic), s"no such topic: $topic")
+    val rows = bounds(index(topic)._1).toSeq.sortBy(_._1).map { case (p, (lo, hi)) => Row(p, lo, hi) }
+    spark.createDataFrame(rows.asJava, StructType(Seq(StructField("partition", IntegerType),
+      StructField("low", LongType), StructField("high", LongType))))
+  }
 
   // ---- offset / timestamp seeks (fs_admin.py:206-261) ----
 
-  /** Messages with offset in [from, until) per partition — the predicate is
-    * pushed to the parquet scan (row-group pruning). */
-  def readRange(topic: String, fromOffset: Long, untilOffset: Long): DataFrame =
-    read(topic).filter(col("offset") >= fromOffset && col("offset") < untilOffset)
+  /** Messages with offset in [from, until) per partition: reads only the
+    * files whose indexed range overlaps, and the predicate is pushed to the
+    * parquet scan (row-group pruning). */
+  def readRange(topic: String, fromOffset: Long, untilOffset: Long): DataFrame = {
+    require(exists(topic), s"no such topic: $topic")
+    val files = index(topic)._1
+      .filter(_.ranges.values.exists { case (lo, hi) => lo < untilOffset && hi > fromOffset })
+      .map(f => s"${dataDir(topic)}/${f.name}")
+    val log = if (files.isEmpty) emptyLog(topic) else spark.read.schema(Envelope.schema).parquet(files: _*)
+    log.filter(col("offset") >= fromOffset && col("offset") < untilOffset)
+  }
 
   /** offsets_for_times: first offset with timestamp >= ts per partition
     * (cluster_admin.py:210-238). */
@@ -329,18 +418,17 @@ class FileStorage(spark: SparkSession, val root: String,
   def cpGroupOffsets(group: String, topic: String, target: FileStorage): Unit =
     target.commit(group, topic, committed(group, topic))
 
-  /** lags (kafi/storage.py:245-255): high watermark − committed. */
+  /** lags (kafi/storage.py:245-255): high watermark − committed (the low
+    * watermark where nothing is committed), from the index: a local
+    * relation, no scan. */
   def lags(group: String, topic: String): DataFrame = {
-    val cm = committed(group, topic).toSeq
-    val cmDf =
-      if (cm.isEmpty)
-        spark.createDataFrame(Seq.empty[(Int, Long)]).toDF("partition", "committed")
-      else {
-        val s2 = spark
-        import s2.implicits._
-        cm.toDF("partition", "committed")
-      }
-    graft.ops.AddOns.lags(read(topic), cmDf)
+    require(exists(topic), s"no such topic: $topic")
+    val cm = committed(group, topic)
+    val rows = bounds(index(topic)._1).toSeq.sortBy(_._1).map { case (p, (lo, hi)) =>
+      Row(p, hi, cm.get(p).map(Long.box).orNull, hi - cm.getOrElse(p, lo))
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(StructField("partition", IntegerType),
+      StructField("high", LongType), StructField("committed", LongType), StructField("lag", LongType))))
   }
 
   /** delete_records up to the given offset per partition
@@ -350,8 +438,9 @@ class FileStorage(spark: SparkSession, val root: String,
     val tmp = s"${topicDir(topic)}/data_tmp"
     keep.write.mode("overwrite").parquet(tmp)
     val dataP = Paths.get(dataDir(topic))
-    usingStream(JFiles.walk(dataP))(_.toSeq.reverse.foreach(JFiles.delete))
+    deleteTree(dataP)
     JFiles.move(Paths.get(tmp), dataP)
+    JFiles.deleteIfExists(indexPath(topic)) // rebuilt from the rewritten files
   }
 }
 

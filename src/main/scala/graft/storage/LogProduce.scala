@@ -5,17 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Envelope
 
-/** The offset-assignment plan shared by every file-log backend
-  * (fs_producer.py:26-70 semantics): partition resolution, timestamp
-  * default, and content-deterministic per-partition offset sequencing past
-  * the prior high watermark. Pure plan construction — the caller supplies
-  * the watermark DataFrame and writes the result, so local-disk and
-  * object-store backends reuse the identical derivation.
+/** The offset-assignment plan of the file log (fs_producer.py:26-70
+  * semantics): partition resolution, timestamp default, and
+  * content-deterministic per-partition offset sequencing past the prior
+  * high watermark. Pure plan construction — the caller supplies the
+  * watermarks and writes the result.
   */
 private[storage] object LogProduce {
 
-  /** @param hw (partition, high) current high watermarks for the topic. */
-  def assign(topic: String, df: DataFrame, numPartitions: Int, hw: DataFrame): DataFrame = {
+  /** @param hw partition -> high watermark; absent partitions start at 0.
+    *           A map literal, so the plan reads no log and its generated
+    *           code does not change with the values. */
+  def assign(topic: String, df: DataFrame, numPartitions: Int, hw: Map[Int, Long]): DataFrame = {
     val p = numPartitions
     val withKey = if (df.columns.contains("key")) df else df.withColumn("key", lit(null).cast("string"))
     // hash-of-key partitioner (kafi/helpers.py:338-352); explicit partition
@@ -43,7 +44,6 @@ private[storage] object LogProduce {
       if (withPart.columns.contains("timestamp")) withPart
       else withPart.withColumn("timestamp", current_timestamp()) // CURRENT_TIME (fs_producer.py:36-37)
     withTs
-      .join(broadcast(hw.select(col("partition"), col("high"))), Seq("partition"), "left")
       // content-deterministic ordering: (timestamp, key, value) — the same
       // input always yields the same offsets regardless of task scheduling;
       // monotonically_increasing_id only breaks ties between IDENTICAL
@@ -51,8 +51,7 @@ private[storage] object LogProduce {
       .withColumn("offset",
         (row_number().over(Window.partitionBy("partition")
           .orderBy(col("timestamp"), col("key"), col("value"), monotonically_increasing_id())) - 1
-          + coalesce(col("high"), lit(0L))).cast("long"))
-      .drop("high")
+          + coalesce(typedLit(hw).getItem(col("partition")), lit(0L))).cast("long"))
       .withColumn("topic", lit(topic))
       .withColumn("timestampType", lit(1))
       .withColumn("headers",

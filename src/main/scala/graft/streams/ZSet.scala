@@ -143,10 +143,10 @@ object ZSet {
   /** Incremental join delta — the bilinear rule at the heart of the
     * reference's circuit (topologynode.py:375-383):
     *
-    *   Δ(A ⋈ B) = ΔA ⋈ B  +  A ⋈ ΔB  +  ΔA ⋈ ΔB
+    *   Δ(A ⋈ B) = ΔA ⋈ B  +  A ⋈ ΔB  +  ΔA ⋈ ΔB  =  ΔA ⋈ (B + ΔB)  +  A ⋈ ΔB
     *
     * Given integrated states a/b and this step's deltas da/db, returns the
-    * join's delta WITHOUT recomputing a ⋈ b. This is what makes view
+    * join's delta WITHOUT recomputing a ⋈ b, in two joins. This is what makes view
     * maintenance O(|Δ|·|matched|) instead of O(|A|·|B|) per step — on a
     * 100 TB accumulated state with MB-scale deltas, the two Δ-sided joins
     * broadcast their delta side. Verified against full recomputation in
@@ -154,10 +154,7 @@ object ZSet {
     */
   def joinDelta(a: DataFrame, da: DataFrame, b: DataFrame, db: DataFrame,
       cond: Column): DataFrame =
-    consolidate(
-      join(da, b, cond)
-        .unionByName(join(a, db, cond))
-        .unionByName(join(da, db, cond)))
+    consolidate(join(da, b.unionByName(db), cond).unionByName(join(a, db, cond)))
 
   /** to_records — positive-weight records replicated weight times
     * (topologynode.py:1138-1146); negative weights drop. The multiset →

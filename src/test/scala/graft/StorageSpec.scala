@@ -281,5 +281,94 @@ class StorageSpec extends SparkSpec {
       "foreign lock content must be untouched")
   }
 
+  // ---- the offset index (index.json) ----
+
+  private def dataFiles(fs: FileStorage, t: String): Set[String] = {
+    val s = Files.list(java.nio.file.Paths.get(s"${fs.root}/topics/$t/data"))
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+    finally s.close()
+  }
+
+  private def wm(df: org.apache.spark.sql.DataFrame): Seq[(Int, Long, Long)] =
+    df.as[(Int, Long, Long)].collect().toSeq.sortBy(_._1)
+
+  /** Watermarks equal the full-log aggregate, and a further produce
+    * continues every partition's offsets densely, with no duplicate. */
+  private def assertConsistent(fs: FileStorage, t: String): Unit = {
+    assert(wm(fs.watermarks(t)) == wm(AddOns.watermarks(fs.read(t)).select("partition", "low", "high")))
+    val before = fs.read(t).count()
+    fs.produce(t, sampleBatch(30))
+    val log = fs.read(t)
+    assert(log.count() == before + 30)
+    assert(log.select("partition", "offset").distinct().count() == before + 30,
+      "duplicate (partition, offset) coordinates")
+    assert(wm(fs.watermarks(t)) == wm(AddOns.watermarks(log).select("partition", "low", "high")))
+  }
+
+  test("an empty produce appends no file and leaves the watermarks unchanged") {
+    val fs = freshStorage()
+    fs.createTopic("t", 3)
+    fs.produce("t", sampleBatch(20))
+    val files = dataFiles(fs, "t")
+    val marks = wm(fs.watermarks("t"))
+    fs.produce("t", sampleBatch(20).limit(0))
+    fs.produce("t", spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      sampleBatch(1).schema))
+    assert(dataFiles(fs, "t") == files)
+    assert(wm(fs.watermarks("t")) == marks)
+    assert(!Files.exists(java.nio.file.Paths.get(s"${fs.root}/topics/t/.staging")))
+    // an empty produce on a fresh topic leaves it empty
+    fs.createTopic("e", 2)
+    fs.produce("e", sampleBatch(5).limit(0))
+    assert(dataFiles(fs, "e").isEmpty && fs.watermarks("e").isEmpty)
+  }
+
+  test("index recovery: deleted index, unlisted files and missing listed files") {
+    val fs = freshStorage()
+    fs.createTopic("t", 3)
+    fs.produce("t", sampleBatch(20))
+    val index = java.nio.file.Paths.get(s"${fs.root}/topics/t/index.json")
+    // a crash between a produce's move into data/ and its index commit:
+    // the second produce's files are on disk but not in the index
+    val committed = Files.readString(index)
+    fs.produce("t", sampleBatch(25))
+    Files.writeString(index, committed)
+    assertConsistent(fs, "t")
+    assert(fs.readRange("t", 0, 100).count() == 75)
+    // a topic written before the index existed
+    Files.delete(index)
+    assertConsistent(fs, "t")
+    // an index that lists a file no longer on disk is rebuilt from the data
+    Files.writeString(index, Files.readString(index).replace("\n]}",
+      ",\n  {\"file\": \"part-gone.parquet\", \"ranges\": {\"0\": [0, 999]}}\n]}"))
+    assertConsistent(fs, "t")
+    assert(!Files.readString(index).contains("part-gone"))
+  }
+
+  test("deleteRecords drops the index; produce continues the offsets") {
+    val fs = freshStorage()
+    fs.createTopic("t", 2)
+    fs.produce("t", sampleBatch(20))
+    fs.produce("t", sampleBatch(20))
+    fs.deleteRecords("t", 6L)
+    assert(fs.read("t").agg(min("offset")).head().getLong(0) == 6L)
+    assertConsistent(fs, "t")
+    assert(wm(fs.watermarks("t")).forall(_._2 == 6L))
+  }
+
+  test("readRange equals the offset filter over the full log and opens only overlapping files") {
+    val fs = freshStorage()
+    fs.createTopic("t", 3)
+    (0 until 5).foreach(_ => fs.produce("t", sampleBatch(30)))
+    val log = fs.read("t")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("partition", "offset", "key", "value").as[(Int, Long, String, String)].collect().sorted.toSeq
+    for ((from, until) <- Seq((0L, 1L), (0L, 10L), (7L, 23L), (20L, 21L), (49L, 60L), (60L, 99L), (5L, 5L)))
+      assert(rows(fs.readRange("t", from, until)) ==
+        rows(log.filter(col("offset") >= from && col("offset") < until)), s"[$from, $until)")
+    assert(fs.readRange("t", 0, 1).inputFiles.length < log.inputFiles.length)
+  }
+
   private def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
 }

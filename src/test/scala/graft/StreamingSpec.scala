@@ -164,26 +164,124 @@ class StreamingSpec extends SparkSpec {
     assert(integrated == Set(("a", "b", 1L), ("a", "c", 2L)))
   }
 
-  test("incremental join GC sweeps every stale version, not just the previous one") {
-    import graft.streams.ZSet
-    val stateDir = Files.createTempDirectory("graft_ij_gc").toString
-    val schemaA = Seq(("x", 1L)).toDF("ka", ZSet.W).schema
-    val schemaB = Seq(("x", 1L)).toDF("kb", ZSet.W).schema
-    val ij = new graft.streaming.IncrementalJoin(spark, stateDir, schemaA, schemaB,
-      col("ka") <= col("kb"))
-    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaA)
-    val emptyB = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaB)
-    ij.step(Seq(("a", 1L)).toDF("ka", ZSet.W), Seq(("b", 1L)).toDF("kb", ZSet.W)) // -> v1
-    ij.step(empty, emptyB)                                                        // -> v2
-    // simulate a crash-orphaned version older than v-1 (a fixed v-1 delete
-    // would never revisit it)
-    Files.createDirectories(java.nio.file.Paths.get(s"$stateDir/v0"))
-    ij.step(empty, emptyB)                                                        // -> v3, GC < 2
-    val left = Files.list(java.nio.file.Paths.get(stateDir)).iterator()
-    val names = scala.jdk.CollectionConverters.IteratorHasAsScala(left).asScala
+  private def stateNames(stateDir: String): Set[String] = {
+    val s = Files.list(java.nio.file.Paths.get(stateDir))
+    try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
       .map(_.getFileName.toString).toSet
-    assert(!names.contains("v0") && !names.contains("v1"), s"stale versions left: $names")
-    assert(names.contains("v2") && names.contains("v3"))
+    finally s.close()
+  }
+
+  /** A theta join over (ka, id) ⋈ (kb) with ka <= kb, and seeded deltas:
+    * inserts over a small key domain plus retractions of live rows. */
+  private class JoinFixture(seed: Int) {
+    import graft.streams.ZSet
+    val stateDir = Files.createTempDirectory("graft_ij").toString
+    private val schemaA = Seq(("x", 1L, 1L)).toDF("ka", "id", ZSet.W).schema
+    private val schemaB = Seq(("x", 1L)).toDF("kb", ZSet.W).schema
+    def open() = new graft.streaming.IncrementalJoin(spark, stateDir, schemaA, schemaB,
+      col("ka") <= col("kb"))
+    val ij = open()
+    private val rnd = new scala.util.Random(seed)
+    private var nextId = 0L
+    private val liveA = scala.collection.mutable.ArrayBuffer[(String, Long)]()
+    private val liveB = scala.collection.mutable.ArrayBuffer[String]()
+    val a = scala.collection.mutable.Map[(String, Long), Long]().withDefaultValue(0L)
+    val b = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    val out = scala.collection.mutable.Map[(String, Long, String), Long]().withDefaultValue(0L)
+
+    def deltas(): (Seq[(String, Long, Long)], Seq[(String, Long)]) = {
+      val da = (0 until 3).map { _ => nextId += 1; (s"k${rnd.nextInt(6)}", nextId, 1L) } ++
+        (if (liveA.nonEmpty && rnd.nextDouble() < 0.6)
+          Seq(liveA.remove(rnd.nextInt(liveA.size))).map { case (k, id) => (k, id, -1L) } else Nil)
+      liveA ++= da.filter(_._3 > 0).map(r => (r._1, r._2))
+      val db = Seq((s"k${rnd.nextInt(6)}", 1L + rnd.nextInt(2))) ++
+        (if (liveB.nonEmpty && rnd.nextDouble() < 0.4) Seq((liveB.remove(0), -1L)) else Nil)
+      liveB ++= db.filter(_._2 > 0).map(_._1)
+      (da, db)
+    }
+
+    /** One step through the join; returns its output delta's rows. */
+    def step(da: Seq[(String, Long, Long)], db: Seq[(String, Long)],
+        join: graft.streaming.IncrementalJoin = ij): Map[(String, Long, String), Long] =
+      join.step(da.toDF("ka", "id", ZSet.W), db.toDF("kb", ZSet.W))
+        .as[(String, Long, String, Long)].collect().map { case (ka, id, kb, w) => (ka, id, kb) -> w }.toMap
+
+    /** Add a step's deltas and output to the integrated state. */
+    def integrate(da: Seq[(String, Long, Long)], db: Seq[(String, Long)],
+        o: Map[(String, Long, String), Long]): Unit = {
+      da.foreach { case (k, id, w) => a((k, id)) += w }
+      db.foreach { case (k, w) => b(k) += w }
+      o.foreach { case (k, w) => out(k) += w }
+    }
+
+    /** The integrated output against A ⋈ B recomputed from the deltas. */
+    def assertRecomputed(): Unit = {
+      val full = (for (((ka, id), wa) <- a.toSeq; (kb, wb) <- b.toSeq if wa != 0 && wb != 0 && ka <= kb)
+        yield (ka, id, kb) -> wa * wb).toMap
+      assert(out.filter(_._2 != 0).toMap == full)
+    }
+
+    /** Tier of every segment in the state directory. */
+    def tiers: Set[Int] = stateNames(stateDir).collect { case s"$_-$_-$t" if t.forall(_.isDigit) => t.toInt }
+  }
+
+  test("incremental join: 40 steps with retractions across two merge tiers equal a full recompute") {
+    val f = new JoinFixture(seed = 11)
+    for (i <- 1 to 40) {
+      val (da, db) = f.deltas()
+      f.integrate(da, db, f.step(da, db))
+      if (i % 10 == 0) f.assertRecomputed()
+    }
+    assert(f.tiers.max >= 2, s"expected a tier-2 segment: ${stateNames(f.stateDir)}")
+    // a join reopened on the same directory continues from the committed state
+    val (da, db) = f.deltas()
+    f.integrate(da, db, f.step(da, db, f.open()))
+    f.assertRecomputed()
+  }
+
+  test("incremental join: a crash before the pointer swap replays to the same output") {
+    val f = new JoinFixture(seed = 5)
+    for (_ <- 1 to 4) { val (da, db) = f.deltas(); f.integrate(da, db, f.step(da, db)) }
+    // step 5 merges four tier-0 segments; then simulate a crash before its
+    // pointer swap: CURRENT back on 4, with step 5's segments, manifest and a
+    // torn extra segment left behind as residue
+    val (da, db) = f.deltas()
+    val first = f.step(da, db)
+    val pointer = java.nio.file.Paths.get(s"${f.stateDir}/CURRENT")
+    assert(Files.readString(pointer).trim == "5" && f.tiers.contains(1))
+    Files.writeString(pointer, "4")
+    val torn = java.nio.file.Paths.get(s"${f.stateDir}/b-5-2")
+    Files.createDirectories(torn)
+    Files.writeString(torn.resolve("part-0.parquet"), "torn")
+    val replayed = f.step(da, db, f.open())
+    assert(replayed == first && replayed.nonEmpty)
+    assert(Files.readString(pointer).trim == "5" && !Files.exists(torn))
+    f.integrate(da, db, replayed)
+    for (_ <- 1 to 3) { val (da, db) = f.deltas(); f.integrate(da, db, f.step(da, db)) }
+    f.assertRecomputed()
+  }
+
+  test("incremental join GC sweeps every orphaned segment and manifest") {
+    val f = new JoinFixture(seed = 3)
+    for (_ <- 1 to 3) { val (da, db) = f.deltas(); f.integrate(da, db, f.step(da, db)) }
+    // orphans a fixed previous-version delete would never revisit: segments
+    // and a manifest of versions no current or previous manifest lists
+    val orphans = Seq("a-0-0", "b-1-3", "manifest-0")
+    orphans.foreach { n =>
+      val p = java.nio.file.Paths.get(s"${f.stateDir}/$n")
+      if (n.startsWith("manifest")) Files.writeString(p, "a-0-0")
+      else { Files.createDirectories(p); Files.writeString(p.resolve("part-0.parquet"), "x") }
+    }
+    val (da, db) = f.deltas()
+    f.integrate(da, db, f.step(da, db))
+    val names = stateNames(f.stateDir)
+    assert(orphans.forall(n => !names.contains(n)), s"orphans left: $names")
+    def listed(v: Int) = Files.readAllLines(java.nio.file.Paths.get(s"${f.stateDir}/manifest-$v"))
+      .toArray.map(_.toString).toSet
+    // exactly the segments of the current and previous manifests remain
+    assert(names.filter(_.matches("[ab]-\\d+-\\d+")) == listed(4) ++ listed(3))
+    assert(names.filter(_.startsWith("manifest-")) == Set("manifest-3", "manifest-4"))
+    f.assertRecomputed()
   }
 
   test("streaming first-seen dedup: drops in-horizon re-arrivals, re-emits after eviction") {
