@@ -375,25 +375,18 @@ class FileStorage(spark: SparkSession, val root: String,
   /** Per-partition start offsets — the consumer `offsets={p: o}` seek
     * (storage_consumer.py:83-117; exercised by
     * test_single_storage_base.py:750-792): a NEGATIVE o resolves against
-    * the partition's high watermark (o = −2 ⇒ the last 2 messages, clamped
-    * at the log start); partitions absent from the map read from the
-    * beginning. The start table is |partitions| rows, broadcast onto the
-    * scan — the positive-offset comparison still prunes row groups. */
+    * the partition's high watermark from the index (o = −2 ⇒ the last 2
+    * messages, clamped at the log start); partitions absent from the map
+    * read from the beginning. The resolved starts are a map literal, as in
+    * [[LogProduce.assign]]: no join and no scan to find the watermarks. */
   def readFrom(topic: String, offsets: Map[Int, Long]): DataFrame = {
     val env = read(topic)
-    val starts = offsets.toSeq.map { case (p, o) => Row(p, o) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("partition", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("__req", org.apache.spark.sql.types.LongType)))
-    val reqDf = spark.createDataFrame(java.util.Arrays.asList(starts: _*), schema)
-    val hw = env.groupBy("partition").agg((max("offset") + 1).as("__hw"))
-    env
-      .join(broadcast(reqDf), Seq("partition"), "left")
-      .join(broadcast(hw), Seq("partition"), "left")
-      .filter(col("__req").isNull ||
-        col("offset") >= when(col("__req") < 0,
-          greatest(col("__hw") + col("__req"), lit(0L))).otherwise(col("__req")))
-      .drop("__req", "__hw")
+    val b = bounds(index(topic)._1)
+    val starts = offsets.flatMap { case (p, o) =>
+      if (o >= 0) Some(p -> o) else b.get(p).map { case (lo, hi) => p -> math.max(hi + o, lo) }
+    }
+    val start = typedLit(starts).getItem(col("partition"))
+    env.filter(start.isNull || col("offset") >= start)
   }
 
   // ---- groups (fs_admin.py:371-415) ----

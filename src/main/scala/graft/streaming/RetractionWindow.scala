@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -58,68 +58,88 @@ object RetractionWindow {
   case class WinDeltaTs(key: String, tsMs: Long, value: Long,
       weight: Long, wmTs: java.sql.Timestamp)
 
-  /** [[WinDeltaTs]] plus the exploded hopping window end. */
+  /** [[WinDeltaTs]] plus the assigned grid window end. */
   case class WinDeltaW(key: String, tsMs: Long, value: Long,
       weight: Long, wmTs: java.sql.Timestamp, wend: Long)
 
+  /** The deltas with the event-time column `wmTs` under a `delayMs`
+    * watermark. The watermark column must RIDE IN THE VALUES of every
+    * stateful form below — projecting it away (e.g. via mapValues) makes
+    * the event-time timeout unresolvable. */
+  private def watermarked(deltas: Dataset[WinDelta], delayMs: Long): DataFrame =
+    deltas.toDF()
+      .withColumn("wmTs", timestamp_millis(col("tsMs")))
+      .withWatermark("wmTs", s"$delayMs milliseconds")
+
+  /** The one pipeline of the grid-aligned forms (tumbling, hopping,
+    * cumulative): assign each delta its window end(s) with `windowEnd`,
+    * group by (key, window end) and run [[sumHandler]]. */
+  private def gridSum(deltas: Dataset[WinDelta], delayMs: Long,
+      windowEnd: Column): Dataset[WinSum] = {
+    val spark = deltas.sparkSession
+    import spark.implicits._
+    watermarked(deltas, delayMs)
+      .withColumn("wend", windowEnd)
+      .as[WinDeltaW]
+      .groupByKey(d => (d.key, d.wend))
+      .flatMapGroupsWithState[(Long, Long), WinSum](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(sumHandler)
+  }
+
   /** The shared (key, window) state machine: integrate (Σ w·v, Σ w),
-    * re-emit on change, drop state on zero-cancel, event-time timeout at
-    * window_end + delay. Generic over the grouped value type because the
-    * watermark column must RIDE IN THE VALUES — projecting it away (e.g.
-    * via mapValues) makes the event-time timeout unresolvable. */
-  private def sumHandler[T](delayMs: Long, vw: T => (Long, Long)):
-      ((String, Long), Iterator[T], GroupState[(Long, Long)]) => Iterator[WinSum] = {
-    (kw, rows, state) =>
-      val (key, winEnd) = kw
-      if (state.hasTimedOut) {
-        // horizon passed: the window can no longer change — drop state.
-        // Corrections were emitted eagerly, so nothing re-emits here.
-        state.remove()
-        Iterator.empty
-      } else {
-        val (prevSum, prevN) = state.getOption.getOrElse((0L, 0L))
-        var dSum = 0L
-        var dN = 0L
-        rows.foreach { d =>
-          val (v, w) = vw(d)
-          dSum += w * v
-          dN += w
-        }
-        val (sum, n) = (prevSum + dSum, prevN + dN)
-        if (sum == 0L && n == 0L) state.remove()
-        else {
-          state.update((sum, n))
-          // drop state once the watermark passes winEnd: every delta for
-          // this window has tsMs < winEnd, so once watermark ≥ winEnd any
-          // further delta is watermark-dropped before reaching us — the
-          // delay is already inside the watermark, adding it again here
-          // would double the retention (state alive until winEnd + 2·delay).
-          // Spark requires the timeout strictly past the current watermark;
-          // a window already at the horizon edge still gets one tick.
-          state.setTimeoutTimestamp(
-            math.max(winEnd, state.getCurrentWatermarkMs() + 1))
-        }
-        if (dSum == 0L && dN == 0L) Iterator.empty
-        else Iterator(WinSum(key, winEnd, sum, n))
+    * re-emit on change, drop state on zero-cancel, event-time timeout once
+    * the watermark passes window_end. */
+  private def sumHandler(kw: (String, Long), rows: Iterator[WinDeltaW],
+      state: GroupState[(Long, Long)]): Iterator[WinSum] = {
+    val (key, winEnd) = kw
+    if (state.hasTimedOut) {
+      // horizon passed: the window can no longer change — drop state.
+      // Corrections were emitted eagerly, so nothing re-emits here.
+      state.remove()
+      Iterator.empty
+    } else {
+      val (prevSum, prevN) = state.getOption.getOrElse((0L, 0L))
+      var dSum = 0L
+      var dN = 0L
+      rows.foreach { d =>
+        dSum += d.weight * d.value
+        dN += d.weight
       }
+      val (sum, n) = (prevSum + dSum, prevN + dN)
+      if (sum == 0L && n == 0L) state.remove()
+      else {
+        state.update((sum, n))
+        // drop state once the watermark passes winEnd: every delta for
+        // this window has tsMs < winEnd, so once watermark ≥ winEnd any
+        // further delta is watermark-dropped before reaching us — the
+        // delay is already inside the watermark, adding it again here
+        // would double the retention (state alive until winEnd + 2·delay).
+        // Spark requires the timeout strictly past the current watermark;
+        // a window already at the horizon edge still gets one tick.
+        state.setTimeoutTimestamp(
+          math.max(winEnd, state.getCurrentWatermarkMs() + 1))
+      }
+      if (dSum == 0L && dN == 0L) Iterator.empty
+      else Iterator(WinSum(key, winEnd, sum, n))
+    }
+  }
+
+  /** Merge one delta into a per-key event multiset {ts → (Σ w·v, Σ w)}
+    * (the sliding and session forms' state); an entry whose weights cancel
+    * to zero leaves it. Returns whether an entry left. */
+  private def mergeDelta(st: collection.mutable.Map[Long, (Long, Long)], d: WinDeltaTs): Boolean = {
+    val (s0, n0) = st.getOrElse(d.tsMs, (0L, 0L))
+    val (s1, n1) = (s0 + d.weight * d.value, n0 + d.weight)
+    if (s1 == 0L && n1 == 0L) st.remove(d.tsMs).isDefined
+    else { st.update(d.tsMs, (s1, n1)); false }
   }
 
   /** Tumbling windowed sum+count over a ±weighted delta stream.
     * `delayMs` is the lateness horizon: deltas (inserts OR retractions)
     * older than watermark − delay are dropped by the watermark, everything
     * inside corrects its window. */
-  def tumblingSum(deltas: Dataset[WinDelta], sizeMs: Long, delayMs: Long): Dataset[WinSum] = {
-    val spark = deltas.sparkSession
-    import spark.implicits._
-    deltas.toDF()
-      .withColumn("wmTs", timestamp_millis(col("tsMs")))
-      .withWatermark("wmTs", s"$delayMs milliseconds")
-      .as[WinDeltaTs]
-      .groupByKey(d => (d.key, (d.tsMs / sizeMs) * sizeMs + sizeMs))
-      .flatMapGroupsWithState[(Long, Long), WinSum](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        sumHandler[WinDeltaTs](delayMs, d => (d.value, d.weight)))
-  }
+  def tumblingSum(deltas: Dataset[WinDelta], sizeMs: Long, delayMs: Long): Dataset[WinSum] =
+    gridSum(deltas, delayMs, expr(s"(tsMs div $sizeMs) * $sizeMs + $sizeMs"))
 
   /** Hopping form: a delta at t falls in size/hop overlapping windows, so
     * a retraction must correct ALL of them. The window-end assignment is
@@ -138,18 +158,8 @@ object RetractionWindow {
   def hoppingSum(deltas: Dataset[WinDelta], sizeMs: Long, hopMs: Long,
       delayMs: Long): Dataset[WinSum] = {
     require(sizeMs % hopMs == 0, s"sizeMs ($sizeMs) must be a multiple of hopMs ($hopMs)")
-    val spark = deltas.sparkSession
-    import spark.implicits._
-    deltas.toDF()
-      .withColumn("wmTs", timestamp_millis(col("tsMs")))
-      .withWatermark("wmTs", s"$delayMs milliseconds")
-      .withColumn("wend", explode(expr(
-        s"sequence((tsMs div $hopMs + 1) * $hopMs, (tsMs div $hopMs) * $hopMs + $sizeMs, $hopMs)")))
-      .as[WinDeltaW]
-      .groupByKey(d => (d.key, d.wend))
-      .flatMapGroupsWithState[(Long, Long), WinSum](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        sumHandler[WinDeltaW](delayMs, d => (d.value, d.weight)))
+    gridSum(deltas, delayMs, explode(expr(
+      s"sequence((tsMs div $hopMs + 1) * $hopMs, (tsMs div $hopMs) * $hopMs + $sizeMs, $hopMs)")))
   }
 
   /** Cumulative (CUMULATE) form: a delta at t is assigned every window end
@@ -164,21 +174,11 @@ object RetractionWindow {
       delayMs: Long): Dataset[WinSum] = {
     require(periodMs % advanceMs == 0,
       s"periodMs ($periodMs) must be a multiple of advanceMs ($advanceMs)")
-    val spark = deltas.sparkSession
-    import spark.implicits._
-    deltas.toDF()
-      .withColumn("wmTs", timestamp_millis(col("tsMs")))
-      .withWatermark("wmTs", s"$delayMs milliseconds")
-      .withColumn("wend", explode(expr(
-        s"""sequence(
-           |  tsMs - pmod(tsMs, $advanceMs) + $advanceMs,
-           |  tsMs - pmod(tsMs, $periodMs) + $periodMs,
-           |  $advanceMs)""".stripMargin)))
-      .as[WinDeltaW]
-      .groupByKey(d => (d.key, d.wend))
-      .flatMapGroupsWithState[(Long, Long), WinSum](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        sumHandler[WinDeltaW](delayMs, d => (d.value, d.weight)))
+    gridSum(deltas, delayMs, explode(expr(
+      s"""sequence(
+         |  tsMs - pmod(tsMs, $advanceMs) + $advanceMs,
+         |  tsMs - pmod(tsMs, $periodMs) + $periodMs,
+         |  $advanceMs)""".stripMargin)))
   }
 
   /** Sliding form — the reference's per-RECORD windows
@@ -213,9 +213,7 @@ object RetractionWindow {
   def slidingSum(deltas: Dataset[WinDelta], sizeMs: Long, delayMs: Long): Dataset[WinSlide] = {
     val spark = deltas.sparkSession
     import spark.implicits._
-    deltas.toDF()
-      .withColumn("wmTs", timestamp_millis(col("tsMs")))
-      .withWatermark("wmTs", s"$delayMs milliseconds")
+    watermarked(deltas, delayMs)
       .as[WinDeltaTs]
       .groupByKey(_.key)
       .flatMapGroupsWithState[Map[Long, (Long, Long)], WinSlide](
@@ -239,12 +237,8 @@ object RetractionWindow {
             val changed = collection.mutable.Set.empty[Long]
             val gone = collection.mutable.Set.empty[Long]
             rows.foreach { d =>
-              val (s0, n0) = st.getOrElse(d.tsMs, (0L, 0L))
-              val (s1, n1) = (s0 + d.weight * d.value, n0 + d.weight)
               changed += d.tsMs
-              if (s1 == 0L && n1 == 0L) {
-                if (st.remove(d.tsMs).isDefined) gone += d.tsMs
-              } else st.update(d.tsMs, (s1, n1))
+              if (mergeDelta(st, d)) gone += d.tsMs
             }
             if (st.isEmpty) state.remove()
             else {
@@ -396,9 +390,7 @@ object RetractionWindow {
       buf.toMap
     }
 
-    deltas.toDF()
-      .withColumn("wmTs", timestamp_millis(col("tsMs")))
-      .withWatermark("wmTs", s"$delayMs milliseconds")
+    watermarked(deltas, delayMs)
       .as[WinDeltaTs]
       .groupByKey(_.key)
       .flatMapGroupsWithState[Map[Long, (Long, Long)], WinSession](
@@ -427,12 +419,7 @@ object RetractionWindow {
             val prev = state.getOption.getOrElse(Map.empty[Long, (Long, Long)])
             val prevSess = sessionsOf(prev).map(s => s._1 -> s).toMap
             val st = collection.mutable.Map.empty[Long, (Long, Long)] ++ prev
-            rows.foreach { d =>
-              val (s0, n0) = st.getOrElse(d.tsMs, (0L, 0L))
-              val (s1, n1) = (s0 + d.weight * d.value, n0 + d.weight)
-              if (s1 == 0L && n1 == 0L) st.remove(d.tsMs)
-              else st.update(d.tsMs, (s1, n1))
-            }
+            rows.foreach(mergeDelta(st, _))
             val now = compact(st.toMap)
             if (now.isEmpty) state.remove()
             else { state.update(now); arm(now) }

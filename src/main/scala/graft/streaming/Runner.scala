@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import graft.streams.Windows
 
 /** Streaming runtime — the analogue of the reference's asyncio runner
   * (kafi/streams/streams.py:57-271), which Structured Streaming replaces
@@ -33,15 +34,12 @@ object Runner {
 
   /** Watermarked tumbling-window aggregation in append mode: windows emit
     * exactly once, when the watermark passes window end — the streaming
-    * form of Linear.trigger (topologynode.py:654-666). */
+    * form of Linear.trigger (topologynode.py:654-666): the batch
+    * [[graft.streams.Windows.tumbling]] over the watermarked stream. */
   def windowedAgg(stream: DataFrame, tsCol: String, sizeMs: Long, delayMs: Long,
       keys: Seq[Column])(aggs: Column*): DataFrame =
-    stream
-      .withWatermark(tsCol, s"$delayMs milliseconds")
-      .groupBy(window(col(tsCol), s"$sizeMs milliseconds") +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("window_end_ms", unix_millis(col("window.end").cast("timestamp")))
-      .drop("window")
+    Windows.tumbling(stream.withWatermark(tsCol, s"$delayMs milliseconds"), col(tsCol),
+      sizeMs, keys)(aggs: _*)
 
   /** Update-mode running aggregation — the streaming form of the Z-set
     * group_by_* family: each micro-batch emits only changed groups

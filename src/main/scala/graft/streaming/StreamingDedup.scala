@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Streaming exact dedup for corpus ingestion: emit the FIRST occurrence of
   * each content hash, drop re-arrivals. The batch `Dedup.exact` resolves a
@@ -40,7 +40,7 @@ object StreamingDedup {
     * bucket identically.
     *
     * Shape: each doc fans out to `bands` slim band-key rows;
-    * `dropDuplicatesWithinWatermark(band, bh)` keeps only FIRST-claimed
+    * `dropDuplicatesWithinWatermark(__band, __bh)` keeps only FIRST-claimed
     * buckets (state keyed by band key, evicted at the horizon — bounded by
     * arrival rate × horizon, never corpus size); a windowed per-doc count
     * then re-admits exactly the docs that kept ALL their bands. Two
@@ -57,26 +57,17 @@ object StreamingDedup {
     * arbitrated deterministically ([[batchLocalFirstClaim]]): the minimum
     * event-time doc wins every bucket it is first to and is emitted —
     * without the arbitration step the per-bucket winner is arbitrary and
-    * two same-batch near-dups could split claims and BOTH vanish. */
+    * two same-batch near-dups could split claims and BOTH vanish. Null
+    * text passes through unsuppressed, as in [[fuzzyFirstSeen]]: its
+    * all-`Long.MaxValue` signature would be one shared bucket that
+    * suppresses every later null document in the horizon. */
   def nearDupFirstSeen(df: DataFrame, textCol: String, tsCol: String, delay: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16): DataFrame = {
     val rowsPerBand = numHashes / bands
-    val tIdx = df.schema.fieldIndex(textCol)
-    val sigSchema = df.schema.add("__sig", ArrayType(LongType), nullable = false)
-    val withSig = df.mapPartitions { rows =>
-      rows.map { row =>
-        val (_, sig) = graft.llm.Dedup.shinglesAndSignature(
-          row.getString(tIdx), k, numHashes)
-        Row.fromSeq(row.toSeq :+ sig.toSeq)
-      }
-    }(Encoders.row(sigSchema))
-    val banded = withSig
-      .select(col("*"), explode(expr(
-        s"""transform(sequence(0, ${bands - 1}),
-           |  b -> struct(b AS band, xxhash64(slice(__sig, b * $rowsPerBand + 1, $rowsPerBand)) AS bh))""".stripMargin))
-        .as("__bk"))
-      .select(df.columns.map(col) :+ col("__bk.band").as("band") :+ col("__bk.bh").as("bh"): _*)
-    claimAllBands(banded, df.columns, tsCol, delay, bands)
+    claimFirstSeen(df, textCol, tsCol, delay, ArrayType(LongType), undecodable = false,
+        minhashBands(bands, rowsPerBand)) { text =>
+      graft.llm.Dedup.shinglesAndSignature(text.asInstanceOf[String], k, numHashes)._2.toSeq
+    }
   }
 
   /** SimHash variant of [[nearDupFirstSeen]]: band keys are the four
@@ -87,21 +78,12 @@ object StreamingDedup {
     * predecessor shares at least one band and is suppressed. 65k bucket
     * values per band — a real key space, unlike the 16-bit hyperplane
     * embedding signature, which is why THIS is the second streaming
-    * variant. */
+    * variant. Null text passes through unsuppressed. */
   def nearDupFirstSeenSimhash(df: DataFrame, textCol: String, tsCol: String,
-      delay: String): DataFrame = {
-    val tIdx = df.schema.fieldIndex(textCol)
-    val shSchema = df.schema.add("__simhash", LongType, nullable = false)
-    val withSh = df.mapPartitions { rows =>
-      rows.map(row => Row.fromSeq(row.toSeq :+ graft.llm.Dedup.simhashOf(row.getString(tIdx))))
-    }(Encoders.row(shSchema))
-    val banded = withSh
-      .select(col("*"), explode(expr(
-        "transform(sequence(0, 3), b -> struct(b AS band, (shiftright(__simhash, b * 16) & 65535) AS bh))"))
-        .as("__bk"))
-      .select(df.columns.map(col) :+ col("__bk.band").as("band") :+ col("__bk.bh").as("bh"): _*)
-    claimAllBands(banded, df.columns, tsCol, delay, bands = 4)
-  }
+      delay: String): DataFrame =
+    claimFirstSeen(df, textCol, tsCol, delay, LongType, undecodable = false, hashBands16) {
+      text => graft.llm.Dedup.simhashOf(text.asInstanceOf[String])
+    }
 
   /** Streaming IMAGE near-dup first-seen — the ingestion-time twin of the
     * batch [[graft.llm.Multimodal.imageNearDupPairs]]: each record's
@@ -159,24 +141,13 @@ object StreamingDedup {
   def videoNearDupFirstSeen(df: DataFrame, mediaCol: String, tsCol: String,
       delay: String, sampleFrames: Int = 16, minShared: Int = 8): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
-    val mIdx = df.schema.fieldIndex(mediaCol)
-    val vSchema = df.schema.add("__vh", ArrayType(LongType), nullable = false)
-    val withV = df.mapPartitions { rows =>
-      rows.map { row =>
-        val m = row.get(mIdx) match {
-          case b: Array[Byte] => b
-          case _ => null
-        }
-        Row.fromSeq(row.toSeq :+ graft.llm.Multimodal.videoHashesOf(m, sampleFrames))
-      }
-    }(Encoders.row(vSchema))
-    val undecodable = withV.filter(size(col("__vh")) === 0).select(df.columns.map(col): _*)
-    val claimed = withV.filter(size(col("__vh")) > 0)
-      .select(col("*"), size(col("__vh")).as("__nv"))
-      .select(df.columns.map(col) :+ col("__nv") :+ explode(col("__vh")).as("__v"): _*)
-    claimAll(claimed, df.columns, tsCol, delay, col("__nv"),
-        minKept = greatest(col("__nv") - (minShared - 1), lit(1)))
-      .unionByName(undecodable)
+    claimFirstSeen(df, mediaCol, tsCol, delay, ArrayType(LongType), undecodable = true,
+        hashList, tolerance = minShared - 1) {
+      case m: Array[Byte] =>
+        val hs = graft.llm.Multimodal.videoHashesOf(m, sampleFrames)
+        if (hs.isEmpty) null else hs
+      case _ => null
+    }
   }
 
   /** Shared single-64-bit-fingerprint streaming twin: hash the binary
@@ -186,27 +157,11 @@ object StreamingDedup {
     * unsuppressed (a shared "undecodable" bucket would suppress every
     * corrupt scrape after the first). */
   private def bandedMediaFirstSeen(df: DataFrame, mediaCol: String, tsCol: String,
-      delay: String)(hashOf: Array[Byte] => Option[Long]): DataFrame = {
-    val mIdx = df.schema.fieldIndex(mediaCol)
-    val hSchema = df.schema.add("__ih", LongType, nullable = true)
-    val withH = df.mapPartitions { rows =>
-      rows.map { row =>
-        val m = row.get(mIdx) match {
-          case b: Array[Byte] => b
-          case _ => null
-        }
-        Row.fromSeq(row.toSeq :+ hashOf(m).map(Long.box).orNull)
-      }
-    }(Encoders.row(hSchema))
-    val undecodable = withH.filter(col("__ih").isNull).select(df.columns.map(col): _*)
-    val banded = withH.filter(col("__ih").isNotNull)
-      .select(col("*"), explode(expr(
-        "transform(sequence(0, 3), b -> struct(b AS band, (shiftright(__ih, b * 16) & 65535) AS bh))"))
-        .as("__bk"))
-      .select(df.columns.map(col) :+ col("__bk.band").as("band") :+ col("__bk.bh").as("bh"): _*)
-    claimAllBands(banded, df.columns, tsCol, delay, bands = 4)
-      .unionByName(undecodable)
-  }
+      delay: String)(hashOf: Array[Byte] => Option[Long]): DataFrame =
+    claimFirstSeen(df, mediaCol, tsCol, delay, LongType, undecodable = true, hashBands16) {
+      case m: Array[Byte] => hashOf(m).map(Long.box).orNull
+      case _ => null
+    }
 
   /** Streaming fuzzy (edit-distance) first-seen dedup — the ingestion-time
     * twin of the batch [[graft.llm.Fuzzy.editDistanceJoinShort]]: a record
@@ -229,8 +184,8 @@ object StreamingDedup {
     *
     * State: one key per claimed variant hash — ~(len+1) longs per admitted
     * record at d=1 — evicted at the horizon, bounded by arrival rate ×
-    * horizon, never corpus size. Null strings generate no variants and
-    * pass through unsuppressed (they cannot be near-anything under SQL
+    * horizon, never corpus size. Null strings pass through unsuppressed,
+    * routed before the kernel (they cannot be near-anything under SQL
     * comparison semantics; silently dropping them would turn a schema
     * problem into missing data).
     *
@@ -244,26 +199,11 @@ object StreamingDedup {
     * typo cluster — inherent to first-wins streaming; the exact batch
     * join is the backstop. */
   def fuzzyFirstSeen(df: DataFrame, strCol: String, tsCol: String,
-      delay: String, maxDist: Int = 1): DataFrame = {
-    val sIdx = df.schema.fieldIndex(strCol)
-    val vSchema = df.schema.add("__vh", ArrayType(LongType), nullable = false)
-    val withV = df.mapPartitions { rows =>
-      rows.map { row =>
-        val s = row.getString(sIdx)
-        val vs: Seq[Long] =
-          if (s == null) Seq.empty
-          else scala.collection.immutable.ArraySeq.unsafeWrapArray(
-            graft.llm.Fuzzy.deletionVariants(s, maxDist))
-        Row.fromSeq(row.toSeq :+ vs)
-      }
-    }(Encoders.row(vSchema))
-    val nulls = withV.filter(size(col("__vh")) === 0).select(df.columns.map(col): _*)
-    val claimed = withV.filter(size(col("__vh")) > 0)
-      .select(col("*"), size(col("__vh")).as("__nv"))
-      .select(df.columns.map(col) :+ col("__nv") :+ explode(col("__vh")).as("__v"): _*)
-    claimAll(claimed, df.columns, tsCol, delay, col("__nv"))
-      .unionByName(nulls)
-  }
+      delay: String, maxDist: Int = 1): DataFrame =
+    claimFirstSeen(df, strCol, tsCol, delay, ArrayType(LongType), undecodable = false, hashList) {
+      s => scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        graft.llm.Fuzzy.deletionVariants(s.asInstanceOf[String], maxDist))
+    }
 
   /** Stateless, batch-scoped claim arbitration — the same-batch
     * determinism fix (r9 advice): `dropDuplicatesWithinWatermark` picks an
@@ -313,44 +253,69 @@ object StreamingDedup {
     }(Encoders.row(schema))
   }
 
-  /** Shared tail of the streaming near-dup variants: batch-locally
-    * arbitrate claims ([[batchLocalFirstClaim]]), first-claim the
-    * (band, bh) keys within the watermark horizon, then re-admit the docs
-    * that kept ALL their bands. Grouping is on the window plus every
-    * NON-event-time column: keeping tsCol itself as a key would leave two
-    * event-time attributes downstream, which Spark rejects; all band rows
-    * of a doc share one ts, so min() reconstructs it exactly. */
-  private def claimAllBands(banded: DataFrame, carry: Seq[String], tsCol: String,
-      delay: String, bands: Int): DataFrame = {
-    val keys = carry.filterNot(_ == tsCol)
-    batchLocalFirstClaim(banded, tsCol, Seq("band", "bh"))
-      .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("band", "bh")
-      .groupBy(window(col(tsCol), delay) +: keys.map(col): _*)
-      .agg(count(lit(1)).as("__kept"), min(col(tsCol)).as(tsCol))
-      .filter(col("__kept") === bands)
-      .select(carry.map(col): _*)
-  }
+  /** Claims of the `bands` MinHash bands: xxhash64 over each band's
+    * signature slice, the batch `Dedup.minhashPairs` bucketing. A claim
+    * builder reads the kernel column `__k` and returns the claim keys
+    * (array<struct<__band, __bh>>) and their count where it is fixed. */
+  private def minhashBands(bands: Int, rowsPerBand: Int): (Column, Option[Int]) = (expr(
+    s"""transform(sequence(0, ${bands - 1}),
+       |  b -> struct(b AS __band, xxhash64(slice(__k, b * $rowsPerBand + 1, $rowsPerBand)) AS __bh))""".stripMargin),
+    Some(bands))
 
-  /** [[claimAllBands]] generalized to a per-record expected claim count
-    * (variant sets vary in size with string length, unlike the fixed band
-    * count): `expected` must be constant across a record's exploded rows
-    * and is carried through the grouping as a key. */
-  private def claimAll(exploded: DataFrame, carry: Seq[String], tsCol: String,
-      delay: String, expected: org.apache.spark.sql.Column,
-      minKept: org.apache.spark.sql.Column = null): DataFrame = {
-    val keys = carry.filterNot(_ == tsCol)
-    // default admission = keep ALL claims (first-seen); a caller-supplied
-    // minKept turns it into a threshold test (the video twin's
-    // fewer-than-minShared-lost rule). A record losing EVERY claim has no
-    // surviving row to count and is suppressed under any threshold.
-    val admit = Option(minKept).getOrElse(expected)
-    batchLocalFirstClaim(exploded, tsCol, Seq("__v"))
+  /** Claims of the four 16-bit bands of one 64-bit hash (SimHash, image
+    * and audio fingerprints). */
+  private val hashBands16: (Column, Option[Int]) = (expr(
+    "transform(sequence(0, 3), b -> struct(b AS __band, shiftright(__k, b * 16) & 65535 AS __bh))"),
+    Some(4))
+
+  /** Claims of a hash list, all in band 0 (video frames, fuzzy deletion
+    * variants); the count varies per record. */
+  private val hashList: (Column, Option[Int]) =
+    (expr("transform(__k, h -> struct(0 AS __band, h AS __bh))"), None)
+
+  /** The one claim pipeline of the near-dup family. `kernel` maps the
+    * `srcCol` value to the kernel column `__k` of type `kernelType` in one
+    * `mapPartitions`; `claims` turns `__k` into claim keys. Rows with
+    * nothing to claim pass through unsuppressed, in one second branch:
+    * with `undecodable` set (the media kernels), the rows the kernel
+    * returns null for — null or undecodable media — so that branch runs
+    * the kernel again; otherwise the rows whose `srcCol` is null, routed
+    * before the kernel, which then runs once per row and never sees a
+    * null.
+    *
+    * Claim rows are arbitrated per batch ([[batchLocalFirstClaim]]) and
+    * first-claimed on (__band, __bh) within the watermark horizon; a
+    * record is re-admitted when it kept at least max(nClaims − tolerance, 1)
+    * of its claims: all of them at tolerance 0, the video twin's
+    * fewer-than-minShared-lost rule at minShared − 1. A record losing
+    * EVERY claim has no surviving row to count and is suppressed under any
+    * tolerance. Grouping is on the window, a varying claim count (a fixed
+    * one stays out of the state key) and every NON-event-time column:
+    * keeping tsCol itself as a key would leave two event-time attributes
+    * downstream, which Spark rejects; all claim rows of a record share one
+    * ts, so min() reconstructs it exactly. */
+  private def claimFirstSeen(df: DataFrame, srcCol: String, tsCol: String, delay: String,
+      kernelType: DataType, undecodable: Boolean, claims: (Column, Option[Int]),
+      tolerance: Int = 0)(kernel: Any => Any): DataFrame = {
+    val carry = df.columns.toSeq
+    val sIdx = df.schema.fieldIndex(srcCol)
+    val keyed = (if (undecodable) df else df.filter(col(srcCol).isNotNull)).mapPartitions { rows =>
+      rows.map(row => Row.fromSeq(row.toSeq :+ kernel(row.get(sIdx))))
+    }(Encoders.row(df.schema.add("__k", kernelType, nullable = undecodable)))
+    val (keys, fixedCount) = claims
+    val claimed = keyed.filter(col("__k").isNotNull)
+      .select(carry.map(col) :+ fixedCount.fold(size(keys))(lit(_)).as("__n") :+ explode(keys).as("__c"): _*)
+      .select(carry.map(col) :+ col("__n") :+ col("__c.__band") :+ col("__c.__bh"): _*)
+    val (nKeys, nClaims) = fixedCount.fold((Seq(col("__n")), col("__n")))(n => (Nil, lit(n)))
+    val admitted = batchLocalFirstClaim(claimed, tsCol, Seq("__band", "__bh"))
       .withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark("__v")
-      .groupBy(window(col(tsCol), delay) +: expected +: keys.map(col): _*)
+      .dropDuplicatesWithinWatermark("__band", "__bh")
+      .groupBy((window(col(tsCol), delay) +: nKeys) ++ carry.filterNot(_ == tsCol).map(col): _*)
       .agg(count(lit(1)).as("__kept"), min(col(tsCol)).as(tsCol))
-      .filter(col("__kept") >= admit)
+      .filter(col("__kept") >= greatest(nClaims - tolerance, lit(1)))
       .select(carry.map(col): _*)
+    admitted.unionByName(
+      if (undecodable) keyed.filter(col("__k").isNull).select(carry.map(col): _*)
+      else df.filter(col(srcCol).isNull))
   }
 }

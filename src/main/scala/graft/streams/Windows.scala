@@ -24,13 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  /** expire_tumbling/hopping/cumulative/sliding/session
-    * (topologynode.py:825-859): the state-retention horizon per window
-    * type = max window extent + allowed lateness. Feed the result to
-    * `withWatermark` (streaming) or Linear.expire (batch). */
-  def expiryDelayMs(windowExtentMs: Long, allowedLatenessMs: Long): Long =
-    windowExtentMs + allowedLatenessMs
-
   /** Window bounds come back as TIMESTAMP or TIMESTAMP_NTZ depending on the
     * input column's type (parquet writers differ); unix_millis only accepts
     * the former. The cast is a no-op for TIMESTAMP and value-preserving for

@@ -117,6 +117,27 @@ class StorageSpec extends SparkSpec {
       Seq("message 4", "message 5", "message 6"))
   }
 
+  test("readFrom: a large negative offset after deleteRecords starts at the new log start") {
+    val fs = freshStorage()
+    fs.createTopic("t", 1)
+    fs.produce("t", sampleBatch(10).withColumn("partition", lit(0)))
+    fs.deleteRecords("t", 4L)
+    def offs(df: org.apache.spark.sql.DataFrame) =
+      df.select("offset").as[Long].collect().sorted.toSeq
+    assert(offs(fs.readFrom("t", Map(0 -> -99L))) == (4L until 10L))
+    assert(offs(fs.readFrom("t", Map(0 -> -2L))) == Seq(8L, 9L))
+  }
+
+  test("readFrom: a requested partition that holds no messages reads empty") {
+    val fs = freshStorage()
+    fs.createTopic("t", 3)
+    fs.produce("t", sampleBatch(5).withColumn("partition", lit(0)))
+    assert(fs.readFrom("t", Map(1 -> -3L)).filter(col("partition") === 1).count() == 0)
+    assert(fs.readFrom("t", Map(2 -> 0L)).filter(col("partition") === 2).count() == 0)
+    // the other partitions still read from the beginning
+    assert(fs.readFrom("t", Map(1 -> -3L, 2 -> 0L)).count() == 5)
+  }
+
   test("produce: hash partitioner, dense offsets, watermarks, append continues") {
     val fs = freshStorage()
     fs.createTopic("t", 4)

@@ -765,6 +765,77 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming SimHash near-dup: null text passes through instead of failing the query") {
+    val in = MemoryStream[(java.sql.Timestamp, String)](spark)
+    def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
+    val doc = "the quick brown fox jumps over the lazy dog while rain falls on the quiet hills tonight"
+    val out = StreamingDedup.nearDupFirstSeenSimhash(
+      in.toDF().toDF("ts", "text"), "text", "ts", "10 seconds")
+    val q = out.writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName("nds_null_out").start()
+    try {
+      in.addData(ts(10) -> doc, ts(11) -> null)
+      q.processAllAvailable()
+      in.addData(ts(12) -> null)
+      q.processAllAvailable()
+      in.addData(ts(100) -> "window flusher far in the future beyond every horizon boundary now")
+      q.processAllAvailable()
+      in.addData(ts(200) -> "second flusher even further out to close the previous window too")
+      q.processAllAvailable()
+      val got = spark.table("nds_null_out").select("text").as[String].collect().toSeq
+      assert(got.count(_ == null) == 2, s"every null text must pass through: $got")
+      assert(got.count(_ == doc) == 1, s"the document must pass once: $got")
+    } finally q.stop()
+  }
+
+  test("streaming LSH near-dup: null texts pass through, no shared null bucket suppresses them") {
+    val in = MemoryStream[(java.sql.Timestamp, String)](spark)
+    def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
+    val out = StreamingDedup.nearDupFirstSeen(
+      in.toDF().toDF("ts", "text"), "text", "ts", "10 seconds")
+    val q = out.writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName("nd_null_out").start()
+    try {
+      in.addData(ts(10) -> null)
+      q.processAllAvailable()
+      in.addData(ts(12) -> null, ts(13) -> null) // in-horizon: must not be suppressed
+      q.processAllAvailable()
+      in.addData(ts(100) -> "window flusher far in the future beyond every horizon boundary now")
+      q.processAllAvailable()
+      in.addData(ts(200) -> "second flusher even further out to close the previous window too")
+      q.processAllAvailable()
+      val got = spark.table("nd_null_out").select("text").as[String].collect().toSeq
+      assert(got.count(_ == null) == 3, s"every null text must pass through: $got")
+    } finally q.stop()
+  }
+
+  test("streaming LSH near-dup: input columns named band and bh are carried, not confused with claims") {
+    val in = MemoryStream[(java.sql.Timestamp, String, Int, Long)](spark)
+    def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
+    val base = "the quick brown fox jumps over the lazy dog while rain falls on the quiet hills tonight"
+    val nearDup = base.replace("tonight", "today")
+    val distinctDoc = "completely different content about spark shuffles partitions and codegen stages forever"
+    val out = StreamingDedup.nearDupFirstSeen(
+      in.toDF().toDF("ts", "text", "band", "bh"), "text", "ts", "10 seconds")
+    assert(out.columns.toSeq == Seq("ts", "text", "band", "bh"))
+    val q = out.writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName("nd_cols_out").start()
+    try {
+      in.addData((ts(10), base, 7, 70L))
+      q.processAllAvailable()
+      in.addData((ts(12), nearDup, 8, 80L), (ts(13), distinctDoc, 9, 90L))
+      q.processAllAvailable()
+      in.addData((ts(100), "window flusher far in the future beyond every horizon boundary now", 0, 0L))
+      q.processAllAvailable()
+      in.addData((ts(200), "second flusher even further out to close the previous window too", 0, 0L))
+      q.processAllAvailable()
+      val got = spark.table("nd_cols_out").select("text", "band", "bh")
+        .as[(String, Int, Long)].collect().toSet
+      assert(got.contains((base, 7, 70L)) && got.contains((distinctDoc, 9, 90L)), got.toString)
+      assert(!got.exists(_._1 == nearDup), got.toString)
+    } finally q.stop()
+  }
+
   test("CDC end-to-end: retraction distinct -> debezium out -> demux, across a checkpoint restart") {
     // the reference's full to_debezium lifecycle (streams.py:133-166,
     // test_streams.py:223-228): a weighted delta stream becomes a CDC
