@@ -1,6 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.llm.{Ann, Dedup, Hashing, Ivf, Multimodal, Nsw, Pq, Retrieval}
@@ -495,10 +494,7 @@ object ScaleProbe {
       dirs ::= java.nio.file.Files.createTempDirectory("graft_probe")
       dirs.head.toString
     }
-    def close(): Unit = dirs.foreach { d =>
-      val s = java.nio.file.Files.walk(d)
-      try s.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete) finally s.close()
-    }
+    def close(): Unit = dirs.foreach(FileStorage.deleteTree)
     val logCalls: Int = 10 * f
     def logBatch(i: Int): DataFrame = spark.range(i * 2000L, (i + 1) * 2000L).select(
       (col("id") % 997).cast("string").as("key"), concat(lit("v"), col("id")).as("value"),

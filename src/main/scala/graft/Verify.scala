@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.serde.Json
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,21 +16,9 @@ object Verify {
       run(q.build(spark, sfDir))(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}"))
         .error.foreach(e => System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // quoted by json4s: a tab or CR in an oracle's SQL stays valid JSON
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.obj(SparkEntry.oracleSql.map { case (k, v) => k -> Json.quote(v) }))
     spark.stop()
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
+import graft.serde.Json
 
 /** Jupyter-notebook ingestion (round 13): code corpora are full of
   * .ipynb files, and the cells — not the raw JSON — are the training
@@ -78,20 +79,6 @@ object Notebooks {
   // so projection is load-bearing)
   // ------------------------------------------------------------------
 
-  private def jsonEscape(s: String): String = {
-    val sb = new java.lang.StringBuilder
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
   /** A notebook with `cells` = (cell_type, full text, asArray): array
     * form splits the text AFTER each \n (nbformat's line form);
     * string form embeds it whole. Outputs/metadata/execution_count
@@ -109,8 +96,8 @@ object Notebooks {
             i += 1
           }
           if (start < text.length) parts += text.substring(start)
-          parts.result().map(l => "\"" + jsonEscape(l) + "\"").mkString("[", ", ", "]")
-        } else "\"" + jsonEscape(text) + "\""
+          parts.result().map(Json.quote).mkString("[", ", ", "]")
+        } else Json.quote(text)
       val extra =
         if (tpe == "code")
           """, "execution_count": 2, "outputs": [{"output_type": "stream", "text": ["x\n"]}]"""

@@ -5354,14 +5354,8 @@ object LlmQueries extends Registry {
         "graft_q_warc_fetch_fs.warc.gz")
       // same concurrent-run-safe install as q_wiki_slices_fs
       if (!(f.isFile && f.length == arc.length &&
-            java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f.toPath), arc))) {
-        val tmp = java.nio.file.Files.createTempFile(
-          f.toPath.getParent, "graft_q_warc_fetch_fs", ".tmp")
-        java.nio.file.Files.write(tmp, arc)
-        java.nio.file.Files.move(tmp, f.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
+            java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f.toPath), arc)))
+        graft.storage.FileStorage.writeAtomic(f.toPath, arc)
       val path = f.getAbsolutePath
       val wanted = Warc.cdxIndex(arc)
         .filter(r => r.rec_type == "response" && r.rec_idx % 3 != 2)
@@ -6907,17 +6901,11 @@ object LlmQueries extends Registry {
       val f = new java.io.File(System.getProperty("java.io.tmpdir"),
         "graft_q_wiki_slices_fs.xml.bz2")
       // Concurrent-run safe: skip when the deterministic bytes are
-      // already in place; otherwise write to a unique temp file and
-      // ATOMIC_MOVE it in, so no reader ever sees a partial dump.
+      // already in place; otherwise install them with an atomic write,
+      // so no reader ever sees a partial dump.
       if (!(f.isFile && f.length == dump.length &&
-            java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f.toPath), dump))) {
-        val tmp = java.nio.file.Files.createTempFile(
-          f.toPath.getParent, "graft_q_wiki_slices_fs", ".tmp")
-        java.nio.file.Files.write(tmp, dump)
-        java.nio.file.Files.move(tmp, f.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
+            java.util.Arrays.equals(java.nio.file.Files.readAllBytes(f.toPath), dump)))
+        graft.storage.FileStorage.writeAtomic(f.toPath, dump)
       val path = f.getAbsolutePath
       val src = Seq(Wiki.WikiIndexSrc(0L, index, dump.length.toLong)).toDS()
       val slices = Wiki.indexSlices(src).map(sl => (sl, path))

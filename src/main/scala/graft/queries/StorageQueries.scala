@@ -1,24 +1,16 @@
 package graft.queries
 
-import java.nio.file.{Files => JFiles, Paths}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Envelope
 import graft.storage.FileStorage
+import graft.storage.FileStorage.deleteTree
 
 /** Correctness wiring for the FileStorage log: a full produce → consume
   * roundtrip (partitioner + offset assignment + scan) checked against the
   * same derivation in DuckDB. */
 object StorageQueries extends Registry {
-
-  /** Recursive delete that closes its directory stream (walk leaks an fd
-    * per call otherwise — these queries run repeatedly in one bench JVM). */
-  private def deleteTree(rootP: java.nio.file.Path): Unit =
-    if (JFiles.exists(rootP)) {
-      val s = JFiles.walk(rootP)
-      try s.iterator().asScala.toSeq.reverse.foreach(JFiles.delete) finally s.close()
-    }
 
   val all: Seq[Q] = Seq(
     Q("q_storage_roundtrip", (s, dir) => {

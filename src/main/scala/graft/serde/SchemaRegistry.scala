@@ -5,6 +5,9 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.time.Duration
 import scala.collection.concurrent.TrieMap
+import org.json4s._
+import org.json4s.jackson.JsonMethods
+import Json.formats
 
 /** Confluent Schema Registry client (kafi/schemaregistry.py:24-236) — the
   * admin-plane companion of the Confluent wire format in [[Serde]]:
@@ -12,8 +15,8 @@ import scala.collection.concurrent.TrieMap
   * cache (schema ids are immutable, so the cache never invalidates; latest/
   * register seed it).
   *
-  * Plain JDK HTTP — no extra dependencies; the data plane never calls this
-  * per row (resolve ids up front, decode with [[AvroSerde]]/from_json).
+  * Plain JDK HTTP, payloads through [[Json]]; the data plane never calls
+  * this per row (resolve ids up front, decode with [[AvroSerde]]/from_json).
   * Driver-side by design: executors receive resolved schemas via closure
   * capture or broadcast, never a registry connection each. Connect and
   * request timeouts are set — a hung registry fails the call instead of
@@ -29,78 +32,38 @@ class SchemaRegistry(baseUrl: String,
   private def enc(segment: String): String =
     URLEncoder.encode(segment, StandardCharsets.UTF_8).replace("+", "%20")
 
-  private def get(path: String): String = {
-    val resp = client.send(
-      HttpRequest.newBuilder(URI.create(s"$baseUrl$path"))
-        .timeout(requestTimeout)
-        .header("Accept", "application/vnd.schemaregistry.v1+json").GET().build(),
-      HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200, s"registry GET $path -> ${resp.statusCode()}: ${resp.body()}")
-    resp.body()
-  }
-
-  private def send(method: String, path: String, body: String): String = {
-    val resp = client.send(
-      HttpRequest.newBuilder(URI.create(s"$baseUrl$path"))
-        .timeout(requestTimeout)
-        .header("Content-Type", "application/vnd.schemaregistry.v1+json")
-        .method(method, HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8)).build(),
-      HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200, s"registry $method $path -> ${resp.statusCode()}: ${resp.body()}")
-    resp.body()
-  }
-
-  private def post(path: String, body: String): String = send("POST", path, body)
-
-  /** Full JSON string escape (RFC 8259): quote, backslash, and all control
-    * characters — a pretty-printed .avsc with newlines must stay valid. */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  // minimal JSON field extraction (registry payloads are flat here; avoids
-  // a JSON dependency in this tiny admin client)
-  private def jsonInt(body: String, field: String): Int =
-    s""""$field"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(body)
-      .getOrElse(sys.error(s"no $field in: $body")).group(1).toInt
-
-  /** Extract and UNESCAPE a JSON string field — \n, \t, \uXXXX become the
-    * real characters (Confluent's encoder emits all of these in schema
-    * doc strings). */
-  private def jsonStr(body: String, field: String): String = {
-    val m = s""""$field"\\s*:\\s*"""".r.findFirstMatchIn(body)
-      .getOrElse(sys.error(s"no $field in: $body"))
-    val sb = new StringBuilder
-    var i = m.end
-    while (i < body.length && body.charAt(i) != '"') {
-      body.charAt(i) match {
-        case '\\' if i + 1 < body.length =>
-          body.charAt(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'b' => sb.append('\b'); i += 2
-            case 'f' => sb.append('\f'); i += 2
-            case 'u' if i + 5 < body.length =>
-              sb.append(Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar); i += 6
-            case other => sb.append(other); i += 2 // \" \\ \/
-          }
-        case c => sb.append(c); i += 1
-      }
+  /** One registry call, its response parsed. A call with a body sends it
+    * as the registry's JSON content type. */
+  private def call(method: String, path: String, body: Option[String] = None): JValue = {
+    val req = HttpRequest.newBuilder(URI.create(s"$baseUrl$path")).timeout(requestTimeout)
+    body match {
+      case Some(b) => req.header("Content-Type", "application/vnd.schemaregistry.v1+json")
+        .method(method, HttpRequest.BodyPublishers.ofString(b, StandardCharsets.UTF_8))
+      case None => req.header("Accept", "application/vnd.schemaregistry.v1+json")
+        .method(method, HttpRequest.BodyPublishers.noBody())
     }
-    sb.result()
+    val resp = client.send(req.build(), HttpResponse.BodyHandlers.ofString())
+    require(resp.statusCode() == 200, s"registry $method $path -> ${resp.statusCode()}: ${resp.body()}")
+    Json.parse(resp.body())
   }
+
+  private def get(path: String): JValue = call("GET", path)
+  private def post(path: String, body: String): JValue = call("POST", path, Some(body))
+  private def delete(path: String): JValue = call("DELETE", path)
+
+  private def field[A: Manifest](body: JValue, name: String): A =
+    (body \ name).extractOpt[A].getOrElse(sys.error(s"no $name in: ${JsonMethods.compact(body)}"))
+
+  /** `{"schema": ..., "schemaType": ...}`; AVRO, the Confluent default, is
+    * omitted. */
+  private def schemaBody(schemaJson: String, schemaType: String): String =
+    Json.obj(("schema" -> Json.quote(schemaJson)) +:
+      (if (schemaType == "AVRO") Nil else Seq("schemaType" -> Json.quote(schemaType))))
 
   /** Schema text by id (cached — ids are immutable).
     * GET /schemas/ids/{id} (schemaregistry.py lookup path). */
   def schemaById(id: Int): String =
-    byId.getOrElseUpdate(id, jsonStr(get(s"/schemas/ids/$id"), "schema"))
+    byId.getOrElseUpdate(id, field[String](get(s"/schemas/ids/$id"), "schema"))
 
   /** Register a schema under a subject, returning its id; seeds the cache.
     * POST /subjects/{subject}/versions. `schemaType` is AVRO (the Confluent
@@ -108,13 +71,9 @@ class SchemaRegistry(baseUrl: String,
     * registers all three (kafi/schemaregistry.py register path). */
   def register(subject: String, schemaJson: String, schemaType: String = "AVRO",
       normalize: Boolean = false): Int = {
-    val typeField =
-      if (schemaType == "AVRO") "" else s""", "schemaType": "$schemaType""""
     val q = if (normalize) "?normalize=true" else ""
-    val id = jsonInt(
-      post(s"/subjects/${enc(subject)}/versions$q",
-        s"""{"schema": "${jsonEscape(schemaJson)}"$typeField}"""),
-      "id")
+    val id = field[Int](
+      post(s"/subjects/${enc(subject)}/versions$q", schemaBody(schemaJson, schemaType)), "id")
     byId.putIfAbsent(id, schemaJson)
     id
   }
@@ -127,14 +86,16 @@ class SchemaRegistry(baseUrl: String,
 
   /** Version numbers of a subject. GET /subjects/{subject}/versions. */
   def versions(subject: String): Seq[Int] =
-    "\\d+".r.findAllIn(get(s"/subjects/${enc(subject)}/versions")).map(_.toInt).toSeq
+    get(s"/subjects/${enc(subject)}/versions").extract[Seq[Int]]
 
   /** Latest schema (id, text) of a subject; seeds the id cache.
     * GET /subjects/{subject}/versions/latest. */
-  def latest(subject: String): (Int, String) = {
-    val body = get(s"/subjects/${enc(subject)}/versions/latest")
-    val id = jsonInt(body, "id")
-    val schema = jsonStr(body, "schema")
+  def latest(subject: String): (Int, String) =
+    idAndSchema(get(s"/subjects/${enc(subject)}/versions/latest"))
+
+  private def idAndSchema(body: JValue): (Int, String) = {
+    val id = field[Int](body, "id")
+    val schema = field[String](body, "schema")
     byId.putIfAbsent(id, schema)
     (id, schema)
   }
@@ -143,81 +104,38 @@ class SchemaRegistry(baseUrl: String,
     * *_TRANSITIVE), returning the level the registry actually set.
     * PUT /config/{subject} (kafi/schemaregistry.py set_compatibility). */
   def setCompatibility(subject: String, level: String): String =
-    jsonStr(send("PUT", s"/config/${enc(subject)}", s"""{"compatibility": "$level"}"""),
-      "compatibility")
+    field[String](call("PUT", s"/config/${enc(subject)}",
+      Some(Json.obj(Seq("compatibility" -> Json.quote(level))))), "compatibility")
 
   /** A subject's compatibility level. GET /config/{subject} — the response
     * field is `compatibilityLevel`, unlike the PUT's `compatibility`
     * (kafi/schemaregistry.py get_compatibility). */
   def getCompatibility(subject: String): String =
-    jsonStr(get(s"/config/${enc(subject)}"), "compatibilityLevel")
+    field[String](get(s"/config/${enc(subject)}"), "compatibilityLevel")
 
   /** Would `schemaJson` be accepted under the subject's compatibility rules
     * against `version` (default latest)? POST /compatibility/subjects/
     * {subject}/versions/{version} (kafi/schemaregistry.py
     * test_compatibility). */
   def testCompatibility(subject: String, schemaJson: String,
-      version: String = "latest", schemaType: String = "AVRO"): Boolean = {
-    val typeField =
-      if (schemaType == "AVRO") "" else s""", "schemaType": "$schemaType""""
-    val body = post(s"/compatibility/subjects/${enc(subject)}/versions/${enc(version)}",
-      s"""{"schema": "${jsonEscape(schemaJson)}"$typeField}""")
-    """"is_compatible"\s*:\s*(true|false)""".r.findFirstMatchIn(body)
-      .getOrElse(sys.error(s"no is_compatible in: $body")).group(1).toBoolean
-  }
+      version: String = "latest", schemaType: String = "AVRO"): Boolean =
+    field[Boolean](post(s"/compatibility/subjects/${enc(subject)}/versions/${enc(version)}",
+      schemaBody(schemaJson, schemaType)), "is_compatible")
 
   /** Schema text by GUID — the registry's globally-unique schema handle,
     * distinct from the integer id. GET /schemas/guids/{guid}
     * (kafi/schemaregistry.py get_schema_by_guid). */
   def schemaByGuid(guid: String): String =
-    jsonStr(get(s"/schemas/guids/${enc(guid)}"), "schema")
-
-  private def delete(path: String): String = {
-    val resp = client.send(
-      HttpRequest.newBuilder(URI.create(s"$baseUrl$path"))
-        .timeout(requestTimeout)
-        .header("Accept", "application/vnd.schemaregistry.v1+json").DELETE().build(),
-      HttpResponse.BodyHandlers.ofString())
-    require(resp.statusCode() == 200, s"registry DELETE $path -> ${resp.statusCode()}: ${resp.body()}")
-    resp.body()
-  }
+    field[String](get(s"/schemas/guids/${enc(guid)}"), "schema")
 
   /** Is this exact schema already registered under the subject? Returns its
     * (id, version). POST /subjects/{subject} — the lookup endpoint, NOT the
     * /versions registration one (kafi/schemaregistry.py lookup_schema). */
   def lookupSchema(subject: String, schemaJson: String,
       schemaType: String = "AVRO", normalize: Boolean = false): (Int, Int) = {
-    val typeField =
-      if (schemaType == "AVRO") "" else s""", "schemaType": "$schemaType""""
     val q = if (normalize) "?normalize=true" else ""
-    val body = post(s"/subjects/${enc(subject)}$q",
-      s"""{"schema": "${jsonEscape(schemaJson)}"$typeField}""")
-    (jsonInt(body, "id"), jsonInt(body, "version"))
-  }
-
-  /** Unescape one regex-captured JSON string body (\" \\ \n \uXXXX...) —
-    * subject names are arbitrary strings; matching globs or building URLs
-    * against the ESCAPED form targets the wrong subject. */
-  private def unescapeJson(raw: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < raw.length) {
-      raw.charAt(i) match {
-        case '\\' if i + 1 < raw.length =>
-          raw.charAt(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'b' => sb.append('\b'); i += 2
-            case 'f' => sb.append('\f'); i += 2
-            case 'u' if i + 5 < raw.length =>
-              sb.append(Integer.parseInt(raw.substring(i + 2, i + 6), 16).toChar); i += 6
-            case other => sb.append(other); i += 2 // \" \\ \/
-          }
-        case c => sb.append(c); i += 1
-      }
-    }
-    sb.toString
+    val body = post(s"/subjects/${enc(subject)}$q", schemaBody(schemaJson, schemaType))
+    (field[Int](body, "id"), field[Int](body, "version"))
   }
 
   /** Subject names, glob-filtered client-side like the reference's `sls`
@@ -226,28 +144,21 @@ class SchemaRegistry(baseUrl: String,
   def subjects(pattern: String = "*", deleted: Boolean = false): Seq[String] = {
     val q = if (deleted) "?deleted=true" else ""
     val re = graft.functions.Helpers.globToRegex(pattern).r
-    """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(get(s"/subjects$q"))
-      .map(m => unescapeJson(m.group(1))).filter(s => re.matches(s)).toSeq
+    get(s"/subjects$q").extract[Seq[String]].filter(s => re.matches(s))
   }
 
   /** (subject, version) pairs where a schema id is registered.
     * GET /schemas/ids/{id}/versions (kafi/schemaregistry.py
     * get_schema_versions). */
   def schemaVersions(id: Int): Seq[(String, Int)] =
-    """\{\s*"subject"\s*:\s*"((?:[^"\\]|\\.)*)"\s*,\s*"version"\s*:\s*(\d+)""".r
-      .findAllMatchIn(get(s"/schemas/ids/$id/versions"))
-      .map(m => (m.group(1), m.group(2).toInt)).toSeq
+    get(s"/schemas/ids/$id/versions").extract[Seq[JValue]]
+      .map(v => (field[String](v, "subject"), field[Int](v, "version")))
 
   /** One registered version of a subject: (id, schema text); seeds the id
     * cache. GET /subjects/{subject}/versions/{version}
     * (kafi/schemaregistry.py get_version). */
-  def version(subject: String, version: Int): (Int, String) = {
-    val body = get(s"/subjects/${enc(subject)}/versions/$version")
-    val id = jsonInt(body, "id")
-    val schema = jsonStr(body, "schema")
-    byId.putIfAbsent(id, schema)
-    (id, schema)
-  }
+  def version(subject: String, version: Int): (Int, String) =
+    idAndSchema(get(s"/subjects/${enc(subject)}/versions/$version"))
 
   /** Delete one subject version, returning the deleted version number;
     * permanent=true hard-deletes (must follow a soft delete, per the
@@ -255,7 +166,7 @@ class SchemaRegistry(baseUrl: String,
     * (kafi/schemaregistry.py delete_version). */
   def deleteVersion(subject: String, version: Int, permanent: Boolean = false): Int = {
     val q = if (permanent) "?permanent=true" else ""
-    delete(s"/subjects/${enc(subject)}/versions/$version$q").trim.toInt
+    delete(s"/subjects/${enc(subject)}/versions/$version$q").extract[Int]
   }
 
   /** Delete every subject matching a glob, returning subject → deleted
@@ -272,10 +183,9 @@ class SchemaRegistry(baseUrl: String,
       if (permanent) {
         try delete(s"/subjects/${enc(s)}")
         catch { case _: IllegalArgumentException => () }
-        s -> "\\d+".r.findAllIn(delete(s"/subjects/${enc(s)}?permanent=true"))
-          .map(_.toInt).toSeq
+        s -> delete(s"/subjects/${enc(s)}?permanent=true").extract[Seq[Int]]
       } else
-        s -> "\\d+".r.findAllIn(delete(s"/subjects/${enc(s)}")).map(_.toInt).toSeq
+        s -> delete(s"/subjects/${enc(s)}").extract[Seq[Int]]
     }.toMap
   }
 }

@@ -1,11 +1,16 @@
 package graft.storage
 
-import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
+import java.nio.file.{Files => JFiles, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
+import org.json4s._
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.model.Envelope
+import graft.serde.Json
+import graft.serde.Json.formats
 
 /** File-backed storage: a topic is a parquet table with the envelope columns
   * — the reference's miniature Kafka-log-on-files (fs/fs_producer.py:53-70,
@@ -22,7 +27,9 @@ import graft.model.Envelope
   * `root` is a LOCAL filesystem path: the metadata plane (meta.json,
   * index.json, group offsets, the writer lock) uses java.nio precisely for
   * its atomic CREATE_NEW / ATOMIC_MOVE guarantees, which object stores do
-  * not offer.
+  * not offer. Its files are JSON through [[Json]]: an index that does not
+  * parse is rebuilt from the data files, and a meta or group file that does
+  * not parse is an error naming the file.
   *
   * Layout: `<root>/topics/<name>/data/` (parquet) + `meta.json` (partition
   * count, fs_admin.py:349-369) + `index.json` (the offset index) +
@@ -37,6 +44,7 @@ import graft.model.Envelope
   */
 class FileStorage(spark: SparkSession, val root: String,
     lockWaitMs: Long = 30000, lockStaleMs: Long = 600000) extends Storage {
+  import FileStorage.{deleteTree, writeAtomic}
 
   private def topicDir(t: String) = s"$root/topics/$t"
   private def dataDir(t: String) = s"${topicDir(t)}/data"
@@ -51,25 +59,26 @@ class FileStorage(spark: SparkSession, val root: String,
   def createTopic(topic: String, partitions: Int, config: Map[String, String]): Unit = {
     require(!exists(topic), s"topic exists: $topic")
     JFiles.createDirectories(Paths.get(dataDir(topic)))
-    writeMetaAtomic(topic,
-      s"""{"partitions": $partitions, "config": ${configJson(config)}}""")
+    writeMeta(topic, partitions, config)
   }
 
-  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
+  private def writeMeta(topic: String, partitions: Int, config: Map[String, String]): Unit = {
+    val entries = config.toSeq.sorted.map { case (k, v) => k -> Json.quote(v) }
+    writeAtomic(metaPath(topic),
+      Json.obj(Seq("partitions" -> partitions.toString, "config" -> Json.obj(entries))).getBytes("UTF-8"))
+  }
 
-  private def configJson(c: Map[String, String]): String =
-    c.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ", ", "}")
+  /** Decode a meta or group file; one that does not parse, or has another
+    * shape, is an error naming the file. */
+  private def readJson[A](p: Path)(decode: JValue => A): A = {
+    val text = JFiles.readString(p)
+    try decode(Json.parse(text))
+    catch { case NonFatal(e) => throw new IllegalStateException(s"unreadable metadata file $p: ${e.getMessage}", e) }
+  }
 
   /** Topic config entries (fs_admin.py:361-365). */
-  def getConfig(topic: String): Map[String, String] = {
-    val s = JFiles.readString(metaPath(topic))
-    val body = """"config":\s*\{(.*)\}""".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-    """"((?:[^"\\]|\\.)*)":\s*"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(body)
-      .map(m => unesc(m.group(1)) -> unesc(m.group(2))).toMap
-  }
+  def getConfig(topic: String): Map[String, String] =
+    readJson(metaPath(topic))(m => (m \ "config").extract[Map[String, String]])
 
   /** Get (entries == empty) or merge-set config on every topic matching the
     * glob pattern (fs_admin.py:40-53). Returns topic -> config after the
@@ -77,9 +86,7 @@ class FileStorage(spark: SparkSession, val root: String,
   def config(pattern: String, entries: Map[String, String] = Map.empty): Map[String, Map[String, String]] =
     listTopics(pattern).map { t =>
       if (entries.nonEmpty) withWriterLock(t) { // read-modify-write races producers
-        val merged = getConfig(t) ++ entries
-        writeMetaAtomic(t,
-          s"""{"partitions": ${partitions(t)}, "config": ${configJson(merged)}}""")
+        writeMeta(t, partitions(t), getConfig(t) ++ entries)
       }
       t -> getConfig(t)
     }.toMap
@@ -111,10 +118,8 @@ class FileStorage(spark: SparkSession, val root: String,
         .toSeq.sorted)
   }
 
-  override def partitions(topic: String): Int = {
-    val s = JFiles.readString(metaPath(topic))
-    """"partitions":\s*(\d+)""".r.findFirstMatchIn(s).get.group(1).toInt
-  }
+  override def partitions(topic: String): Int =
+    readJson(metaPath(topic))(m => (m \ "partitions").extract[Int])
 
   /** ls/ll — topic listing with partition counts and message/byte sizes
     * (kafi/storage_admin.py:11-53): one aggregation per topic, driver
@@ -205,21 +210,6 @@ class FileStorage(spark: SparkSession, val root: String,
     }
   }
 
-  /** Crash-safe small-file write: temp file in the same directory +
-    * ATOMIC_MOVE, so a reader never observes a torn file and a crash
-    * mid-write leaves the old content. */
-  private def writeAtomic(target: java.nio.file.Path, content: String): Unit = {
-    val tmp = target.resolveSibling(
-      s".${target.getFileName}.tmp.${java.util.UUID.randomUUID()}")
-    JFiles.writeString(tmp, content)
-    JFiles.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def writeMetaAtomic(topic: String, content: String): Unit =
-    writeAtomic(metaPath(topic), content)
-
   private def emptyLog(topic: String): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Envelope.schema)
@@ -280,34 +270,31 @@ class FileStorage(spark: SparkSession, val root: String,
 
   private def indexPath(t: String) = Paths.get(s"${topicDir(t)}/index.json")
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (JFiles.exists(p)) usingStream(JFiles.walk(p))(_.toSeq.reverse.foreach(JFiles.delete))
-
+  /** One entry per line, closed by `\n]}`. */
   private def writeIndex(topic: String, files: Seq[LogFile]): Unit =
     writeAtomic(indexPath(topic), files.map { f =>
-      val ranges = f.ranges.toSeq.sortBy(_._1)
-        .map { case (p, (lo, hi)) => s""""$p": [$lo, $hi]""" }.mkString("{", ", ", "}")
-      s"""  {"file": "${esc(f.name)}", "ranges": $ranges}"""
-    }.mkString("{\"files\": [\n", ",\n", "\n]}\n"))
+      val ranges = f.ranges.toSeq.sortBy(_._1).map { case (p, (lo, hi)) => p.toString -> s"[$lo, $hi]" }
+      "  " + Json.obj(Seq("file" -> Json.quote(f.name), "ranges" -> Json.obj(ranges)))
+    }.mkString("{\"files\": [\n", ",\n", "\n]}\n").getBytes("UTF-8"))
 
-  private def readIndex(topic: String): Seq[LogFile] =
-    if (!JFiles.exists(indexPath(topic))) Nil
-    else """\{"file": "((?:[^"\\]|\\.)*)", "ranges": \{([^}]*)\}\}""".r
-      .findAllMatchIn(JFiles.readString(indexPath(topic))).map { m =>
-        LogFile(unesc(m.group(1)), """"(\d+)": \[(\d+), (\d+)\]""".r.findAllMatchIn(m.group(2))
-          .map(r => r.group(1).toInt -> (r.group(2).toLong, r.group(3).toLong)).toMap)
-      }.toSeq
+  /** The indexed files; None when the index is missing or does not parse. */
+  private def readIndex(topic: String): Option[Seq[LogFile]] =
+    if (!JFiles.exists(indexPath(topic))) None
+    else Try((Json.parse(JFiles.readString(indexPath(topic))) \ "files").extract[Seq[JValue]].map { f =>
+      LogFile((f \ "file").extract[String], (f \ "ranges").extract[Map[String, Seq[Long]]]
+        .map { case (p, Seq(lo, hi)) => p.toInt -> (lo, hi) })
+    }).toOption
 
   /** The topic's data files with their ranges, and whether any had to be
     * recovered from the data. Files the index does not list (a crash
     * between a produce's move and its index commit, or a topic written
     * before the index existed) are aggregated, and only those; a listed
-    * file that is missing discards the index and aggregates every file. */
+    * file that is missing, or an index that does not parse, discards the
+    * index and aggregates every file. */
   private def index(topic: String): (Seq[LogFile], Boolean) = {
     val onDisk = usingStream(JFiles.list(Paths.get(dataDir(topic))))(
       _.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet)
-    val stored = readIndex(topic)
-    val listed = if (stored.forall(f => onDisk(f.name))) stored else Nil
+    val listed = readIndex(topic).filter(_.forall(f => onDisk(f.name))).getOrElse(Nil)
     val unlisted = (onDisk -- listed.map(_.name)).toSeq.sorted
     if (unlisted.isEmpty) (listed, false)
     else {
@@ -393,18 +380,15 @@ class FileStorage(spark: SparkSession, val root: String,
 
   override def commit(group: String, topic: String, offsets: Map[Int, Long]): Unit = {
     JFiles.createDirectories(groupPath(group, topic).getParent)
-    val body = offsets.toSeq.sortBy(_._1)
-      .map { case (p, o) => s""""$p": $o""" }.mkString("{", ", ", "}")
     // atomic like meta.json: a crash mid-write must not leave a torn file
-    // that committed()'s scrape would silently read as a partial offset map
-    writeAtomic(groupPath(group, topic), body)
+    writeAtomic(groupPath(group, topic), Json.obj(offsets.toSeq.sortBy(_._1)
+      .map { case (p, o) => p.toString -> o.toString }).getBytes("UTF-8"))
   }
 
   override def committed(group: String, topic: String): Map[Int, Long] = {
     val p = groupPath(group, topic)
     if (!JFiles.exists(p)) Map.empty
-    else """"(\d+)":\s*(\d+)""".r.findAllMatchIn(JFiles.readString(p))
-      .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
+    else readJson(p)(_.extract[Map[String, Long]]).map { case (k, o) => k.toInt -> o }
   }
 
   /** cp_group_offsets (kafi/addons.py:112-129). */
@@ -435,6 +419,26 @@ class FileStorage(spark: SparkSession, val root: String,
     JFiles.move(Paths.get(tmp), dataP)
     JFiles.deleteIfExists(indexPath(topic)) // rebuilt from the rewritten files
   }
+}
+
+object FileStorage {
+
+  /** Crash-safe small-file write: temp file in the same directory +
+    * ATOMIC_MOVE, so a reader never observes a torn file and a crash
+    * mid-write leaves the old content. */
+  private[graft] def writeAtomic(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(s".${target.getFileName}.tmp.${java.util.UUID.randomUUID()}")
+    JFiles.write(tmp, bytes)
+    JFiles.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Recursive delete; closes its directory stream (an unclosed walk leaks
+    * a file descriptor per call). */
+  private[graft] def deleteTree(p: Path): Unit =
+    if (JFiles.exists(p)) {
+      val s = JFiles.walk(p)
+      try s.iterator().asScala.toSeq.reverse.foreach(JFiles.delete) finally s.close()
+    }
 }
 
 /** Kafka-backed storage: the same surface over Spark's Kafka source/sink.

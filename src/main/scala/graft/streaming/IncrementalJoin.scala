@@ -1,10 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
+import java.nio.file.{Files => JFiles, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types.StructType
+import graft.storage.FileStorage.{deleteTree, writeAtomic}
 import graft.streams.ZSet
 
 /** Stream-stream THETA join — unsupported by Structured Streaming's native
@@ -79,7 +80,7 @@ class IncrementalJoin(
     val obs = Observation()
     df.observe(obs, count(lit(1)).as("n")).write.parquet(seg.path)
     val nonEmpty = obs.get("n").asInstanceOf[Long] > 0
-    if (!nonEmpty) deleteDir(Paths.get(seg.path))
+    if (!nonEmpty) deleteTree(Paths.get(seg.path))
     nonEmpty
   }
 
@@ -96,12 +97,6 @@ class IncrementalJoin(
         merge(rest ++ kept, next)
     }
 
-  private def deleteDir(p: java.nio.file.Path): Unit =
-    if (JFiles.exists(p)) {
-      val s = JFiles.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(JFiles.delete) finally s.close()
-    }
-
   /** Delete the segments and manifests `keep` does not name; with
     * `version`, only those written at that version (replay residue). */
   private def sweep(keep: Set[String], version: Option[Long]): Unit = {
@@ -113,7 +108,7 @@ class IncrementalJoin(
         case ManifestName(v) => Some(v.toLong)
         case _ => None
       }
-      if (ver.exists(v => version.forall(_ == v)) && !keep(n)) deleteDir(p)
+      if (ver.exists(v => version.forall(_ == v)) && !keep(n)) deleteTree(p)
     } finally entries.close()
   }
 
@@ -137,10 +132,7 @@ class IncrementalJoin(
     val (da, db) = (delta(deltaA, "a"), delta(deltaB, "b"))
     val current = a ++ da ++ b ++ db
     JFiles.write(manifestPath(next), current.map(_.name).asJava)
-    // atomic pointer swap — the commit point
-    val tmp = root.resolve("CURRENT.tmp")
-    JFiles.writeString(tmp, next.toString)
-    JFiles.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    writeAtomic(pointer, next.toString.getBytes("UTF-8")) // the commit point
     // GC sweeps every stale entry, not just version v-1's: a crash between
     // a past swap and its GC leaves orphans a fixed delete never revisits
     sweep((current ++ prev).map(_.name).toSet ++ Set(s"manifest-$next", s"manifest-$v"), None)

@@ -19,9 +19,9 @@ import org.apache.spark.{SparkEnv, SparkException}
   * capturing class bytecode each time (getClassReader → inflate the class
   * file out of the jar → ClassReader.accept over every method). Driver
   * thread samples during a loop of 1-task count jobs put ~50% of the
-  * per-job fixed cost there. At local[4] on a 4-core host,
-  * [[graft.JobOverheadProbe]]'s bare 1-task job took 12.8 and 18.5 ms
-  * with this shadow and 22.5 and 32.3 ms without it (two runs each; its
+  * per-job fixed cost there. At local[4] on a 4-core host, a bare
+  * 1-task count job took 12.8 and 18.5 ms with this shadow and 22.5 and
+  * 32.3 ms without it (two runs each of a since-deleted probe main; its
   * noop writes moved within noise), and the suite submits thousands of
   * jobs (AQE runs one job per query stage; the iterative operators run
   * 40–70 jobs per query). The scan's outcome for a given closure CLASS

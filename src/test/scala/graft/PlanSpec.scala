@@ -755,6 +755,22 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("no JSON string escape is hand-rolled under src/main (one codec: graft.serde.Json)") {
+    // the metadata plane once kept three escapers and two unescapers, and
+    // two of the readers dropped data silently; json4s quotes and parses
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val escapeFormat = """\\\\u[^"\n]*%04[xX]""".r
+    val helper = """\bdef\s+(jsonEscape|jsonStr|jsonInt|unescapeJson|esc|unesc)\b""".r
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        (escapeFormat.findAllIn(src) ++ helper.findAllIn(src)).map(m => s"$p: $m")
+      }.toSeq
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("every session is built by graft.Session (one configuration, verified = benchmarked)") {
     // one factory: a second place that constructs a session under src/ is
     // how the oracle once checked different physical plans from the timed

@@ -181,6 +181,12 @@ class SchemaRegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sr.deleteSubject("orders*") == Map("orders-value" -> Seq(1, 2, 3, 4)))
   }
 
+  test("schemaVersions reads each object's fields in any order and unescapes the subject") {
+    server.createContext("/schemas/ids/21/versions",
+      ex => reply(ex, """[{"version": 2, "subject": "café-value"}]""".replace("é", "\\u00e9")))
+    assert(new SchemaRegistry(url).schemaVersions(21) == Seq(("café-value", 2)))
+  }
+
   test("schema lookup by GUID") {
     val escaped = schema.replace("\"", "\\\"")
     server.createContext("/schemas/guids/3e2f0680-0000-4000-8000-0000deadbeef",

@@ -258,6 +258,17 @@ class StorageSpec extends SparkSpec {
     assert(fs.getConfig("snacks")("cleanup.policy") == "compact")
   }
 
+  test("topic config: values with control characters survive create, merge-set and recreate") {
+    val fs = freshStorage()
+    val cfg = Map("a" -> "x", "note" -> "l1\nl2\ttab")
+    fs.createTopic("t", 1, cfg)
+    assert(fs.getConfig("t") == cfg)
+    fs.config("t", Map("b" -> "y"))
+    assert(fs.getConfig("t") == cfg + ("b" -> "y"))
+    fs.recreate("t")
+    assert(fs.getConfig("t") == cfg + ("b" -> "y"))
+  }
+
   test("concurrent producers serialize on the writer lock: no duplicate offsets") {
     val fs = freshStorage()
     fs.createTopic("locked", 2)
@@ -365,6 +376,56 @@ class StorageSpec extends SparkSpec {
       ",\n  {\"file\": \"part-gone.parquet\", \"ranges\": {\"0\": [0, 999]}}\n]}"))
     assertConsistent(fs, "t")
     assert(!Files.readString(index).contains("part-gone"))
+  }
+
+  test("metadata files in the established text layout read back: partitions, config, watermarks, offsets") {
+    val fs = freshStorage()
+    fs.createTopic("t", 2)
+    fs.produce("t", sampleBatch(20))
+    fs.produce("t", sampleBatch(10))
+    val dir = java.nio.file.Paths.get(s"${fs.root}/topics/t")
+    // one entry per data file with its own offset ranges, in reverse name
+    // order: a rebuilt index would list the files sorted
+    val ranges = fs.read("t").groupBy(col("_metadata.file_name"), col("partition"))
+      .agg(min("offset"), max("offset") + 1).as[(String, Int, Long, Long)].collect().toSeq
+    assert(ranges.map(_._1).distinct.size > 1)
+    val index = ranges.groupBy(_._1).toSeq.sortBy(_._1).reverse.map { case (f, rs) =>
+      rs.sortBy(_._2).map { case (_, p, lo, hi) => s""""$p": [$lo, $hi]""" }
+        .mkString(s"""  {"file": "$f", "ranges": {""", ", ", "}}")
+    }.mkString("{\"files\": [\n", ",\n", "\n]}\n")
+    Files.writeString(dir.resolve("index.json"), index)
+    Files.writeString(dir.resolve("meta.json"),
+      """{"partitions": 2, "config": {"cleanup.policy": "compact", "note": "quo\"te\\back"}}""")
+    Files.createDirectories(java.nio.file.Paths.get(s"${fs.root}/groups/g"))
+    Files.writeString(java.nio.file.Paths.get(s"${fs.root}/groups/g/t.json"), """{"0": 5, "1": 7}""")
+    val again = new FileStorage(spark, fs.root)
+    assert(again.partitions("t") == 2)
+    assert(again.getConfig("t") == Map("cleanup.policy" -> "compact", "note" -> "quo\"te\\back"))
+    assert(again.committed("g", "t") == Map(0 -> 5L, 1 -> 7L))
+    assert(wm(again.watermarks("t")) == ranges.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (p, rs) => (p, rs.map(_._3).min, rs.map(_._4).max) })
+    // the index was read, not rebuilt: an empty produce leaves it as written
+    again.produce("t", sampleBatch(5).limit(0))
+    assert(Files.readString(dir.resolve("index.json")) == index)
+    assertConsistent(again, "t")
+  }
+
+  test("unparseable metadata: the index is rebuilt, a meta or group file fails naming the file") {
+    val fs = freshStorage()
+    fs.createTopic("t", 2)
+    fs.produce("t", sampleBatch(20))
+    val dir = java.nio.file.Paths.get(s"${fs.root}/topics/t")
+    val index = dir.resolve("index.json")
+    Files.writeString(index, Files.readString(index).dropRight(5)) // a torn write
+    assertConsistent(fs, "t")
+    assert(Files.readString(index).endsWith("\n]}\n"))
+    fs.commit("g", "t", Map(0 -> 3L, 1 -> 4L))
+    val group = java.nio.file.Paths.get(s"${fs.root}/groups/g/t.json")
+    Files.writeString(group, """{"0": 3, "1"""")
+    assert(intercept[IllegalStateException](fs.committed("g", "t")).getMessage.contains(group.toString))
+    Files.writeString(dir.resolve("meta.json"), """{"partitions": 2, "config": {"a": "x"""")
+    assert(intercept[IllegalStateException](fs.partitions("t")).getMessage
+      .contains(dir.resolve("meta.json").toString))
   }
 
   test("deleteRecords drops the index; produce continues the offsets") {
