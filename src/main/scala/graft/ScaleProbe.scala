@@ -82,7 +82,7 @@ object ScaleProbe {
   // lossless rows above). Image content is block-constant so JPEG stays
   // DC-dominated; the coded-formula G.711 paths are stateless decodes
   // where formula bytes are safe.
-  private def probeImageCrossMedia(id: Long): graft.llm.Multimodal.Media = {
+  private[graft] def probeImageCrossMedia(id: Long): graft.llm.Multimodal.Media = {
     import graft.llm.{Hashing, Multimodal, Tiff}
     val local = id % 1000000L
     val variant = ((id / 1000000L) % 3L).toInt

@@ -22,7 +22,7 @@ import graft.llm.Multimodal.Media
   * degrades to a short prefix or a None, never a silently wrong value.
   *
   * Corrupt-input posture: prefix rule, never a throw; gzipped shards
-  * ride [[Warc.gunzipAll]]'s bomb guard.
+  * ride [[graft.serde.Zlib.gunzipAll]]'s bomb guard.
   *
   * Reference scope: kafi reads single files only (the kafi/fs module);
   * the archive layer is part of the LLM-pipeline extension.
@@ -81,7 +81,7 @@ object Archives {
     try {
       val b =
         if ((raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B)
-          Warc.gunzipAll(raw).getOrElse(return Nil)
+          graft.serde.Zlib.gunzipAll(raw).getOrElse(return Nil)
         else raw
       if (b.length < 512) return Nil
       val out = Seq.newBuilder[TarEntry]
@@ -141,7 +141,7 @@ object Archives {
     try {
       val b =
         if ((raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B)
-          Warc.gunzipAll(raw).getOrElse(return Nil)
+          graft.serde.Zlib.gunzipAll(raw).getOrElse(return Nil)
         else raw
       if (b.length < 512) return Nil
       val out = Seq.newBuilder[WdsSample]
@@ -255,21 +255,9 @@ object Archives {
         if (lho + 30 <= n && b(lho) == 'P' && b(lho + 1) == 'K' && b(lho + 2) == 3 && b(lho + 3) == 4) {
           val dataOff = lho + 30 + u16(lho + 26) + u16(lho + 28)
           if (dataOff + clen <= n) {
-            val raw = java.util.Arrays.copyOfRange(b, dataOff, (dataOff + clen).toInt)
             val plain: Option[Array[Byte]] = method match {
-              case 0 => Some(raw)
-              case 8 =>
-                try graft.serde.Zlib.withInflater(nowrap = true) { inf =>
-                  inf.setInput(raw)
-                  val outB = new Array[Byte](ulen.toInt)
-                  var got = 0
-                  while (got < outB.length && !inf.finished()) {
-                    val k = inf.inflate(outB, got, outB.length - got)
-                    if (k == 0 && inf.needsInput()) throw new java.io.EOFException
-                    got += k
-                  }
-                  if (got == outB.length) Some(outB) else None
-                } catch { case scala.util.control.NonFatal(_) => None }
+              case 0 => Some(java.util.Arrays.copyOfRange(b, dataOff, (dataOff + clen).toInt))
+              case 8 => graft.serde.Zlib.inflateExact(b, dataOff, clen.toInt, nowrap = true, ulen.toInt)
               case _ => None
             }
             plain.foreach { pb =>
@@ -398,7 +386,7 @@ object Archives {
     * stream, not a text file with meaningful blank rows. */
   case class JsonlLine(doc_id: Long, line_idx: Int, line: String)
 
-  /** Multi-frame zstd with the [[Warc.gunzipAll]] bomb guard. The
+  /** Multi-frame zstd with the [[graft.serde.Zlib.gunzipAll]] bomb guard. The
     * recycling buffer pool reuses the stream's working buffers across
     * records on the same thread (r15 optimization): the default NoPool
     * allocates and frees a fresh native-sized buffer per record, and at
@@ -446,7 +434,7 @@ object Archives {
   private[graft] def decompressAny(b: Array[Byte]): Option[Array[Byte]] = {
     if (b == null) None
     else if (b.length < 6) Some(b)
-    else if ((b(0) & 0xFF) == 0x1F && (b(1) & 0xFF) == 0x8B) Warc.gunzipAll(b)
+    else if ((b(0) & 0xFF) == 0x1F && (b(1) & 0xFF) == 0x8B) graft.serde.Zlib.gunzipAll(b)
     else if ((b(0) & 0xFF) == 0x28 && (b(1) & 0xFF) == 0xB5 &&
       (b(2) & 0xFF) == 0x2F && (b(3) & 0xFF) == 0xFD) zstdAll(b)
     else if ((b(0) & 0xFF) == 0xFD && b(1) == '7' && b(2) == 'z' &&

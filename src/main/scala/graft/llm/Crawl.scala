@@ -197,7 +197,7 @@ object Crawl {
     if (raw == null || raw.length < 2) return Nil
     val bytes =
       if ((raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B)
-        Warc.gunzipAll(raw).getOrElse(return Nil)
+        graft.serde.Zlib.gunzipAll(raw).getOrElse(return Nil)
       else raw
     parseSitemap(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
   }

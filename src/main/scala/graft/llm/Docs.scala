@@ -283,7 +283,7 @@ object Docs {
       else "zip"
     }
     if ((b(0) & 0xFF) == 0x1F && (b(1) & 0xFF) == 0x8B && depth == 0)
-      return Warc.gunzipAll(b).map(detectFormat(_, 1)).getOrElse("unknown")
+      return graft.serde.Zlib.gunzipAll(b).map(detectFormat(_, 1)).getOrElse("unknown")
     val head = new String(b, 0, math.min(b.length, 512),
       java.nio.charset.StandardCharsets.ISO_8859_1)
     val t = head.dropWhile(c => c == ' ' || c == '\t' || c == '\n' || c == '\r')
@@ -304,7 +304,7 @@ object Docs {
     * from_json plan — JSON is not a byte-magic format.) */
   private[graft] def extractAny(b0: Array[Byte]): Option[(String, String)] = {
     val gz = b0 != null && b0.length > 2 && (b0(0) & 0xFF) == 0x1F && (b0(1) & 0xFF) == 0x8B
-    val b = if (gz) Warc.gunzipAll(b0).getOrElse(return None) else b0
+    val b = if (gz) graft.serde.Zlib.gunzipAll(b0).getOrElse(return None) else b0
     detectFormat(b) match {
       case "pdf" => Some(("pdf", Pdf.pagesOf(0L, b).map(_.text).mkString("\n")))
       case "docx" => docxText(b).map(("docx", _))

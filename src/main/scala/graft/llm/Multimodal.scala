@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * [[decodePngGray]]), GIF (LZW is a pure-JVM dictionary walk —
   * [[decodeGifGray]] incl. de-interlace), baseline AND progressive JPEG
   * (Huffman + DC prediction + dequant + IDCT implemented from the T.81
-  * math — [[decodeJpegGray]] / [[decodeJpegProgressive]] with the full
+  * math — [[decodeJpegGray]], one decoder for both, with the full
   * successive-approximation refinement walk), TIFF (strips with
   * none/PackBits/LZW compression — [[Tiff.decodeGray]], cross-validated
   * against the JDK's own ImageIO plugins in MediaInteropSpec), WAV
@@ -503,71 +503,216 @@ object Multimodal {
       }
     }
 
-  /** REAL baseline JPEG pixel decode — no codec library, just the math
-    * the format is made of: marker walk (DQT 8-bit tables, DHT canonical
-    * Huffman build, SOF0 frame, DRI restart interval, SOS scan) →
-    * MSB-first entropy decode with byte unstuffing (FF00) and RSTn
-    * restarts (byte-align + DC-predictor reset) → per-block DC
-    * prediction + AC run-length through the zigzag → dequant → separable
-    * double-precision IDCT → level shift, clamp. Output is the LUMA
-    * plane: for 3-component YCbCr the Y component IS BT.601 luma, so
-    * chroma blocks are entropy-decoded (the stream is serial — they
-    * cannot be skipped) and discarded.
+  /** JPEG zigzag order: zigzag index → natural (row-major) index. */
+  private val JpegZigzag = Array(
+    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
+    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
+    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
+    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
+
+  /** The DCT basis cos((2x+1)uπ/16), indexed (x)(u), and its C(u) scale —
+    * shared by the decoder's IDCT and the fixture encoders' forward DCT. */
+  private val DctCos = Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16.0))
+  private val DctC = Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
+
+  /** A DHT table with its canonical code boundaries per length (T.81
+    * F.2.2.3 DECODE). */
+  private final class JpegHuff(val counts: Array[Int], val vals: Array[Int]) {
+    val minCode = new Array[Int](17)
+    val maxCode = new Array[Int](17)
+    val valPtr = new Array[Int](17)
+    locally {
+      var code = 0; var k = 0
+      var l = 1
+      while (l <= 16) {
+        valPtr(l) = k; minCode(l) = code
+        code += counts(l - 1); k += counts(l - 1)
+        maxCode(l) = code - 1
+        code <<= 1
+        l += 1
+      }
+    }
+  }
+
+  /** Entropy-coded segment reader from `pos`: MSB-first bits with FF00
+    * unstuffing; a real marker ends the data (`pos` then stays on its FF).
+    * Every read returns -1 once the data is exhausted. */
+  private final class JpegBits(b: Array[Byte], var pos: Int) {
+    private var buf = 0
+    private var cnt = 0
+    var hitMarker = false
+
+    def bit(): Int = {
+      if (cnt == 0) {
+        if (hitMarker || pos >= b.length) return -1
+        val v = b(pos) & 0xFF
+        if (v == 0xFF) {
+          if (pos + 1 >= b.length) return -1
+          if ((b(pos + 1) & 0xFF) == 0x00) pos += 2 // stuffed FF
+          else { hitMarker = true; return -1 }
+        } else pos += 1
+        buf = v; cnt = 8
+      }
+      cnt -= 1
+      (buf >> cnt) & 1
+    }
+
+    def bits(n: Int): Int = {
+      var v = 0; var i = 0
+      while (i < n) { val x = bit(); if (x < 0) return -1; v = (v << 1) | x; i += 1 }
+      v
+    }
+
+    def huff(t: JpegHuff): Int = {
+      if (t == null) return -1
+      var code = bit()
+      if (code < 0) return -1
+      var l = 1
+      while (l <= 16) {
+        if (t.counts(l - 1) > 0 && code <= t.maxCode(l)) {
+          val idx = t.valPtr(l) + code - t.minCode(l)
+          if (idx >= t.vals.length) return -1
+          return t.vals(idx)
+        }
+        val x = bit()
+        if (x < 0) return -1
+        code = (code << 1) | x
+        l += 1
+      }
+      -1
+    }
+
+    /** Between restart intervals: drop the pad bits and consume the RSTn
+      * that must follow (`pos` is on its FF whether or not `bit` saw it). */
+    def restart(): Boolean = {
+      cnt = 0; hitMarker = false
+      if (pos + 1 >= b.length || (b(pos) & 0xFF) != 0xFF) return false
+      val m = b(pos + 1) & 0xFF
+      if (m < 0xD0 || m > 0xD7) return false
+      pos += 2
+      true
+    }
+  }
+
+  /** T.81 F.2.2.1 EXTEND: the `t`-bit magnitude `v` as a signed value. */
+  private def jpegExtend(v: Int, t: Int): Int =
+    if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
+
+  /** Separable double-precision IDCT of one natural-order 8×8 block,
+    * level-shifted and clamped into `out`. */
+  private def jpegIdct(coef: Array[Int], out: Array[Int]): Unit = {
+    val tmp = new Array[Double](64)
+    var x = 0
+    while (x < 8) { // rows: u -> x
+      var v = 0
+      while (v < 8) {
+        var s = 0.0; var u = 0
+        while (u < 8) { s += DctC(u) * coef(v * 8 + u) * DctCos(x)(u); u += 1 }
+        tmp(v * 8 + x) = s * 0.5
+        v += 1
+      }
+      x += 1
+    }
+    var y = 0
+    while (y < 8) { // cols: v -> y
+      var x2 = 0
+      while (x2 < 8) {
+        var s = 0.0; var v = 0
+        while (v < 8) { s += DctC(v) * tmp(v * 8 + x2) * DctCos(y)(v); v += 1 }
+        val p = math.round(s * 0.5).toInt + 128
+        out(y * 8 + x2) = math.max(0, math.min(255, p))
+        x2 += 1
+      }
+      y += 1
+    }
+  }
+
+  /** Copy an 8×8 block to block position (bx, by) of a w×h plane, clipped
+    * at the right and bottom edges. */
+  private def placeBlock(px8: Array[Int], bx: Int, by: Int, w: Int, h: Int,
+      plane: Array[Int]): Unit = {
+    var yy = 0
+    while (yy < 8) {
+      val gy = by * 8 + yy
+      if (gy < h) {
+        var xx = 0
+        while (xx < 8) {
+          val gx = bx * 8 + xx
+          if (gx < w) plane(gy * w + gx) = px8(yy * 8 + xx)
+          xx += 1
+        }
+      }
+      yy += 1
+    }
+  }
+
+  /** REAL JPEG pixel decode, baseline (SOF0) and progressive (SOF2) — no
+    * codec library, just the math the format is made of. One marker walk
+    * reads DQT (8-bit tables), DHT (canonical Huffman), the frame header,
+    * DRI and each SOS; both modes share the bit reader (FF00 unstuffing,
+    * RSTn restarts that byte-align and reset the DC predictors), the
+    * dequantization through the zigzag, and one separable double-precision
+    * IDCT with level shift and clamp. Output is the LUMA plane: for
+    * 3-component YCbCr the Y component IS BT.601 luma, so chroma is
+    * entropy-decoded (the stream is serial) and never IDCT'd. The two
+    * modes differ only in the entropy layer (T.81 Annex G):
     *
-    * Scope: baseline DCT (SOF0) only, 8-bit precision, 1 or 3
-    * components, Y sampling factors up to 2×2 with 1×1 chroma (the
-    * common 4:4:4/4:2:2/4:2:0 layouts); progressive (SOF2),
-    * arithmetic-coded, and 12-bit variants return None — scoped, not
-    * silently wrong. Corrupt input (bad Huffman codes, truncated
-    * entropy data, missing tables) returns None, never a task failure.
-    * DC-only streams (constant 8×8 blocks) decode bit-exactly — the
-    * property the oracle fixtures use; general AC content carries the
-    * usual ±1 float-IDCT rounding, which perceptual hashing absorbs. */
+    *  - sequential: one interleaved scan, DC prediction + AC run-length
+    *    per block; each luma block is IDCT'd as it is decoded, so no
+    *    coefficient plane is kept. The scan ends the decode.
+    *  - progressive: coefficients accumulate across scans in per-component
+    *    planes and the IDCT runs once at EOI. DC scans (interleaved or
+    *    single-component): the first pass (Ah=0) decodes diffs shifted
+    *    left by Al, refinements (Ah>0) add one bit per block. AC scans are
+    *    single-component: the first pass decodes the Ss..Se band with
+    *    EOBRUN batching, refinement is the G.1.2.3 correction-bit walk
+    *    (correction bits for nonzero history, ±1<<Al births, EOBRUN tails
+    *    that still carry corrections). DHT/DQT/DRI may be redefined
+    *    between scans; RSTn also resets the EOBRUN. Interleaved DC scans
+    *    walk MCUs with each component's hi×vi blocks at its T.81 A.2.4
+    *    PADDED stride; non-interleaved scans walk the component's own
+    *    raster. Chroma coefficients are STORED (refinement correction bits
+    *    branch on coefficient history).
+    *
+    * Scope: 8-bit precision, 1 or 3 components, Y sampling up to 2×2 with
+    * 1×1 chroma (the 4:4:4/4:2:2/4:2:0 layouts web JPEGs ship); extended,
+    * lossless, arithmetic-coded and 12-bit variants return None — scoped,
+    * not silently wrong. So does a progressive scan with Ss=0 and Se≠0
+    * (T.81 B.2.3: DC and AC never share a progressive scan). Corrupt
+    * input (bad Huffman codes, truncated entropy data, missing tables)
+    * returns None, never a task failure. DC-only streams (constant 8×8
+    * blocks) decode bit-exactly — the property the oracle fixtures use;
+    * general AC content carries the usual ±1 float-IDCT rounding, which
+    * perceptual hashing absorbs. */
   private[graft] def decodeJpegGray(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     if (b == null || b.length < 4 || (b(0) & 0xFF) != 0xFF || (b(1) & 0xFF) != 0xD8) return None
     val qt = new Array[Array[Int]](4) // quant tables, zigzag order
-    // huffman tables: (class 0 dc / 1 ac)(id) -> (maxcode/valptr decode arrays)
-    case class Huff(counts: Array[Int], vals: Array[Int]) {
-      // canonical code boundaries per length (JPEG F.2.2.3 DECODE)
-      val (minCode, maxCode, valPtr) = {
-        val mn = new Array[Int](17); val mx = new Array[Int](17); val vp = new Array[Int](17)
-        var code = 0; var k = 0
-        var l = 1
-        while (l <= 16) {
-          vp(l) = k; mn(l) = code
-          code += counts(l - 1); k += counts(l - 1)
-          mx(l) = code - 1
-          code <<= 1
-          l += 1
-        }
-        (mn, mx, vp)
-      }
-    }
-    val huff = Array.ofDim[Huff](2, 4)
-    var w = 0; var h = 0
-    var nComp = 0
-    var compId: Array[Int] = null; var compHV: Array[Int] = null; var compQ: Array[Int] = null
+    val huff = Array.ofDim[JpegHuff](2, 4) // (class 0 dc / 1 ac)(id)
+    var sof = 0 // the frame's SOFn marker once read: 0xC0 or 0xC2
+    var w = 0; var h = 0; var nComp = 0
+    var compId: Array[Int] = null; var compQ: Array[Int] = null
+    var compH: Array[Int] = null; var compV: Array[Int] = null
+    var mcusX = 0; var mcusY = 0
     var restartInterval = 0
+    // progressive only: per-component coefficient planes (natural order)
+    // at the PADDED block stride interleaved MCUs address (T.81 A.2.4),
+    // and the raster block dims non-interleaved scans walk
+    var coefs: Array[Array[Int]] = null
+    var cBw: Array[Int] = null; var cBh: Array[Int] = null; var padBw: Array[Int] = null
     var pos = 2
-    val zigzag = Array(
-      0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-      12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-      35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-      58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-    var sosAt = -1
-    var scanComp: Array[(Int, Int, Int)] = null // (compIdx, dcTbl, acTbl)
-    // ---- marker walk to SOS ----
-    var walking = true
-    while (walking) {
-      if (pos + 4 > b.length) return None
-      if ((b(pos) & 0xFF) != 0xFF) return None
+    while (true) {
+      if (pos + 2 > b.length || (b(pos) & 0xFF) != 0xFF) return None
       val m = b(pos + 1) & 0xFF
-      if (m == 0xD8 || (m >= 0xD0 && m <= 0xD7) || m == 0x01) { pos += 2 } // standalone
-      else {
+      if (m == 0xD8 || (m >= 0xD0 && m <= 0xD7) || m == 0x01) pos += 2 // standalone
+      else if (m == 0xD9) { // EOI: completes a progressive frame; before a scan it is an error
+        return if (sof == 0xC2) progressiveLuma(w, h, coefs(0), padBw(0), qt(compQ(0))) else None
+      } else {
+        if (pos + 4 > b.length) return None
         val len = ((b(pos + 2) & 0xFF) << 8) | (b(pos + 3) & 0xFF)
         if (len < 2 || pos + 2 + len > b.length) return None
         val seg = pos + 4
         val segEnd = pos + 2 + len
+        pos = segEnd
         m match {
           case 0xDB => // DQT
             var p = seg
@@ -585,210 +730,320 @@ object Multimodal {
               val counts = Array.tabulate(16)(i => b(p + 1 + i) & 0xFF)
               val n = counts.sum
               if (p + 17 + n > segEnd || n > 256) return None
-              huff(tc)(th) = Huff(counts, Array.tabulate(n)(i => b(p + 17 + i) & 0xFF))
+              huff(tc)(th) = new JpegHuff(counts, Array.tabulate(n)(i => b(p + 17 + i) & 0xFF))
               p += 17 + n
             }
-          case 0xC0 => // SOF0 baseline
-            if (b(seg) != 8) return None // 8-bit precision
+          case 0xC0 | 0xC2 => // SOF0 baseline / SOF2 progressive
+            // a progressive frame header is the only one; a sequential one
+            // may be restated before its scan (the last one counts)
+            if (sof == 0xC2 || (sof == 0xC0 && m == 0xC2) || b(seg) != 8) return None
             h = ((b(seg + 1) & 0xFF) << 8) | (b(seg + 2) & 0xFF)
             w = ((b(seg + 3) & 0xFF) << 8) | (b(seg + 4) & 0xFF)
             nComp = b(seg + 5) & 0xFF
             if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3) ||
                 w.toLong * h > (1L << 28)) return None
-            compId = new Array[Int](nComp); compHV = new Array[Int](nComp)
-            compQ = new Array[Int](nComp)
+            compId = new Array[Int](nComp); compQ = new Array[Int](nComp)
+            compH = new Array[Int](nComp); compV = new Array[Int](nComp)
             var c = 0
             while (c < nComp) {
               compId(c) = b(seg + 6 + c * 3) & 0xFF
-              compHV(c) = b(seg + 7 + c * 3) & 0xFF
+              val hv = b(seg + 7 + c * 3) & 0xFF
+              compH(c) = hv >> 4; compV(c) = hv & 0x0F
+              // luma up to 2x2; chroma must be 1x1 (4:4:4 / 4:2:2 / 4:2:0)
+              if (c == 0) {
+                if (compH(0) < 1 || compH(0) > 2 || compV(0) < 1 || compV(0) > 2) return None
+              } else if (hv != 0x11) return None
               compQ(c) = b(seg + 8 + c * 3) & 0xFF
               if (compQ(c) > 3) return None // quant table ids are 0-3
               c += 1
             }
-            // luma up to 2x2; chroma must be 1x1 (4:4:4 / 4:2:2 / 4:2:0)
-            if ((compHV(0) >> 4) < 1 || (compHV(0) >> 4) > 2 ||
-                (compHV(0) & 15) < 1 || (compHV(0) & 15) > 2) return None
-            if (nComp == 3 && (compHV(1) != 0x11 || compHV(2) != 0x11)) return None
-          case 0xC1 | 0xC2 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
+            mcusX = (w + 8 * compH(0) - 1) / (8 * compH(0))
+            mcusY = (h + 8 * compV(0) - 1) / (8 * compV(0))
+            if (m == 0xC2) {
+              // chroma raster dims collapse to the MCU grid (its pixel
+              // dims are ceil(w/h0) × ceil(h/v0), one block per MCU)
+              cBw = Array.tabulate(nComp)(c => if (c == 0) (w + 7) / 8 else mcusX)
+              cBh = Array.tabulate(nComp)(c => if (c == 0) (h + 7) / 8 else mcusY)
+              padBw = Array.tabulate(nComp)(c => mcusX * compH(c))
+              coefs = Array.tabulate(nComp)(c => new Array[Int](padBw(c) * mcusY * compV(c) * 64))
+            }
+            sof = m
+          case 0xC1 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
                0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
-            return None // extended/progressive/lossless/arithmetic: scoped out
+            return None // extended/lossless/arithmetic: scoped out
           case 0xDD => // DRI
             restartInterval = ((b(seg) & 0xFF) << 8) | (b(seg + 1) & 0xFF)
           case 0xDA => // SOS
+            if (sof == 0) return None
             val ns = b(seg) & 0xFF
-            if (ns != nComp || compId == null) return None
-            scanComp = Array.tabulate(ns) { i =>
-              val cid = b(seg + 1 + i * 2) & 0xFF
+            // a sequential frame is one interleaved scan of every component
+            if (if (sof == 0xC0) ns != nComp else ns < 1 || ns > nComp) return None
+            val scanComp = Array.tabulate(ns) { i =>
+              val ci = compId.indexOf(b(seg + 1 + i * 2) & 0xFF)
               val tbl = b(seg + 2 + i * 2) & 0xFF
-              val ci = compId.indexOf(cid)
               if (ci < 0 || (tbl >> 4) > 3 || (tbl & 0x0F) > 3) return None
               (ci, tbl >> 4, tbl & 0x0F)
             }
-            sosAt = segEnd
-            walking = false
-          case 0xD9 => return None // EOI before SOS
+            val in = new JpegBits(b, segEnd)
+            if (sof == 0xC0) {
+              // ---- sequential: the whole image in this scan ----
+              val luma = new Array[Int](w * h)
+              val pred = new Array[Int](nComp)
+              val coef = new Array[Int](64)
+              val px8 = new Array[Int](64)
+              var mcu = 0
+              while (mcu < mcusX * mcusY) {
+                if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+                  if (!in.restart()) return None
+                  java.util.Arrays.fill(pred, 0)
+                }
+                val mx = mcu % mcusX; val my = mcu / mcusX
+                var sc = 0
+                while (sc < ns) {
+                  val (ci, dcT, acT) = scanComp(sc)
+                  val blocks = if (ci == 0) compH(0) * compV(0) else 1
+                  var blk = 0
+                  while (blk < blocks) {
+                    java.util.Arrays.fill(coef, 0)
+                    val q = qt(compQ(ci))
+                    if (q == null) return None
+                    // DC
+                    val t = in.huff(huff(0)(dcT))
+                    if (t < 0 || t > 11) return None
+                    val diffBits = in.bits(t)
+                    if (diffBits < 0) return None
+                    pred(ci) += jpegExtend(diffBits, t)
+                    coef(0) = pred(ci) * q(0)
+                    // AC
+                    var k = 1
+                    var eob = false
+                    while (k < 64 && !eob) {
+                      val rs = in.huff(huff(1)(acT))
+                      if (rs < 0) return None
+                      if (rs == 0) eob = true
+                      else if (rs == 0xF0) k += 16
+                      else {
+                        k += rs >> 4
+                        val s = rs & 15
+                        if (k > 63) return None
+                        val vb = in.bits(s)
+                        if (vb < 0) return None
+                        coef(JpegZigzag(k)) = jpegExtend(vb, s) * q(k)
+                        k += 1
+                      }
+                    }
+                    if (ci == 0) { // blocks raster within the MCU
+                      jpegIdct(coef, px8)
+                      placeBlock(px8, mx * compH(0) + blk % compH(0),
+                        my * compV(0) + blk / compH(0), w, h, luma)
+                    }
+                    blk += 1
+                  }
+                  sc += 1
+                }
+                mcu += 1
+              }
+              return Some((w, h, luma))
+            }
+            // ---- progressive: one scan's refinement of the planes ----
+            val ss = b(seg + 1 + ns * 2) & 0xFF
+            val se = b(seg + 2 + ns * 2) & 0xFF
+            val ahAl = b(seg + 3 + ns * 2) & 0xFF
+            val ah = ahAl >> 4; val al = ahAl & 0x0F
+            if (ss > se || se > 63) return None
+            if (ss == 0 && se != 0) return None // T.81 B.2.3: Se = 0 when Ss = 0
+            if (ss > 0 && ns != 1) return None // AC scans are single-component
+            val pred = new Array[Int](nComp)
+            var eobrun = 0
+            // one DC coefficient (first pass or refinement) at `base`
+            def dcOne(ci: Int, dcT: Int, base: Int): Boolean = {
+              if (ah == 0) {
+                val t = in.huff(huff(0)(dcT))
+                if (t < 0 || t > 11) return false
+                val bits = in.bits(t)
+                if (bits < 0) return false
+                pred(ci) += jpegExtend(bits, t)
+                coefs(ci)(base) = pred(ci) << al
+              } else {
+                val bit = in.bit()
+                if (bit < 0) return false
+                if (bit == 1) coefs(ci)(base) |= 1 << al
+              }
+              true
+            }
+            if (ss == 0 && ns > 1) {
+              // ---- interleaved DC scan: MCU walk, each component
+              // contributing its hi×vi blocks at the PADDED stride ----
+              var mcu = 0
+              while (mcu < mcusX * mcusY) {
+                if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+                  if (!in.restart()) return None
+                  java.util.Arrays.fill(pred, 0)
+                }
+                val mx = mcu % mcusX; val my = mcu / mcusX
+                var sc = 0
+                while (sc < ns) {
+                  val (ci, dcT, _) = scanComp(sc)
+                  var vb = 0
+                  while (vb < compV(ci)) {
+                    var hb = 0
+                    while (hb < compH(ci)) {
+                      val base = ((my * compV(ci) + vb) * padBw(ci) +
+                        (mx * compH(ci) + hb)) * 64
+                      if (!dcOne(ci, dcT, base)) return None
+                      hb += 1
+                    }
+                    vb += 1
+                  }
+                  sc += 1
+                }
+                mcu += 1
+              }
+            } else {
+              // ---- single-component scan (DC, or any AC): the
+              // component's own raster, addressed at the padded stride ----
+              val (ci, dcT, acT) = scanComp(0)
+              val cf = coefs(ci)
+              var blk = 0
+              val total = cBw(ci) * cBh(ci)
+              while (blk < total) {
+                if (restartInterval > 0 && blk > 0 && blk % restartInterval == 0) {
+                  if (!in.restart()) return None
+                  java.util.Arrays.fill(pred, 0)
+                  eobrun = 0
+                }
+                val base = ((blk / cBw(ci)) * padBw(ci) + blk % cBw(ci)) * 64
+                if (ss == 0) {
+                  if (!dcOne(ci, dcT, base)) return None
+                } else if (ah == 0) {
+                  // first AC pass with EOBRUN batching
+                  if (eobrun > 0) eobrun -= 1
+                  else {
+                    var k = ss
+                    var done = false
+                    while (k <= se && !done) {
+                      val rs = in.huff(huff(1)(acT))
+                      if (rs < 0) return None
+                      val r = rs >> 4; val s = rs & 15
+                      if (s == 0) {
+                        if (r < 15) {
+                          val extra = in.bits(r)
+                          if (extra < 0) return None
+                          eobrun = (1 << r) + extra - 1
+                          done = true
+                        } else k += 16 // ZRL
+                      } else {
+                        k += r
+                        if (k > se) return None
+                        val vb = in.bits(s)
+                        if (vb < 0) return None
+                        cf(base + JpegZigzag(k)) = jpegExtend(vb, s) << al
+                        k += 1
+                      }
+                    }
+                  }
+                } else {
+                  // AC refinement (T.81 G.1.2.3)
+                  val p1 = 1 << al
+                  val m1 = -1 << al
+                  var k = ss
+                  if (eobrun == 0) {
+                    var done = false
+                    while (k <= se && !done) {
+                      val rs = in.huff(huff(1)(acT))
+                      if (rs < 0) return None
+                      var r = rs >> 4; val s = rs & 15
+                      var newVal = 0
+                      if (s == 0) {
+                        if (r < 15) {
+                          val extra = in.bits(r)
+                          if (extra < 0) return None
+                          eobrun = (1 << r) + extra
+                          done = true
+                        }
+                        // r == 15: ZRL — skip 16 zero-history coefs below
+                      } else {
+                        if (s != 1) return None // refinement births are ±1
+                        val sign = in.bit()
+                        if (sign < 0) return None
+                        newVal = if (sign == 1) p1 else m1
+                      }
+                      if (!done) {
+                        // advance over the band: correction bits for
+                        // nonzero history, count down r zero-history slots
+                        var placed = false
+                        while (k <= se && !placed) {
+                          val z = base + JpegZigzag(k)
+                          if (cf(z) != 0) {
+                            val bit = in.bit()
+                            if (bit < 0) return None
+                            if (bit == 1 && (cf(z) & p1) == 0)
+                              cf(z) += (if (cf(z) >= 0) p1 else m1)
+                          } else {
+                            if (r == 0) {
+                              if (newVal != 0) cf(z) = newVal
+                              placed = true
+                            } else r -= 1
+                          }
+                          k += 1
+                        }
+                        if (!placed && newVal != 0) return None // band overflow
+                      }
+                    }
+                  }
+                  if (eobrun > 0) {
+                    // EOB tail: correction bits for every remaining
+                    // nonzero coefficient in the band
+                    while (k <= se) {
+                      val z = base + JpegZigzag(k)
+                      if (cf(z) != 0) {
+                        val bit = in.bit()
+                        if (bit < 0) return None
+                        if (bit == 1 && (cf(z) & p1) == 0)
+                          cf(z) += (if (cf(z) >= 0) p1 else m1)
+                      }
+                      k += 1
+                    }
+                    eobrun -= 1
+                  }
+                }
+                blk += 1
+              }
+            }
+            // skip any pad bits: the walk continues at the next marker
+            // (RSTn inside the scan were consumed by `restart`)
+            while (!in.hitMarker) {
+              if (in.pos >= b.length) return None
+              if ((b(in.pos) & 0xFF) == 0xFF && in.pos + 1 < b.length &&
+                  (b(in.pos + 1) & 0xFF) != 0x00) in.hitMarker = true
+              else in.pos += 1
+            }
+            pos = in.pos
           case _ => () // APPn / COM / others: skip
         }
-        pos = segEnd
-      }
-      if (sosAt >= 0) walking = false
-    }
-    if (sosAt < 0 || w == 0) return None
-    // ---- entropy-coded segment: MSB-first bit reader with unstuffing ----
-    var bp = sosAt // byte position
-    var bitBuf = 0; var bitCnt = 0
-    var hitMarker = false
-    def fillBit(): Int = { // next bit, or -1 on exhaustion/marker
-      if (bitCnt == 0) {
-        if (hitMarker || bp >= b.length) return -1
-        val v = b(bp) & 0xFF
-        if (v == 0xFF) {
-          if (bp + 1 >= b.length) return -1
-          val nxt = b(bp + 1) & 0xFF
-          if (nxt == 0x00) { bp += 2 } // stuffed FF
-          else { hitMarker = true; return -1 } // real marker: entropy data ends
-        } else bp += 1
-        bitBuf = v; bitCnt = 8
-      }
-      bitCnt -= 1
-      (bitBuf >> bitCnt) & 1
-    }
-    def readBits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { val bit = fillBit(); if (bit < 0) return -1; v = (v << 1) | bit; i += 1 }
-      v
-    }
-    def decodeHuff(t: Huff): Int = { // F.2.2.3
-      if (t == null) return -1
-      var code = fillBit()
-      if (code < 0) return -1
-      var l = 1
-      while (l <= 16) {
-        if (t.counts(l - 1) > 0 && code <= t.maxCode(l)) {
-          val idx = t.valPtr(l) + code - t.minCode(l)
-          if (idx >= t.vals.length) return -1
-          return t.vals(idx)
-        }
-        val bit = fillBit()
-        if (bit < 0) return -1
-        code = (code << 1) | bit
-        l += 1
-      }
-      -1
-    }
-    def extend(v: Int, t: Int): Int = if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-    // ---- IDCT (separable, double) ----
-    val cosT = Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16.0))
-    val cu = Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
-    def idct(coef: Array[Int], out: Array[Int]): Unit = {
-      val tmp = new Array[Double](64)
-      var x = 0
-      while (x < 8) { // rows: u -> x
-        var v = 0
-        while (v < 8) {
-          var s = 0.0; var u = 0
-          while (u < 8) { s += cu(u) * coef(v * 8 + u) * cosT(x)(u); u += 1 }
-          tmp(v * 8 + x) = s * 0.5
-          v += 1
-        }
-        x += 1
-      }
-      var y = 0
-      while (y < 8) { // cols: v -> y
-        var x2 = 0
-        while (x2 < 8) {
-          var s = 0.0; var v = 0
-          while (v < 8) { s += cu(v) * tmp(v * 8 + x2) * cosT(y)(v); v += 1 }
-          val p = math.round(s * 0.5).toInt + 128
-          out(y * 8 + x2) = math.max(0, math.min(255, p))
-          x2 += 1
-        }
-        y += 1
       }
     }
-    // ---- MCU walk ----
-    val hY = compHV(0) >> 4; val vY = compHV(0) & 15
-    val mcuW = 8 * hY; val mcuH = 8 * vY
-    val mcusX = (w + mcuW - 1) / mcuW
-    val mcusY = (h + mcuH - 1) / mcuH
+    None
+  }
+
+  /** The progressive frame's luma plane at EOI: every raster block of the
+    * coefficient plane (at its padded stride) dequantized, IDCT'd and
+    * placed. */
+  private def progressiveLuma(w: Int, h: Int, cf: Array[Int], stride: Int,
+      q: Array[Int]): Option[(Int, Int, Array[Int])] = {
+    if (q == null) return None
+    val bw = (w + 7) / 8; val bh = (h + 7) / 8
     val luma = new Array[Int](w * h)
-    val pred = new Array[Int](nComp)
-    val coef = new Array[Int](64)
+    val block = new Array[Int](64)
     val px8 = new Array[Int](64)
-    var mcu = 0
-    val totalMcus = mcusX * mcusY
-    while (mcu < totalMcus) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        // byte-aligned RSTn between intervals: drop pad bits, consume the
-        // marker (bp points at its FF whether fillBit saw it or not —
-        // data-byte reads advance past their byte), reset DC predictors
-        bitCnt = 0
-        hitMarker = false
-        if (bp + 1 >= b.length || (b(bp) & 0xFF) != 0xFF) return None
-        val m = b(bp + 1) & 0xFF
-        if (m < 0xD0 || m > 0xD7) return None
-        bp += 2
-        java.util.Arrays.fill(pred, 0)
-      }
-      val mx = mcu % mcusX; val my = mcu / mcusX
-      var sc = 0
-      while (sc < scanComp.length) {
-        val (ci, dcT, acT) = scanComp(sc)
-        val blocks = if (ci == 0) hY * vY else 1
-        var blk = 0
-        while (blk < blocks) {
-          java.util.Arrays.fill(coef, 0)
-          val q = qt(compQ(ci))
-          if (q == null) return None
-          // DC
-          val t = decodeHuff(huff(0)(dcT))
-          if (t < 0 || t > 11) return None
-          val diffBits = if (t == 0) 0 else readBits(t)
-          if (diffBits < 0) return None
-          pred(ci) += extend(diffBits, t)
-          coef(0) = pred(ci) * q(0)
-          // AC
-          var k = 1
-          var eob = false
-          while (k < 64 && !eob) {
-            val rs = decodeHuff(huff(1)(acT))
-            if (rs < 0) return None
-            if (rs == 0) eob = true
-            else if (rs == 0xF0) k += 16
-            else {
-              k += rs >> 4
-              val s = rs & 15
-              if (k > 63) return None
-              val vb = readBits(s)
-              if (vb < 0) return None
-              coef(zigzag(k)) = extend(vb, s) * q(k)
-              k += 1
-            }
-          }
-          if (ci == 0) {
-            idct(coef, px8)
-            // place into the luma plane (blocks raster within the MCU)
-            val bx = mx * hY + (blk % hY)
-            val by = my * vY + (blk / hY)
-            var yy = 0
-            while (yy < 8) {
-              val gy = by * 8 + yy
-              if (gy < h) {
-                var xx = 0
-                while (xx < 8) {
-                  val gx = bx * 8 + xx
-                  if (gx < w) luma(gy * w + gx) = px8(yy * 8 + xx)
-                  xx += 1
-                }
-              }
-              yy += 1
-            }
-          } // chroma: decoded (stream is serial) and discarded
-          blk += 1
-        }
-        sc += 1
-      }
-      mcu += 1
+    var blk = 0
+    while (blk < bw * bh) {
+      val cfBase = ((blk / bw) * stride + blk % bw) * 64
+      var i = 0
+      while (i < 64) { block(JpegZigzag(i)) = cf(cfBase + JpegZigzag(i)) * q(i); i += 1 }
+      jpegIdct(block, px8)
+      placeBlock(px8, blk % bw, blk / bw, w, h, luma)
+      blk += 1
     }
     Some((w, h, luma))
   }
@@ -3006,460 +3261,98 @@ object Multimodal {
     b.array()
   }
 
-  /** REAL PROGRESSIVE JPEG decode (SOF2) — the multi-scan refinement
-    * layout most web JPEGs ship. Coefficients accumulate across scans
-    * in per-component buffers and the IDCT runs once at the end:
-    *
-    *  - DC scans: interleaved or single-component; first pass (Ah=0)
-    *    decodes diffs shifted left by Al, refinement passes (Ah>0) add
-    *    one bit per block at position Al;
-    *  - AC scans: always single-component (T.81 requires it); first
-    *    pass decodes the Ss..Se spectral band with EOBRUN batching,
-    *    refinement implements the G.1.2.3 correction-bit walk
-    *    (correction bits for already-nonzero coefficients, ±1<<Al
-    *    births for newly visible ones, EOBRUN tails that still carry
-    *    corrections);
-    *  - DHT/DQT/DRI may be redefined between scans; RSTn resets DC
-    *    predictors AND the EOBRUN.
-    *
-    * Scope matches the baseline decoder: 8-bit, 1 or 3 components, luma
-    * sampling up to 2×2 with 1×1 chroma (4:4:4 / 4:2:2 / 4:2:0 — the
-    * layouts web JPEGs ship). Interleaved DC scans walk MCUs with each
-    * component's hi×vi blocks at its T.81 A.2.4 PADDED stride;
-    * non-interleaved scans (all AC, single-component DC) walk the
-    * component's own raster. Chroma coefficients are entropy-decoded and
-    * STORED (refinement correction bits branch on coefficient history,
-    * so a luma-only decode cannot skip them) but never IDCT'd — only the
-    * luma plane renders. Corrupt input returns None. Shares the oracle
-    * posture of the baseline decoder: DC-only fixtures decode
-    * bit-exactly. */
-  private[graft] def decodeJpegProgressive(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    if (b == null || b.length < 4 || (b(0) & 0xFF) != 0xFF || (b(1) & 0xFF) != 0xD8) return None
-    val qt = new Array[Array[Int]](4)
-    case class Huff(counts: Array[Int], vals: Array[Int]) {
-      val (minCode, maxCode, valPtr) = {
-        val mn = new Array[Int](17); val mx = new Array[Int](17); val vp = new Array[Int](17)
-        var code = 0; var k = 0
-        var l = 1
-        while (l <= 16) {
-          vp(l) = k; mn(l) = code
-          code += counts(l - 1); k += counts(l - 1)
-          mx(l) = code - 1
-          code <<= 1
-          l += 1
-        }
-        (mn, mx, vp)
+  /** Byte and entropy writer of the synthetic JPEG fixtures. [[head]]
+    * writes what every fixture opens with: all-ones quant (coefficients
+    * survive verbatim) and CANONICAL Huffman tables — every DC category at
+    * length 4, every AC symbol of `acSyms` at length 8, so a symbol's code
+    * is its index (the decoder builds whatever DHT declares, so fixtures
+    * need no Annex K transcription). Entropy bits go MSB-first with FF
+    * stuffing; [[flush]] pads the last byte with 1-bits. */
+  private final class JpegWriter(acSyms: Array[Int]) {
+    val out = new java.io.ByteArrayOutputStream()
+    private val acCode = new Array[Int](256)
+    acSyms.indices.foreach(i => acCode(acSyms(i)) = i)
+    private var acc = 0
+    private var n = 0
+
+    def w8(v: Int): Unit = out.write(v & 0xFF)
+    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
+    def marker(m: Int): Unit = { w8(0xFF); w8(m) }
+
+    def bits(v: Int, len: Int): Unit = {
+      var i = len - 1
+      while (i >= 0) {
+        acc = (acc << 1) | ((v >> i) & 1); n += 1
+        if (n == 8) { out.write(acc); if (acc == 0xFF) out.write(0x00); acc = 0; n = 0 }
+        i -= 1
       }
     }
-    val huff = Array.ofDim[Huff](2, 4)
-    var w = 0; var h = 0; var nComp = 0
-    var compId: Array[Int] = null; var compQ: Array[Int] = null
-    var compH: Array[Int] = null; var compV: Array[Int] = null
-    var coefs: Array[Array[Int]] = null // per comp: padBw*padBh*64, natural order
-    var bw = 0; var bh = 0 // luma blocks per row/col
-    var mcusX = 0; var mcusY = 0
-    // per component: raster block dims (non-interleaved scans walk these)
-    // and the PADDED row stride interleaved MCUs address (T.81 A.2.4)
-    var cBw: Array[Int] = null; var cBh: Array[Int] = null
-    var padBw: Array[Int] = null; var padBh: Array[Int] = null
-    var restartInterval = 0
-    val zigzag = Array(
-      0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-      12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-      35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-      58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-    var pos = 2
-    var sawEoi = false
-    var sawSof = false
-    while (!sawEoi) {
-      if (pos + 2 > b.length) return None
-      if ((b(pos) & 0xFF) != 0xFF) return None
-      val m = b(pos + 1) & 0xFF
-      if (m == 0xD8 || (m >= 0xD0 && m <= 0xD7) || m == 0x01) { pos += 2 }
-      else if (m == 0xD9) sawEoi = true
-      else {
-        if (pos + 4 > b.length) return None
-        val len = ((b(pos + 2) & 0xFF) << 8) | (b(pos + 3) & 0xFF)
-        if (len < 2 || pos + 2 + len > b.length) return None
-        val seg = pos + 4
-        val segEnd = pos + 2 + len
-        val bb = ByteBuffer.wrap(b)
-        m match {
-          case 0xDB =>
-            var p = seg
-            while (p < segEnd) {
-              val pq = (b(p) & 0xFF) >> 4; val tq = b(p) & 0x0F
-              if (pq != 0 || tq > 3 || p + 65 > segEnd) return None
-              qt(tq) = Array.tabulate(64)(i => b(p + 1 + i) & 0xFF)
-              p += 65
-            }
-          case 0xC4 =>
-            var p = seg
-            while (p < segEnd) {
-              val tc = (b(p) & 0xFF) >> 4; val th = b(p) & 0x0F
-              if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-              val counts = Array.tabulate(16)(i => b(p + 1 + i) & 0xFF)
-              val n = counts.sum
-              if (p + 17 + n > segEnd || n > 256) return None
-              huff(tc)(th) = Huff(counts, Array.tabulate(n)(i => b(p + 17 + i) & 0xFF))
-              p += 17 + n
-            }
-          case 0xC2 =>
-            if (sawSof || b(seg) != 8) return None
-            h = ((b(seg + 1) & 0xFF) << 8) | (b(seg + 2) & 0xFF)
-            w = ((b(seg + 3) & 0xFF) << 8) | (b(seg + 4) & 0xFF)
-            nComp = b(seg + 5) & 0xFF
-            if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3) ||
-                w.toLong * h > (1L << 28)) return None
-            compId = new Array[Int](nComp); compQ = new Array[Int](nComp)
-            compH = new Array[Int](nComp); compV = new Array[Int](nComp)
-            var c = 0
-            while (c < nComp) {
-              compId(c) = b(seg + 6 + c * 3) & 0xFF
-              val hv = b(seg + 7 + c * 3) & 0xFF
-              compH(c) = hv >> 4; compV(c) = hv & 0x0F
-              // the baseline decoder's scope: luma up to 2x2, chroma 1x1
-              // (4:4:4 / 4:2:2 / 4:2:0 — the layouts web JPEGs ship)
-              if (c == 0) {
-                if (compH(0) < 1 || compH(0) > 2 || compV(0) < 1 || compV(0) > 2)
-                  return None
-              } else if (hv != 0x11) return None
-              compQ(c) = b(seg + 8 + c * 3) & 0xFF
-              if (compQ(c) > 3) return None // quant table ids are 0-3
-              c += 1
-            }
-            bw = (w + 7) / 8; bh = (h + 7) / 8
-            mcusX = (w + 8 * compH(0) - 1) / (8 * compH(0))
-            mcusY = (h + 8 * compV(0) - 1) / (8 * compV(0))
-            // chroma raster dims collapse to the MCU grid (its pixel dims
-            // are ceil(w/h0) × ceil(h/v0), one block per MCU)
-            cBw = Array.tabulate(nComp)(c => if (c == 0) bw else mcusX)
-            cBh = Array.tabulate(nComp)(c => if (c == 0) bh else mcusY)
-            padBw = Array.tabulate(nComp)(c => if (c == 0) mcusX * compH(0) else mcusX)
-            padBh = Array.tabulate(nComp)(c => if (c == 0) mcusY * compV(0) else mcusY)
-            coefs = Array.tabulate(nComp)(c => new Array[Int](padBw(c) * padBh(c) * 64))
-            sawSof = true
-          case 0xC0 | 0xC1 | 0xC3 | 0xC5 | 0xC6 | 0xC7 |
-               0xC9 | 0xCA | 0xCB | 0xCD | 0xCE | 0xCF =>
-            return None // only SOF2 here; baseline goes through decodeJpegGray
-          case 0xDD =>
-            restartInterval = ((b(seg) & 0xFF) << 8) | (b(seg + 1) & 0xFF)
-          case 0xDA =>
-            if (!sawSof) return None
-            val ns = b(seg) & 0xFF
-            if (ns < 1 || ns > nComp) return None
-            val scanComp = Array.tabulate(ns) { i =>
-              val ci = compId.indexOf(b(seg + 1 + i * 2) & 0xFF)
-              val tbl = b(seg + 2 + i * 2) & 0xFF
-              if (ci < 0 || (tbl >> 4) > 3 || (tbl & 0x0F) > 3) return None
-              (ci, tbl >> 4, tbl & 0x0F)
-            }
-            val ss = b(seg + 1 + ns * 2) & 0xFF
-            val se = b(seg + 2 + ns * 2) & 0xFF
-            val ahAl = b(seg + 3 + ns * 2) & 0xFF
-            val ah = ahAl >> 4; val al = ahAl & 0x0F
-            if (ss > se || se > 63) return None
-            if (ss == 0 && se != 0 && ns != 1) return None
-            if (ss > 0 && ns != 1) return None // AC scans are single-component
-            // ---- entropy decode this scan ----
-            var bp = segEnd
-            var bitBuf = 0; var bitCnt = 0; var hitMarker = false
-            def fillBit(): Int = {
-              if (bitCnt == 0) {
-                if (hitMarker || bp >= b.length) return -1
-                val v = b(bp) & 0xFF
-                if (v == 0xFF) {
-                  if (bp + 1 >= b.length) return -1
-                  val nxt = b(bp + 1) & 0xFF
-                  if (nxt == 0x00) { bp += 2 }
-                  else { hitMarker = true; return -1 }
-                } else bp += 1
-                bitBuf = v; bitCnt = 8
-              }
-              bitCnt -= 1
-              (bitBuf >> bitCnt) & 1
-            }
-            def readBits(n: Int): Int = {
-              var v = 0; var i = 0
-              while (i < n) { val bit = fillBit(); if (bit < 0) return -1; v = (v << 1) | bit; i += 1 }
-              v
-            }
-            def decodeHuff(t: Huff): Int = {
-              if (t == null) return -1
-              var code = fillBit()
-              if (code < 0) return -1
-              var l = 1
-              while (l <= 16) {
-                if (t.counts(l - 1) > 0 && code <= t.maxCode(l)) {
-                  val idx = t.valPtr(l) + code - t.minCode(l)
-                  if (idx >= t.vals.length) return -1
-                  return t.vals(idx)
-                }
-                val bit = fillBit()
-                if (bit < 0) return -1
-                code = (code << 1) | bit
-                l += 1
-              }
-              -1
-            }
-            def extend(v: Int, t: Int): Int =
-              if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-            def consumeRst(): Boolean = {
-              bitCnt = 0; hitMarker = false
-              if (bp + 1 >= b.length || (b(bp) & 0xFF) != 0xFF) return false
-              val mk = b(bp + 1) & 0xFF
-              if (mk < 0xD0 || mk > 0xD7) return false
-              bp += 2; true
-            }
-            val pred = new Array[Int](nComp)
-            var eobrun = 0
-            // one DC coefficient (first pass or refinement) at `base`
-            def dcOne(ci: Int, dcT: Int, base: Int): Boolean = {
-              if (ah == 0) {
-                val t = decodeHuff(huff(0)(dcT))
-                if (t < 0 || t > 11) return false
-                val bits = if (t == 0) 0 else readBits(t)
-                if (bits < 0) return false
-                pred(ci) += extend(bits, t)
-                coefs(ci)(base) = pred(ci) << al
-              } else {
-                val bit = fillBit()
-                if (bit < 0) return false
-                if (bit == 1) coefs(ci)(base) |= 1 << al
-              }
-              true
-            }
-            if (ss == 0 && scanComp.length > 1) {
-              // ---- interleaved DC scan: MCU walk, each component
-              // contributing its hi×vi blocks at the PADDED stride ----
-              var mcu = 0
-              val total = mcusX * mcusY
-              while (mcu < total) {
-                if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-                  if (!consumeRst()) return None
-                  java.util.Arrays.fill(pred, 0)
-                }
-                val mx = mcu % mcusX; val my = mcu / mcusX
-                var sc = 0
-                while (sc < scanComp.length) {
-                  val (ci, dcT, _) = scanComp(sc)
-                  var vb = 0
-                  while (vb < compV(ci)) {
-                    var hb = 0
-                    while (hb < compH(ci)) {
-                      val base = ((my * compV(ci) + vb) * padBw(ci) +
-                        (mx * compH(ci) + hb)) * 64
-                      if (!dcOne(ci, dcT, base)) return None
-                      hb += 1
-                    }
-                    vb += 1
-                  }
-                  sc += 1
-                }
-                mcu += 1
-              }
-            } else if (ss == 0) {
-              // ---- single-component DC scan: the component's own raster
-              // (no MCU padding), addressed at the padded row stride ----
-              val (ci, dcT, _) = scanComp(0)
-              var blk = 0
-              val total = cBw(ci) * cBh(ci)
-              while (blk < total) {
-                if (restartInterval > 0 && blk > 0 && blk % restartInterval == 0) {
-                  if (!consumeRst()) return None
-                  java.util.Arrays.fill(pred, 0)
-                }
-                val base = ((blk / cBw(ci)) * padBw(ci) + blk % cBw(ci)) * 64
-                if (!dcOne(ci, dcT, base)) return None
-                blk += 1
-              }
-            } else {
-              // ---- AC scan: single component, its own raster order,
-              // addressed at the padded row stride ----
-              val (ci, _, acT) = scanComp(0)
-              val cf = coefs(ci)
-              var blk = 0
-              val total = cBw(ci) * cBh(ci)
-              while (blk < total) {
-                if (restartInterval > 0 && blk > 0 && blk % restartInterval == 0) {
-                  if (!consumeRst()) return None
-                  eobrun = 0
-                }
-                val base = ((blk / cBw(ci)) * padBw(ci) + blk % cBw(ci)) * 64
-                if (ah == 0) {
-                  // first AC pass with EOBRUN batching
-                  if (eobrun > 0) eobrun -= 1
-                  else {
-                    var k = ss
-                    var done = false
-                    while (k <= se && !done) {
-                      val rs = decodeHuff(huff(1)(acT))
-                      if (rs < 0) return None
-                      val r = rs >> 4; val s = rs & 15
-                      if (s == 0) {
-                        if (r < 15) {
-                          val extra = if (r == 0) 0 else readBits(r)
-                          if (extra < 0) return None
-                          eobrun = (1 << r) + extra - 1
-                          done = true
-                        } else k += 16 // ZRL
-                      } else {
-                        k += r
-                        if (k > se) return None
-                        val vb = readBits(s)
-                        if (vb < 0) return None
-                        cf(base + zigzag(k)) = extend(vb, s) << al
-                        k += 1
-                      }
-                    }
-                  }
-                } else {
-                  // AC refinement (T.81 G.1.2.3)
-                  val p1 = 1 << al
-                  val m1 = -1 << al
-                  var k = ss
-                  if (eobrun == 0) {
-                    var done = false
-                    while (k <= se && !done) {
-                      val rs = decodeHuff(huff(1)(acT))
-                      if (rs < 0) return None
-                      var r = rs >> 4; val s = rs & 15
-                      var newVal = 0
-                      if (s == 0) {
-                        if (r < 15) {
-                          val extra = if (r == 0) 0 else readBits(r)
-                          if (extra < 0) return None
-                          eobrun = (1 << r) + extra
-                          done = true
-                        }
-                        // r == 15: ZRL — skip 16 zero-history coefs below
-                      } else {
-                        if (s != 1) return None // refinement births are ±1
-                        val sign = fillBit()
-                        if (sign < 0) return None
-                        newVal = if (sign == 1) p1 else m1
-                      }
-                      if (!done) {
-                        // advance over the band: correction bits for
-                        // nonzero history, count down r zero-history slots
-                        var placed = false
-                        while (k <= se && !placed) {
-                          val z = base + zigzag(k)
-                          if (cf(z) != 0) {
-                            val bit = fillBit()
-                            if (bit < 0) return None
-                            if (bit == 1 && (cf(z) & p1) == 0)
-                              cf(z) += (if (cf(z) >= 0) p1 else m1)
-                          } else {
-                            if (r == 0) {
-                              if (newVal != 0) { cf(z) = newVal }
-                              placed = true
-                            } else r -= 1
-                          }
-                          k += 1
-                        }
-                        if (!placed && newVal != 0) return None // band overflow
-                      }
-                    }
-                  }
-                  if (eobrun > 0) {
-                    // EOB tail: correction bits for every remaining
-                    // nonzero coefficient in the band
-                    while (k <= se) {
-                      val z = base + zigzag(k)
-                      if (cf(z) != 0) {
-                        val bit = fillBit()
-                        if (bit < 0) return None
-                        if (bit == 1 && (cf(z) & p1) == 0)
-                          cf(z) += (if (cf(z) >= 0) p1 else m1)
-                      }
-                      k += 1
-                    }
-                    eobrun -= 1
-                  }
-                }
-                blk += 1
-              }
-            }
-            // skip any pad bits; continue the marker walk after the scan
-            if (!hitMarker) {
-              // advance to the next marker byte
-              var scanning = true
-              while (scanning) {
-                if (bp >= b.length) return None
-                if ((b(bp) & 0xFF) == 0xFF && bp + 1 < b.length &&
-                    (b(bp + 1) & 0xFF) != 0x00) scanning = false
-                else bp += 1
-              }
-            }
-            pos = bp
-            // loop continues at the marker (RSTn inside scans were
-            // consumed by consumeRst; stray ones advance above)
-          case _ => ()
-        }
-        if (m != 0xDA) pos = segEnd
-      }
+    def dc(cat: Int): Unit = bits(cat, 4)
+    def ac(rs: Int): Unit = bits(acCode(rs), 8)
+    /** `v` in the `s`-bit magnitude coding EXTEND inverts. */
+    def value(v: Int, s: Int): Unit = if (s > 0) bits(if (v >= 0) v else v + (1 << s) - 1, s)
+    def flush(): Unit = if (n > 0) {
+      acc = (acc << (8 - n)) | ((1 << (8 - n)) - 1)
+      out.write(acc); if (acc == 0xFF) out.write(0x00)
+      acc = 0; n = 0
     }
-    if (!sawSof || coefs == null) return None
-    // ---- dequant + IDCT all blocks, luma only ----
-    val q = qt(compQ(0))
-    if (q == null) return None
-    val cosT = Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16.0))
-    val cu = Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
-    val luma = new Array[Int](w * h)
-    val cf = coefs(0)
-    val block = new Array[Int](64)
-    var blk = 0
-    while (blk < bw * bh) {
-      // luma raster block (bx, by) lives at the PADDED row stride
-      val cfBase = ((blk / bw) * padBw(0) + blk % bw) * 64
-      var i = 0
-      while (i < 64) { block(zigzag(i)) = cf(cfBase + zigzag(i)) * q(i); i += 1 }
-      // separable IDCT (same math as the baseline path)
-      val tmp = new Array[Double](64)
-      var x = 0
-      while (x < 8) {
-        var v = 0
-        while (v < 8) {
-          var s = 0.0; var u = 0
-          while (u < 8) { s += cu(u) * block(v * 8 + u) * cosT(x)(u); u += 1 }
-          tmp(v * 8 + x) = s * 0.5
-          v += 1
-        }
-        x += 1
+
+    /** SOI, DQT, DHT (DC and AC table 0), DRI when `restartInterval` > 0,
+      * and the `sof` frame header; component c+1 has sampling `hv(c)`. */
+    def head(sof: Int, width: Int, height: Int, hv: Seq[Int], restartInterval: Int): Unit = {
+      marker(0xD8)
+      marker(0xDB); w16(2 + 1 + 64); w8(0) // DQT table 0, 8-bit
+      for (_ <- 0 until 64) w8(1)
+      def dht(tc: Int, len: Int, syms: Array[Int]): Unit = {
+        marker(0xC4); w16(2 + 1 + 16 + syms.length); w8(tc << 4)
+        for (l <- 1 to 16) w8(if (l == len) syms.length else 0)
+        syms.foreach(w8)
       }
-      val bx = blk % bw; val by = blk / bw
+      dht(0, 4, (0 to 11).toArray)
+      dht(1, 8, acSyms)
+      if (restartInterval > 0) { marker(0xDD); w16(4); w16(restartInterval) }
+      marker(sof); w16(2 + 6 + 3 * hv.length); w8(8); w16(height); w16(width); w8(hv.length)
+      hv.zipWithIndex.foreach { case (f, c) => w8(c + 1); w8(f); w8(0) }
+    }
+
+    /** An SOS header over components `comps`, every one on table 0. */
+    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
+      marker(0xDA); w16(2 + 1 + 2 * comps.length + 3); w8(comps.length)
+      comps.foreach { c => w8(c); w8(0x00) }
+      w8(ss); w8(se); w8((ah << 4) | al)
+    }
+  }
+
+  /** Forward DCT (quant 1) of the level-shifted 8×8 block at block
+    * position (bx, by) of a gray plane, in zigzag order. */
+  private def jpegFdct(gray: Array[Int], width: Int, bx: Int, by: Int): Array[Int] = {
+    val coefZ = new Array[Int](64)
+    var k = 0
+    while (k < 64) {
+      val u = JpegZigzag(k) % 8; val v = JpegZigzag(k) / 8
+      var s = 0.0
       var y = 0
       while (y < 8) {
-        val gy = by * 8 + y
-        if (gy < h) {
-          var x2 = 0
-          while (x2 < 8) {
-            val gx = bx * 8 + x2
-            if (gx < w) {
-              var s = 0.0; var v = 0
-              while (v < 8) { s += cu(v) * tmp(v * 8 + x2) * cosT(y)(v); v += 1 }
-              val p = math.round(s * 0.5).toInt + 128
-              luma(gy * w + gx) = math.max(0, math.min(255, p))
-            }
-            x2 += 1
-          }
+        var x = 0
+        while (x < 8) {
+          s += (gray((by * 8 + y) * width + bx * 8 + x) - 128) * DctCos(x)(u) * DctCos(y)(v)
+          x += 1
         }
         y += 1
       }
-      blk += 1
+      coefZ(k) = math.round(0.25 * DctC(u) * DctC(v) * s).toInt
+      k += 1
     }
-    Some((w, h, luma))
+    coefZ
   }
 
-  /** A REAL baseline JPEG carrying the given grayscale pixels: quant
-    * tables all-ones (so coefficients survive verbatim), a full forward
-    * DCT per 8×8 block, DC-difference + AC run-length entropy coding
-    * against CANONICAL Huffman tables written into DHT (all DC
-    * categories at length 4, every (run,size) AC symbol + EOB + ZRL at
-    * length 8 — the decoder builds whatever DHT declares, so fixtures
-    * need no Annex K transcription), FF byte stuffing, optional RSTn
-    * restart intervals. Images whose 8×8 blocks are CONSTANT decode
+  /** The magnitude category (bit length) of a coefficient or difference. */
+  private def jpegCat(v: Int): Int = { var a = math.abs(v); var c = 0; while (a > 0) { a >>= 1; c += 1 }; c }
+
+  /** A REAL baseline JPEG carrying the given grayscale pixels: a full
+    * forward DCT per 8×8 block, DC-difference + AC run-length entropy
+    * coding against the [[JpegWriter]] tables, FF byte stuffing, optional
+    * RSTn restart intervals. Images whose 8×8 blocks are CONSTANT decode
     * bit-exactly (the DCT of a constant block is a lone integer DC
     * coefficient; float error ~1e-14 dies in rounding) — the property
     * the oracle fixtures rely on; general content round-trips within
@@ -3470,139 +3363,49 @@ object Multimodal {
     require(width > 0 && height > 0 && width % 8 == 0 && height % 8 == 0,
       "fixture dims must be multiples of 8")
     require(gray.length == width * height)
-    val out = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = out.write(v & 0xFF)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xFF); w8(m) }
-    marker(0xD8) // SOI
-    marker(0xDB); w16(2 + 1 + 64); w8(0) // DQT table 0, 8-bit
-    for (_ <- 0 until 64) w8(1)
-    // canonical tables: DC cats 0..11 at length 4; AC 162 symbols at length 8
-    val dcVals = (0 to 11).toArray
-    val acVals = (0x00 +: 0xF0 +: (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s)).toArray
-    def canonical(lens: Map[Int, Seq[Int]]): Map[Int, (Int, Int)] = { // sym -> (code, len)
-      var code = 0
-      val m = scala.collection.mutable.Map.empty[Int, (Int, Int)]
-      for (l <- 1 to 16) {
-        lens.getOrElse(l, Nil).foreach { sym => m(sym) = (code, l); code += 1 }
-        code <<= 1
-      }
-      m.toMap
-    }
-    val dcCode = canonical(Map(4 -> dcVals.toSeq))
-    val acCode = canonical(Map(8 -> acVals.toSeq))
-    def dht(tc: Int, th: Int, lens: Map[Int, Seq[Int]]): Unit = {
-      val n = lens.values.map(_.size).sum
-      marker(0xC4); w16(2 + 1 + 16 + n); w8((tc << 4) | th)
-      for (l <- 1 to 16) w8(lens.getOrElse(l, Nil).size)
-      for (l <- 1 to 16; s <- lens.getOrElse(l, Nil)) w8(s)
-    }
-    dht(0, 0, Map(4 -> dcVals.toSeq))
-    dht(1, 0, Map(8 -> acVals.toSeq))
-    if (restartInterval > 0) { marker(0xDD); w16(4); w16(restartInterval) }
+    // AC: EOB, ZRL and every (run, size) — size up to 10 covers quant-1 magnitudes
+    val o = new JpegWriter((0x00 +: 0xF0 +: (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s)).toArray)
     // `color` = YCbCr 4:4:4 with NEUTRAL chroma (Cb=Cr=128 → level-shifted
     // zero → DC diff 0 + EOB per block): the luma plane is identical, but
     // the decoder must entropy-walk the interleaved chroma blocks
     val nc = if (color) 3 else 1
-    marker(0xC0); w16(2 + 6 + 3 * nc); w8(8); w16(height); w16(width); w8(nc) // SOF0
-    for (c <- 1 to nc) { w8(c); w8(0x11); w8(0) }
-    marker(0xDA); w16(2 + 1 + 2 * nc + 3); w8(nc)
-    for (c <- 1 to nc) { w8(c); w8(0x00) }
-    w8(0); w8(63); w8(0) // SOS spectral params
-    // entropy writer: MSB-first, FF-stuffed
-    val ent = new java.io.ByteArrayOutputStream()
-    var acc = 0; var nAcc = 0
-    def putBits(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >> i) & 1); nAcc += 1
-        if (nAcc == 8) {
-          ent.write(acc)
-          if (acc == 0xFF) ent.write(0x00)
-          acc = 0; nAcc = 0
-        }
-        i -= 1
-      }
-    }
-    def flushBits(): Unit = if (nAcc > 0) { // pad with 1s
-      acc = (acc << (8 - nAcc)) | ((1 << (8 - nAcc)) - 1)
-      ent.write(acc); if (acc == 0xFF) ent.write(0x00)
-      acc = 0; nAcc = 0
-    }
-    def cat(v: Int): Int = { var a = math.abs(v); var c = 0; while (a > 0) { a >>= 1; c += 1 }; c }
-    def putSym(tbl: Map[Int, (Int, Int)], sym: Int): Unit = {
-      val (c, l) = tbl(sym); putBits(c, l)
-    }
-    def putVal(v: Int, s: Int): Unit =
-      if (s > 0) putBits(if (v >= 0) v else v + (1 << s) - 1, s)
-    val cosT = Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16.0))
-    val cu = Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
-    val zigzag = Array(
-      0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-      12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-      35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-      58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
+    o.head(0xC0, width, height, Seq.fill(nc)(0x11), restartInterval)
+    o.sos(1 to nc, 0, 63, 0, 0)
     val bw = width / 8; val bh = height / 8
     var pred = 0
     var mcu = 0
-    val coefZ = new Array[Int](64)
-    val invZigzag = new Array[Int](64) // natural index -> zigzag position
-    for (i <- 0 until 64) invZigzag(zigzag(i)) = i
     while (mcu < bw * bh) {
       if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        flushBits()
-        val entB = ent.toByteArray; out.write(entB, 0, entB.length); ent.reset()
-        marker(0xD0 + ((mcu / restartInterval - 1) % 8))
+        o.flush()
+        o.marker(0xD0 + ((mcu / restartInterval - 1) % 8))
         pred = 0
       }
-      val bx = mcu % bw; val by = mcu / bw
-      // forward DCT, quant 1
-      var u = 0
-      while (u < 8) {
-        var v = 0
-        while (v < 8) {
-          var s = 0.0
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              s += (gray((by * 8 + y) * width + bx * 8 + x) - 128) * cosT(x)(u) * cosT(y)(v)
-              x += 1
-            }
-            y += 1
-          }
-          coefZ(invZigzag(v * 8 + u)) = math.round(0.25 * cu(u) * cu(v) * s).toInt
-          v += 1
-        }
-        u += 1
-      }
-      val dc = coefZ(0)
-      val diff = dc - pred
-      pred = dc
-      val c = cat(diff)
-      putSym(dcCode, c); putVal(diff, c)
+      val coefZ = jpegFdct(gray, width, mcu % bw, mcu / bw)
+      val diff = coefZ(0) - pred
+      pred = coefZ(0)
+      val c = jpegCat(diff)
+      o.dc(c); o.value(diff, c)
       var k = 1
       var lastNz = 63
       while (lastNz > 0 && coefZ(lastNz) == 0) lastNz -= 1
       while (k <= lastNz) {
         var run = 0
         while (coefZ(k) == 0) { run += 1; k += 1 }
-        while (run > 15) { putSym(acCode, 0xF0); run -= 16 }
-        val s = cat(coefZ(k))
-        putSym(acCode, (run << 4) | s); putVal(coefZ(k), s)
+        while (run > 15) { o.ac(0xF0); run -= 16 }
+        val s = jpegCat(coefZ(k))
+        o.ac((run << 4) | s); o.value(coefZ(k), s)
         k += 1
       }
-      if (lastNz < 63) putSym(acCode, 0x00) // EOB
+      if (lastNz < 63) o.ac(0x00) // EOB
       if (color) { // two neutral-chroma blocks: DC diff 0, all-zero ACs
-        putSym(dcCode, 0); putSym(acCode, 0x00)
-        putSym(dcCode, 0); putSym(acCode, 0x00)
+        o.dc(0); o.ac(0x00)
+        o.dc(0); o.ac(0x00)
       }
       mcu += 1
     }
-    flushBits()
-    val entB = ent.toByteArray; out.write(entB, 0, entB.length)
-    marker(0xD9) // EOI
-    out.toByteArray
+    o.flush()
+    o.marker(0xD9) // EOI
+    o.out.toByteArray
   }
 
   /** A REAL progressive JPEG (SOF2) carrying the given grayscale pixels
@@ -3612,8 +3415,8 @@ object Multimodal {
     * refinement (Ah=1, the G.1.2.3 correction-bit walk with the
     * deferred-ZRL buffer partitioning — correction bits flush after the
     * NEXT symbol, not eagerly, so the decoder's interleaved read order
-    * matches). Same all-ones quant + canonical DHT + FF stuffing as the
-    * baseline encoder; point transforms per T.81 (DC arithmetic shift,
+    * matches). Same tables, DCT and stuffing as the baseline encoder
+    * ([[JpegWriter]]); point transforms per T.81 (DC arithmetic shift,
     * AC magnitude truncation). Dimensions must be multiples of 8. */
   def syntheticJpegProgressive(width: Int, height: Int, gray: Array[Int],
       color420: Boolean = false): Array[Byte] = {
@@ -3622,86 +3425,32 @@ object Multimodal {
     require(!color420 || (width % 16 == 0 && height % 16 == 0),
       "4:2:0 fixture dims must be multiples of 16 (whole MCUs)")
     require(gray.length == width * height)
-    val out = new java.io.ByteArrayOutputStream()
-    def w8(v: Int): Unit = out.write(v & 0xFF)
-    def w16(v: Int): Unit = { w8(v >> 8); w8(v) }
-    def marker(m: Int): Unit = { w8(0xFF); w8(m) }
-    marker(0xD8)
-    marker(0xDB); w16(2 + 1 + 64); w8(0)
-    for (_ <- 0 until 64) w8(1)
-    val dcVals = (0 to 11).toArray
     // AC symbols: EOB-run codes (r<<4 | 0) for r = 0..14, ZRL, and every
     // (run, size) — size up to 10 covers quant-1 magnitudes
-    val acVals = ((0 to 14).map(_ << 4) ++ Seq(0xF0) ++
-      (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s)).toArray
-    def canonical(syms: Array[Int], len: Int): Map[Int, (Int, Int)] =
-      syms.zipWithIndex.map { case (sym, i) => sym -> (i, len) }.toMap
-    val dcCode = canonical(dcVals, 4)
-    val acCode = canonical(acVals, 8)
-    def dht(tc: Int, th: Int, len: Int, syms: Array[Int]): Unit = {
-      marker(0xC4); w16(2 + 1 + 16 + syms.length); w8((tc << 4) | th)
-      for (l <- 1 to 16) w8(if (l == len) syms.length else 0)
-      syms.foreach(w8)
-    }
-    dht(0, 0, 4, dcVals)
-    dht(1, 0, 8, acVals)
+    val o = new JpegWriter(((0 to 14).map(_ << 4) ++ Seq(0xF0) ++
+      (for (r <- 0 to 15; s <- 1 to 10) yield (r << 4) | s)).toArray)
     // `color420` = YCbCr with luma 2x2 / chroma 1x1 and NEUTRAL chroma
     // (Cb=Cr=128 → all-zero coefficients): the luma plane is identical,
     // but the decoder must walk interleaved 4:2:0 MCUs in the DC scans
     // and the chroma components' OWN (quarter-size) rasters in their AC
     // scans — the addressing 4:2:0 uniquely exercises
     val nc = if (color420) 3 else 1
-    marker(0xC2); w16(2 + 6 + 3 * nc); w8(8); w16(height); w16(width); w8(nc)
-    for (c <- 1 to nc) { w8(c); w8(if (color420 && c == 1) 0x22 else 0x11); w8(0) }
-    // forward DCT, quant 1, per block; coefficients addressed by ZIGZAG k
-    val cosT = Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16.0))
-    val cu = Array.tabulate(8)(u => if (u == 0) 1.0 / math.sqrt(2.0) else 1.0)
-    val zigzag = Array(
-      0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-      12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-      35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-      58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
+    o.head(0xC2, width, height, (1 to nc).map(c => if (color420 && c == 1) 0x22 else 0x11), 0)
     val bw = width / 8; val bh = height / 8
     val nBlk = bw * bh
-    val coefZ = Array.ofDim[Int](nBlk, 64)
-    for (blk <- 0 until nBlk) {
-      val bx = blk % bw; val by = blk / bw
-      for (u <- 0 until 8; v <- 0 until 8) {
-        var s = 0.0
-        for (y <- 0 until 8; x <- 0 until 8)
-          s += (gray((by * 8 + y) * width + bx * 8 + x) - 128) * cosT(x)(u) * cosT(y)(v)
-        val nat = v * 8 + u
-        val zi = zigzag.indexOf(nat)
-        coefZ(blk)(zi) = math.round(0.25 * cu(u) * cu(v) * s).toInt
-      }
-    }
+    val coefZ = Array.tabulate(nBlk)(blk => jpegFdct(gray, width, blk % bw, blk / bw))
     def truncMag(v: Int, al: Int): Int = if (v >= 0) v >> al else -((-v) >> al)
-    def cat(v: Int): Int = { var a = math.abs(v); var c = 0; while (a > 0) { a >>= 1; c += 1 }; c }
-    // per-scan entropy writer
-    class Bits {
-      val buf = new java.io.ByteArrayOutputStream()
-      var acc = 0; var n = 0
-      def put(v: Int, bits: Int): Unit = {
-        var i = bits - 1
-        while (i >= 0) {
-          acc = (acc << 1) | ((v >> i) & 1); n += 1
-          if (n == 8) { buf.write(acc); if (acc == 0xFF) buf.write(0x00); acc = 0; n = 0 }
-          i -= 1
-        }
-      }
-      def sym(tbl: Map[Int, (Int, Int)], s: Int): Unit = { val (c, l) = tbl(s); put(c, l) }
-      def flushTo(o: java.io.ByteArrayOutputStream): Unit = {
-        if (n > 0) { acc = (acc << (8 - n)) | ((1 << (8 - n)) - 1); buf.write(acc); if (acc == 0xFF) buf.write(0x00); acc = 0; n = 0 }
-        val a = buf.toByteArray; o.write(a, 0, a.length)
-      }
+    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int)(body: => Unit): Unit = {
+      o.sos(comps, ss, se, ah, al)
+      body
+      o.flush()
     }
-    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int)(body: Bits => Unit): Unit = {
-      marker(0xDA); w16(2 + 1 + 2 * comps.length + 3); w8(comps.length)
-      comps.foreach { c => w8(c); w8(0x00) }
-      w8(ss); w8(se); w8((ah << 4) | al)
-      val bits = new Bits
-      body(bits)
-      bits.flushTo(out)
+    // an EOB run of `run` blocks (1 to 0x7FFF): EOBr symbol + r extra bits
+    def eobRun(run: Int): Unit = {
+      var r = 0
+      while ((2 << r) <= run) r += 1 // r = floor(log2(run))
+      o.ac(r << 4)
+      o.bits(run - (1 << r), r)
     }
     // DC-scan luma block order: raster when single-component, MCU-major
     // (vb, hb inner) when interleaved 4:2:0
@@ -3713,32 +3462,25 @@ object Multimodal {
     // scan 1: DC first, Al=1 (arithmetic shift per T.81); interleaved
     // over the 4:2:0 MCU when color (4 luma + Cb + Cr, neutral chroma =
     // zero diffs)
-    sos(1 to nc, 0, 0, 0, 1) { bits =>
+    sos(1 to nc, 0, 0, 0, 1) {
       var pred = 0
       var inMcu = 0
       dcLumaOrder.foreach { blk =>
         val v = coefZ(blk)(0) >> 1
         val diff = v - pred
         pred = v
-        val c = cat(diff)
-        bits.sym(dcCode, c)
-        if (c > 0) bits.put(if (diff >= 0) diff else diff + (1 << c) - 1, c)
+        val c = jpegCat(diff)
+        o.dc(c); o.value(diff, c)
         inMcu += 1
         if (color420 && inMcu == 4) { // Cb then Cr, diff 0
-          bits.sym(dcCode, 0); bits.sym(dcCode, 0); inMcu = 0
+          o.dc(0); o.dc(0); inMcu = 0
         }
       }
     }
     // scans 2+3: AC first passes at Al=1, split spectral bands, EOBRUN-batched
-    def acFirst(ss: Int, se: Int, al: Int): Unit = sos(Seq(1), ss, se, 0, al) { bits =>
+    def acFirst(ss: Int, se: Int, al: Int): Unit = sos(Seq(1), ss, se, 0, al) {
       var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        var r = 0
-        while ((2 << r) <= eobrun) r += 1 // r = floor(log2(eobrun))
-        bits.sym(acCode, r << 4)
-        if (r > 0) bits.put(eobrun - (1 << r), r)
-        eobrun = 0
-      }
+      def flushEob(): Unit = if (eobrun > 0) { eobRun(eobrun); eobrun = 0 }
       for (blk <- 0 until nBlk) {
         val band = (ss to se).map(k => truncMag(coefZ(blk)(k), al))
         if (band.forall(_ == 0)) {
@@ -3753,10 +3495,9 @@ object Multimodal {
             val tv = truncMag(coefZ(blk)(k), al)
             if (tv == 0) r += 1
             else {
-              while (r > 15) { bits.sym(acCode, 0xF0); r -= 16 }
-              val s = cat(tv)
-              bits.sym(acCode, (r << 4) | s)
-              bits.put(if (tv >= 0) tv else tv + (1 << s) - 1, s)
+              while (r > 15) { o.ac(0xF0); r -= 16 }
+              val s = jpegCat(tv)
+              o.ac((r << 4) | s); o.value(tv, s)
               r = 0
             }
           }
@@ -3770,42 +3511,39 @@ object Multimodal {
     // chroma AC first passes (color only): each chroma component's OWN
     // quarter-size raster, all-zero bands = pure EOBRUN batches — the
     // walk exercises the decoder's non-interleaved subsampled addressing
-    if (color420) for (comp <- Seq(2, 3)) sos(Seq(comp), 1, 63, 0, 0) { bits =>
+    if (color420) for (comp <- Seq(2, 3)) sos(Seq(comp), 1, 63, 0, 0) {
       var left = (bw / 2) * (bh / 2)
       while (left > 0) {
         val run = math.min(left, 0x7FFF)
-        var r = 0
-        while ((2 << r) <= run) r += 1
-        bits.sym(acCode, r << 4)
-        if (r > 0) bits.put(run - (1 << r), r)
+        eobRun(run)
         left -= run
       }
     }
     // scan 4: DC refinement (Ah=1, Al=0) — the low bit per block;
     // interleaved over the MCU when color (chroma bits are 0)
-    sos(1 to nc, 0, 0, 1, 0) { bits =>
+    sos(1 to nc, 0, 0, 1, 0) {
       var inMcu = 0
       dcLumaOrder.foreach { blk =>
-        bits.put(coefZ(blk)(0) & 1, 1)
+        o.bits(coefZ(blk)(0) & 1, 1)
         inMcu += 1
-        if (color420 && inMcu == 4) { bits.put(0, 1); bits.put(0, 1); inMcu = 0 }
+        if (color420 && inMcu == 4) { o.bits(0, 1); o.bits(0, 1); inMcu = 0 }
       }
     }
     // scan 5: AC refinement over 1..63 (Ah=1, Al=0), libjpeg's deferred
     // buffer discipline: correction bits flush AFTER the next symbol
-    sos(Seq(1), 1, 63, 1, 0) { bits =>
+    sos(Seq(1), 1, 63, 1, 0) {
       val al = 0; val ah = 1
       for (blk <- 0 until nBlk) {
         var r = 0
         val pending = scala.collection.mutable.ArrayBuffer.empty[Int]
-        def flushPending(): Unit = { pending.foreach(bits.put(_, 1)); pending.clear() }
+        def flushPending(): Unit = { pending.foreach(o.bits(_, 1)); pending.clear() }
         // the ZRL flush runs at EVERY nonzero encounter (correction OR
         // birth) BEFORE buffering/emitting it — libjpeg's discipline.
         // Flushing only at births would emit corrections that the
         // decoder's 16-zero ZRL window never walks past, misaligning
         // the stream.
         def zrlFlush(): Unit =
-          while (r > 15) { bits.sym(acCode, 0xF0); r -= 16; flushPending() }
+          while (r > 15) { o.ac(0xF0); r -= 16; flushPending() }
         for (k <- 1 to 63) {
           val v = coefZ(blk)(k)
           val hist = truncMag(v, ah)
@@ -3816,20 +3554,20 @@ object Multimodal {
           else {
             // birth (must be ±1 at this precision)
             zrlFlush()
-            bits.sym(acCode, (r << 4) | 1)
-            bits.put(if (v > 0) 1 else 0, 1)
+            o.ac((r << 4) | 1)
+            o.bits(if (v > 0) 1 else 0, 1)
             flushPending()
             r = 0
           }
         }
         if (r > 0 || pending.nonEmpty) { // end-of-block: EOB + tail corrections
-          bits.sym(acCode, 0x00)
+          o.ac(0x00)
           flushPending()
         }
       }
     }
-    marker(0xD9)
-    out.toByteArray
+    o.marker(0xD9)
+    o.out.toByteArray
   }
 
   /** Minimal JPEG: SOI, a full APP0/JFIF segment, an SOF0 frame header
@@ -4001,17 +3739,8 @@ object Multimodal {
     // DEFLATE's hard expansion ceiling bounds the allocation a crafted
     // header can demand: raw cannot legally exceed ~1032x the stream
     if (rawLen > comp.length.toLong * 1032L + 4096L) return None
-    val raw = new Array[Byte](rawLen.toInt)
-    try graft.serde.Zlib.withInflater(nowrap = false) { inf =>
-      inf.setInput(comp)
-      var off = 0
-      while (off < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, off, raw.length - off)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        off += n
-      }
-      if (off != raw.length) return None // short or oversized pixel data
-    } catch { case _: java.util.zip.DataFormatException => return None }
+    val raw = graft.serde.Zlib.inflateExact(comp, 0, comp.length, nowrap = false,
+      rawLen.toInt).getOrElse(return None) // corrupt, truncated or short pixel data
     // unfilter per pass (RFC 2083 §6): each row starts with its filter
     // type, `prev` never crosses a pass boundary. The filter unit is the
     // byte-ceiling bpp (1 for sub-byte packing)
@@ -4383,7 +4112,7 @@ object Multimodal {
       else if (m != null && m.length >= 3 && m(0) == 'G' && m(1) == 'I' && m(2) == 'F')
         decodeGifGray(m)
       else if (m != null && m.length >= 2 && (m(0) & 0xFF) == 0xFF && (m(1) & 0xFF) == 0xD8)
-        decodeJpegGray(m).orElse(decodeJpegProgressive(m))
+        decodeJpegGray(m)
       else if (Tiff.isTiff(m)) Tiff.decodeGray(m)
       else if (m != null && m.length >= 6 && m(0) == 0 && m(1) == 0 &&
         (m(2) == 1 || m(2) == 2) && m(3) == 0)

@@ -581,13 +581,14 @@ object Pdf {
       }
       if (predictor > 1) return None
       val step: Option[Array[Byte]] = filters(i) match {
-        case "FlateDecode" => inflate(acc, maxInflate)
+        case "FlateDecode" => graft.serde.Zlib.inflate(acc, 0, acc.length, nowrap = false, maxInflate)
         case "LZWDecode" =>
           val early = p.flatMap(_.get("EarlyChange")) match {
             case Some(PNum(v)) => v != 0
             case _ => true
           }
-          lzwDecode(acc, early, maxInflate)
+          graft.serde.Lzw.decode(acc, 0, acc.length, early, maxInflate + 1)
+            .filter(_.length <= maxInflate) // longer: the bomb guard
         case "ASCIIHexDecode" => asciiHexDecode(acc)
         case "ASCII85Decode" => ascii85Decode(acc, maxInflate)
         case "RunLengthDecode" => runLengthDecode(acc, maxInflate)
@@ -698,95 +699,6 @@ object Pdf {
       if (out.size > max) return None
     }
     Some(out.toByteArray)
-  }
-
-  /** LZWDecode (ISO 32000 §7.4.4 — the TIFF 6.0 variant): MSB-first
-    * 9→12-bit codes, 256 = clear, 257 = EOD, the KwKwK first-use case,
-    * width growth one code EARLY by default (/EarlyChange 1). Linked
-    * dictionary (prev, byte) pairs — allocation is the fixed 4096-entry
-    * table plus the bounded output. A code beyond the table is
-    * malformed. */
-  private[graft] def lzwDecode(b: Array[Byte], earlyChange: Boolean, max: Int): Option[Array[Byte]] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val dictPrev = new Array[Int](4096)
-    val dictByte = new Array[Byte](4096)
-    var size = 258
-    var width = 9
-    var bitPos = 0L
-    val bitEnd = b.length.toLong * 8
-    def next(): Int = {
-      if (bitPos + width > bitEnd) return -1
-      var v = 0
-      var k = 0
-      while (k < width) {
-        v = (v << 1) | ((b((bitPos >> 3).toInt) >> (7 - (bitPos & 7)).toInt) & 1)
-        bitPos += 1; k += 1
-      }
-      v
-    }
-    val seq = new Array[Byte](4096)
-    def firstByteOf(code: Int): Byte = {
-      var c = code
-      while (c >= 258) c = dictPrev(c)
-      c.toByte
-    }
-    def write(code: Int): Unit = {
-      var nn = 0
-      var c = code
-      while (c >= 258) { seq(nn) = dictByte(c); nn += 1; c = dictPrev(c) }
-      seq(nn) = c.toByte; nn += 1
-      var k = nn - 1
-      while (k >= 0) { out.write(seq(k).toInt); k -= 1 }
-    }
-    def grow(): Unit =
-      if (width < 12 && size >= (1 << width) - (if (earlyChange) 1 else 0))
-        width += 1
-    var prev = -1
-    var done = false
-    while (!done) {
-      val code = next()
-      if (code < 0 || code == 257) done = true
-      else if (code == 256) { size = 258; width = 9; prev = -1 }
-      else if (prev < 0) {
-        if (code > 255) return None
-        write(code)
-        prev = code
-      } else if (code < size) {
-        write(code)
-        if (size < 4096) {
-          dictPrev(size) = prev; dictByte(size) = firstByteOf(code); size += 1
-        }
-        grow()
-        prev = code
-      } else if (code == size && size < 4096) { // KwKwK
-        dictPrev(size) = prev; dictByte(size) = firstByteOf(prev); size += 1
-        write(size - 1)
-        grow()
-        prev = size - 1
-      } else return None
-      if (out.size > max) return None
-    }
-    Some(out.toByteArray)
-  }
-
-  private def inflate(b: Array[Byte], max: Int): Option[Array[Byte]] = {
-    // pooled inflater (r15 optimization): a native Inflater init per
-    // stream dominated CPU on flate-heavy documents; semantics unchanged
-    try graft.serde.Zlib.withInflater(nowrap = false) { inf =>
-      inf.setInput(b)
-      val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val k = inf.inflate(buf)
-        if (k == 0) {
-          if (inf.needsInput() || inf.needsDictionary()) return None
-        } else {
-          out.write(buf, 0, k)
-          if (out.size > max) return None
-        }
-      }
-      Some(out.toByteArray)
-    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Page-tree walk from trailer /Root → /Pages: /Pages nodes recurse
@@ -1551,54 +1463,6 @@ object Pdf {
     out.toByteArray
   }
 
-  /** PDF LZW encoder mirroring the decode pair's width discipline: the
-    * encoder bumps at 2^w, one table add AHEAD of the decoder's
-    * 2^w − 1 (the early-change off-by-one the TIFF pair cross-validated
-    * against ImageIO in MediaInteropSpec). */
-  private def lzwEncodePdf(data: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var acc = 0L
-    var accBits = 0
-    var width = 9
-    def emit(code: Int): Unit = {
-      acc = (acc << width) | code
-      accBits += width
-      while (accBits >= 8) {
-        out.write(((acc >> (accBits - 8)) & 0xFF).toInt)
-        accBits -= 8
-      }
-    }
-    val dict = scala.collection.mutable.HashMap.empty[Long, Int]
-    var nextCode = 258
-    emit(256) // CLEAR opens the stream
-    var cur = -1
-    data.foreach { bb =>
-      val byte = bb & 0xFF
-      if (cur == -1) cur = byte
-      else {
-        val key = cur.toLong << 8 | byte
-        dict.get(key) match {
-          case Some(c) => cur = c
-          case None =>
-            emit(cur)
-            if (nextCode < 4093) {
-              dict(key) = nextCode
-              nextCode += 1
-              if (nextCode == (1 << width) && width < 12) width += 1
-            } else {
-              emit(256)
-              dict.clear(); nextCode = 258; width = 9
-            }
-            cur = byte
-        }
-      }
-    }
-    if (cur != -1) emit(cur)
-    emit(257) // EOD
-    if (accBits > 0) out.write(((acc << (8 - accBits)) & 0xFF).toInt)
-    out.toByteArray
-  }
-
   /** Filter-exercise fixture (round 15): one page whose content stream
     * goes through `mode` — 0 ASCIIHexDecode, 1 ASCII85Decode, 2
     * RunLengthDecode, 3 LZWDecode, 4 the chain [ASCII85Decode,
@@ -1619,7 +1483,7 @@ object Pdf {
       case 0 => (asciiHexEncode(plain), "/Filter /ASCIIHexDecode")
       case 1 => (ascii85Encode(plain), "/Filter /ASCII85Decode")
       case 2 => (runLengthEncode(plain), "/Filter /RunLengthDecode")
-      case 3 => (lzwEncodePdf(plain), "/Filter /LZWDecode")
+      case 3 => (graft.serde.Lzw.encode(plain), "/Filter /LZWDecode")
       case 4 => (ascii85Encode(deflate(plain)),
         "/Filter [/ASCII85Decode /FlateDecode]")
       case _ => (asciiHexEncode(runLengthEncode(plain)),

@@ -154,78 +154,6 @@ object Tiff {
     o - outPos
   }
 
-  /** TIFF-variant LZW decode (TIFF 6.0 §13): MSB-first code packing,
-    * ClearCode 256 / EOI 257, first dictionary entry 258, code width
-    * 9→12 with the EARLY CHANGE — width bumps when the next free code
-    * equals 2^width − 1, one code sooner than GIF's LSB-first variant
-    * ([[Multimodal.decodeGifGray]]); the two dialects share nothing but
-    * the dictionary idea, so this is a separate walk, not a flag. Output
-    * is capped at `need` (the strip's exact decoded size), which bounds
-    * the allocation no matter what a crafted stream claims — LZW can
-    * expand ~3600:1 and must never expand into attacker-chosen memory. */
-  private def lzwDecode(b: Array[Byte], off: Int, len: Int,
-      out: Array[Byte], outPos: Int, need: Int): Int = {
-    val end = math.min(off.toLong + len, b.length.toLong).toInt
-    var bitPos = off.toLong * 8
-    val bitEnd = end.toLong * 8
-    def next(width: Int): Int = {
-      if (bitPos + width > bitEnd) return -1
-      var v = 0
-      var k = 0
-      while (k < width) {
-        val byte = b((bitPos >> 3).toInt) & 0xFF
-        v = (v << 1) | ((byte >> (7 - (bitPos & 7)).toInt) & 1)
-        bitPos += 1; k += 1
-      }
-      v
-    }
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val stack = new Array[Byte](4096)
-    var nextCode = 258
-    var width = 9
-    var o = outPos
-    val outEnd = outPos + need
-    var prev = -1
-    while (o < outEnd) {
-      val code = next(width)
-      if (code < 0 || code == 257) return o - outPos // EOI or exhausted
-      if (code == 256) { nextCode = 258; width = 9; prev = -1 }
-      else {
-        if (prev == -1) {
-          if (code > 255) return -1 // first code after CLEAR must be literal
-          out(o) = code.toByte; o += 1; prev = code
-        } else {
-          if (code > nextCode) return -1
-          val kwkw = code == nextCode // string = string(prev) + firstOf(string(prev))
-          var sp = if (kwkw) 1 else 0 // reserve stack(0) for the trailing first byte
-          var c = if (kwkw) prev else code
-          while (c > 255) { stack(sp) = suffix(c); sp += 1; c = prefix(c) }
-          val first = c.toByte
-          if (kwkw) stack(0) = first // emitted LAST (stack pops top-down)
-          // emit: first byte, then the suffix stack reversed
-          out(o) = first; o += 1
-          while (sp > 0 && o < outEnd) { sp -= 1; out(o) = stack(sp); o += 1 }
-          if (nextCode < 4096) {
-            prefix(nextCode) = prev; suffix(nextCode) = first
-            nextCode += 1
-            // EARLY CHANGE, decode side: bump at 2^w − 1 — one code
-            // sooner than the value range requires (the spec's codified
-            // off-by-one). The ENCODER bumps at 2^w; the pair is
-            // consistent because the decoder's table add for a given
-            // stream position lags the encoder's by exactly one (the
-            // first data code adds nothing). Cross-validated in both
-            // directions against the JDK's ImageIO TIFF codec in
-            // MediaInteropSpec.
-            if (nextCode == (1 << width) - 1 && width < 12) width += 1
-          }
-          prev = code
-        }
-      }
-    }
-    o - outPos
-  }
-
   /** Full grayscale decode: IFD → per-segment decompress (STRIPS or, new
     * in round 13, TILES — tags 322-325, each tile a full tileW×tileL
     * block decompressed independently and scattered with edge clipping,
@@ -267,21 +195,17 @@ object Tiff {
         case 1 =>
           if (off + need > b.length || cnt < need) -1
           else { System.arraycopy(b, off.toInt, dst, dstPos, need); need }
-        case 5 => lzwDecode(b, off.toInt, math.min(cnt, b.length - off).toInt,
-          dst, dstPos, need)
+        case 5 =>
+          graft.serde.Lzw.decode(b, off.toInt, math.min(cnt, b.length - off).toInt,
+            earlyChange = true, need).fold(-1) { d =>
+            System.arraycopy(d, 0, dst, dstPos, d.length); d.length
+          }
         case 8 | 32946 => // Adobe deflate (8) and the legacy code (32946):
-          // a plain zlib stream per segment, pooled inflater (r15 opt)
-          try graft.serde.Zlib.withInflater(nowrap = false) { inf =>
-            inf.setInput(b, off.toInt, math.min(cnt, b.length - off).toInt)
-            var total = 0
-            var stalled = false
-            while (total < need && !inf.finished() && !stalled) {
-              val n = inf.inflate(dst, dstPos + total, need - total)
-              if (n == 0 && (inf.needsInput() || inf.needsDictionary())) stalled = true
-              total += n
-            }
-            if (stalled) -1 else total
-          } catch { case _: java.util.zip.DataFormatException => -1 }
+          // a plain zlib stream per segment
+          graft.serde.Zlib.inflateExact(b, off.toInt, math.min(cnt, b.length - off).toInt,
+            nowrap = false, need).fold(-1) { d =>
+            System.arraycopy(d, 0, dst, dstPos, need); need
+          }
         case _ => packBitsDecode(b, off.toInt, math.min(cnt, b.length - off).toInt,
           dst, dstPos, need)
       }
@@ -399,54 +323,6 @@ object Tiff {
     out.toArray
   }
 
-  private def lzwEncode(data: Array[Byte]): Array[Byte] = {
-    val out = mutable.ArrayBuffer[Byte]()
-    var acc = 0L
-    var accBits = 0
-    var width = 9
-    def emit(code: Int): Unit = {
-      acc = (acc << width) | code
-      accBits += width
-      while (accBits >= 8) {
-        out += ((acc >> (accBits - 8)) & 0xFF).toByte
-        accBits -= 8
-      }
-    }
-    val dict = mutable.HashMap[Long, Int]() // (prefixCode << 8 | byte) -> code
-    var nextCode = 258
-    emit(256) // CLEAR opens the stream (spec requires it)
-    var cur = -1
-    var i = 0
-    while (i < data.length) {
-      val byte = data(i) & 0xFF
-      if (cur == -1) cur = byte
-      else {
-        val key = cur.toLong << 8 | byte
-        dict.get(key) match {
-          case Some(c) => cur = c
-          case None =>
-            emit(cur)
-            if (nextCode < 4093) {
-              dict(key) = nextCode
-              nextCode += 1
-              // encode-side early change: one add AHEAD of the decoder,
-              // so the matching threshold is 2^w (see lzwDecode)
-              if (nextCode == (1 << width) && width < 12) width += 1
-            } else { // table nearly full: CLEAR and restart (exercises mid-stream reset)
-              emit(256)
-              dict.clear(); nextCode = 258; width = 9
-            }
-            cur = byte
-        }
-      }
-      i += 1
-    }
-    if (cur != -1) emit(cur)
-    emit(257) // EOI
-    if (accBits > 0) out += ((acc << (8 - accBits)) & 0xFF).toByte
-    out.toArray
-  }
-
   /** Render 8-bit grayscale pixels through a REAL TIFF: either byte
     * order, gray (spp=1) or equal-channel RGB (spp=3 — BT.601 of (v,v,v)
     * is exactly v, so the pixel replay stays container-blind),
@@ -502,7 +378,7 @@ object Tiff {
       }
       compression match {
         case 1 => raw
-        case 5 => lzwEncode(raw)
+        case 5 => graft.serde.Lzw.encode(raw)
         case 8 => // Adobe deflate: one zlib stream per segment
           val defl = new java.util.zip.Deflater()
           defl.setInput(raw); defl.finish()

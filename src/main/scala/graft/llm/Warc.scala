@@ -4,6 +4,7 @@ package graft.llm
 import org.apache.spark.sql.Dataset
 
 import graft.llm.Multimodal.Media
+import graft.serde.Zlib
 
 /** WARC ingestion (round 13): the entry point of a web-scale training
   * corpus. Common Crawl ships ~100 TB per crawl as WARC files (ISO
@@ -51,14 +52,6 @@ object Warc {
       http_status: Int, payload_len: Long, payload: String, charset: String)
 
   private val CRLF = "\r\n".getBytes("ISO-8859-1")
-
-  /** Multi-member gunzip with a bomb guard. None on any stream error
-    * or when the inflated size crosses `max`. Delegates to the pooled
-    * [[graft.serde.Zlib.gunzipAll]] (r15 optimization: a GZIPInputStream
-    * per record paid a native Inflater init per call on the decode hot
-    * path; semantics are GZIPInputStream-identical, ZlibSpec holds it). */
-  private[graft] def gunzipAll(b: Array[Byte], max: Int = 1 << 26): Option[Array[Byte]] =
-    graft.serde.Zlib.gunzipAll(b, max)
 
   private def indexOfCrlf(b: Array[Byte], from: Int, end: Int): Int = {
     var i = from
@@ -218,25 +211,10 @@ object Warc {
     * it bare — both exist in real crawls). None → caller keeps raw. */
   private def contentDecode(enc: String, b: Array[Byte]): Option[Array[Byte]] =
     enc match {
-      case "gzip" | "x-gzip" => gunzipAll(b)
+      case "gzip" | "x-gzip" => Zlib.gunzipAll(b)
       case "deflate" =>
-        def inflate(nowrap: Boolean): Option[Array[Byte]] =
-          try graft.serde.Zlib.withInflater(nowrap) { inf =>
-            inf.setInput(b)
-            val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 16))
-            val buf = new Array[Byte](8192)
-            while (!inf.finished()) {
-              val k = inf.inflate(buf)
-              if (k == 0) {
-                if (inf.needsInput() || inf.needsDictionary()) return None
-              } else {
-                out.write(buf, 0, k)
-                if (out.size > (1 << 26)) return None
-              }
-            }
-            Some(out.toByteArray)
-          } catch { case scala.util.control.NonFatal(_) => None }
-        inflate(false).orElse(inflate(true))
+        Zlib.inflate(b, 0, b.length, nowrap = false, 1 << 26)
+          .orElse(Zlib.inflate(b, 0, b.length, nowrap = true, 1 << 26))
       case _ => None // identity/br/unknown: keep raw
     }
 
@@ -295,7 +273,7 @@ object Warc {
     try {
       val b =
         if ((raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B)
-          gunzipAll(raw).getOrElse(return Nil)
+          Zlib.gunzipAll(raw).getOrElse(return Nil)
         else raw
       val out = Seq.newBuilder[WarcRecord]
       var p = 0
@@ -586,7 +564,7 @@ object Warc {
   // pass rides. Building it is a pure flatMap over the archive bytes —
   // and for the Common Crawl layout (one gzip member per record) the
   // offsets must be MEMBER offsets in the COMPRESSED file, so the walk
-  // tracks gzip member boundaries with a raw Inflater instead of
+  // goes member by member ([[graft.serde.Zlib.gzipMembers]]) instead of
   // decompressing the whole stream.
   //
   // Design choices, documented:
@@ -625,57 +603,9 @@ object Warc {
     md.digest().map(x => f"${x & 0xFF}%02x").mkString
   }
 
-  /** Gzip member walk of a member-concatenated archive: (offset,
-    * length, inflatedBytes) per member — ONE inflation serves both the
-    * CDX byte frame and the record parse (measuring lengths with a
-    * discard pass and re-inflating would double the decompression CPU
-    * on the 100 TB hot path). Prefix-kept before the first structural
-    * violation. Header parse per RFC 1952 (FEXTRA/FNAME/FCOMMENT/FHCRC
-    * honored), body length from the raw Inflater's `getBytesRead`,
-    * then the 8-byte trailer. */
-  private[graft] def gzipMembers(raw: Array[Byte]): Seq[(Long, Long, Array[Byte])] = {
-    val out = Seq.newBuilder[(Long, Long, Array[Byte])]
-    var p = 0
-    val n = raw.length
-    try {
-      while (p + 10 <= n && (raw(p) & 0xFF) == 0x1F && (raw(p + 1) & 0xFF) == 0x8B &&
-          (raw(p + 2) & 0xFF) == 0x08) {
-        val start = p
-        val flg = raw(p + 3) & 0xFF
-        var q = p + 10
-        if ((flg & 4) != 0) { // FEXTRA
-          if (q + 2 > n) return out.result()
-          q += 2 + ((raw(q) & 0xFF) | ((raw(q + 1) & 0xFF) << 8))
-        }
-        if ((flg & 8) != 0) { while (q < n && raw(q) != 0) q += 1; q += 1 } // FNAME
-        if ((flg & 16) != 0) { while (q < n && raw(q) != 0) q += 1; q += 1 } // FCOMMENT
-        if ((flg & 2) != 0) q += 2 // FHCRC
-        if (q >= n) return out.result()
-        var bodyOut: Array[Byte] = null
-        val consumed = graft.serde.Zlib.withInflater(nowrap = true) { inf =>
-          inf.setInput(raw, q, n - q)
-          val body = new java.io.ByteArrayOutputStream(8192)
-          val buf = new Array[Byte](8192)
-          while (!inf.finished()) {
-            val k = inf.inflate(buf)
-            if (k == 0 && !inf.finished()) return out.result()
-            body.write(buf, 0, k)
-            if (body.size > (1 << 26)) return out.result()
-          }
-          bodyOut = body.toByteArray
-          inf.getBytesRead
-        }
-        p = q + consumed.toInt + 8 // CRC32 + ISIZE trailer
-        if (p > n) return out.result()
-        out += ((start.toLong, (p - start).toLong, bodyOut))
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-    out.result()
-  }
-
   /** Member frames only — the WarcSpec contiguity surface. */
   private[graft] def gzipMemberBounds(raw: Array[Byte]): Seq[(Long, Long)] =
-    gzipMembers(raw).map { case (o, l, _) => (o, l) }
+    Zlib.gzipMembers(raw).map { case (o, l, _) => (o, l) }
 
   /** Walk records in `[from, to)` of UNCOMPRESSED bytes, emitting the
     * slim CDX view (no text decode — the index never materializes
@@ -730,7 +660,7 @@ object Warc {
     val rows = Seq.newBuilder[CdxRow]
     var idx = 0
     if ((raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B) {
-      gzipMembers(raw).foreach { case (off, len, m) =>
+      Zlib.gzipMembers(raw).foreach { case (off, len, m) =>
         cdxWalk(m, 0, m.length).foreach { case (r, _, _) =>
           rows += r.copy(rec_idx = idx, offset = off, rlength = len)
           idx += 1
@@ -798,7 +728,7 @@ object Warc {
         in.readFully(r.offset, buf) // positioned read: thread-safe, seek-free
         val bytes =
           if (buf.length >= 2 && (buf(0) & 0xFF) == 0x1F && (buf(1) & 0xFF) == 0x8B)
-            gunzipAll(buf).getOrElse(Array.emptyByteArray)
+            Zlib.gunzipAll(buf).getOrElse(Array.emptyByteArray)
           else buf
         // a gzip member MAY hold several records sharing this frame
         // (the cdxIndex contract) — select by the index row's own

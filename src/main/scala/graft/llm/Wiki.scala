@@ -41,7 +41,7 @@ object Wiki {
       page_id: Long, redirect: String, timestamp: String, text: String)
 
   /** Multi-stream bunzip2 with the same bomb guard as
-    * [[Warc.gunzipAll]]. None on any stream error or `max` overflow. */
+    * [[graft.serde.Zlib.gunzipAll]]. None on any stream error or `max` overflow. */
   private[graft] def bunzipAll(b: Array[Byte], max: Int = 1 << 26): Option[Array[Byte]] = {
     try {
       val in = new org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream(
@@ -86,7 +86,7 @@ object Wiki {
     try {
       val b =
         if ((raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B)
-          Warc.gunzipAll(raw).getOrElse(return Nil)
+          graft.serde.Zlib.gunzipAll(raw).getOrElse(return Nil)
         else if (raw(0) == 'B' && raw(1) == 'Z' && raw(2) == 'h')
           bunzipAll(raw).getOrElse(return Nil)
         else raw
@@ -345,7 +345,7 @@ object Wiki {
     if (raw == null || raw.length == 0) return Nil
     val b =
       if (raw.length >= 2 && (raw(0) & 0xFF) == 0x1F && (raw(1) & 0xFF) == 0x8B)
-        Warc.gunzipAll(raw).getOrElse(return Nil)
+        graft.serde.Zlib.gunzipAll(raw).getOrElse(return Nil)
       else if (raw.length >= 3 && raw(0) == 'B' && raw(1) == 'Z' && raw(2) == 'h')
         bunzipAll(raw).getOrElse(return Nil)
       else raw

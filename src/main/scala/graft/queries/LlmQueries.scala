@@ -425,7 +425,7 @@ object LlmQueries extends Registry {
     * — DC-only blocks make the lossy codec bit-exact, so the pixel
     * replay oracle stays valid. Restart intervals for every third doc
     * exercise the RSTn path corpus-wide. */
-  private def jpegMedia(id: Long): Multimodal.Media = {
+  private[graft] def jpegMedia(id: Long): Multimodal.Media = {
     val (w, h, gray) = (24, 16, blockGray(id, 24))
     Multimodal.Media(id,
       Multimodal.syntheticJpegPixels(w, h, gray,
@@ -441,7 +441,7 @@ object LlmQueries extends Registry {
     * applies the correct transform lands back on the canonical hash
     * the oracle replays. A wrong transpose direction or a skipped
     * mirror produces a different hash on ~7/8 of the corpus. */
-  private def exifMedia(id: Long): Multimodal.Media = {
+  private[graft] def exifMedia(id: Long): Multimodal.Media = {
     val (w, h, canonical) = (24, 16, blockGray(id, 24))
     val o = (id % 8 + 1).toInt
     val inv = o match { case 6 => 8; case 8 => 6; case other => other }
@@ -466,7 +466,7 @@ object LlmQueries extends Registry {
   }
 
   /** [[jpegMedia]]'s DC-block pixels through the PROGRESSIVE encoder. */
-  private def jpegProgMedia(id: Long): Multimodal.Media = {
+  private[graft] def jpegProgMedia(id: Long): Multimodal.Media = {
     val (w, h, gray) = (24, 16, blockGray(id, 24))
     Multimodal.Media(id, Multimodal.syntheticJpegProgressive(w, h, gray), "image/jpeg")
   }
@@ -476,7 +476,7 @@ object LlmQueries extends Registry {
     * MCU-major luma block order, and the chroma components' quarter-size
     * AC rasters are all load-bearing; the luma plane — and therefore the
     * replayed hash — is identical arithmetic to the grayscale form. */
-  private def jpegProg420Media(id: Long): Multimodal.Media = {
+  private[graft] def jpegProg420Media(id: Long): Multimodal.Media = {
     val (w, h, gray) = (32, 16, blockGray(id, 32))
     Multimodal.Media(id,
       Multimodal.syntheticJpegProgressive(w, h, gray, color420 = true), "image/jpeg")
@@ -488,7 +488,7 @@ object LlmQueries extends Registry {
     * II/MM by id % 5, gray vs equal-channel RGB by parity, strip heights
     * varying, and every 7th doc stored WhiteIsZero (inverse bytes whose
     * decode must invert back). Same arithmetic → same replay. */
-  private def tiffMedia(id: Long): Multimodal.Media = {
+  private[graft] def tiffMedia(id: Long): Multimodal.Media = {
     val (w, h, gray) = (18, 16, dhashGray(id))
     val comp = (id % 4) match { case 0 => 1; case 1 => 5; case 2 => 32773; case _ => 8 }
     val photoZero = id % 7 == 0 && id % 2 == 0
@@ -517,7 +517,7 @@ object LlmQueries extends Registry {
     * baseline JPEG, TIFF (LZW + predictor, big-endian on parity), or
     * an OS/2 core-header BMP. Identical pixels through six real
     * container/codec forms. */
-  private def crossContainerMedia(id: Long): Multimodal.Media = {
+  private[graft] def crossContainerMedia(id: Long): Multimodal.Media = {
     val (w, h, gray) = (24, 16, blockGray(id, 24))
     (id % 7) match {
       case 0 => Multimodal.Media(id, Multimodal.syntheticBmpPixels(w, h, gray), "image/bmp")
@@ -900,7 +900,7 @@ object LlmQueries extends Registry {
   /** The q_pdf_text_filters fixture (round 15): 2 + id%2 lines — the
     * middle one carrying a same-char run for RunLength's repeat branch
     * — through filter mode id%6. */
-  private def filterPdfMedia(id: Long): Multimodal.Media = {
+  private[graft] def filterPdfMedia(id: Long): Multimodal.Media = {
     val lines = (0 until (2 + id % 2).toInt).map { j =>
       if (j == 1) s"r${"z" * (3 + (id % 5).toInt)} D$id"
       else s"FL D$id L$j (q=${(id + 11 * j) % 37})"

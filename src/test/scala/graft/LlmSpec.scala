@@ -2414,14 +2414,15 @@ class LlmSpec extends SparkSpec {
     // the hash sees pixels, not containers: JPEG(DC-only) == BMP
     assert(Multimodal.imageHashOf(jpg) ==
       Multimodal.imageHashOf(Multimodal.syntheticBmpPixels(w, h, flat)), "JPEG vs BMP hash")
-    // rejects: truncation mid-entropy, progressive SOF2, the header-only
-    // stub fixture (no scan), garbage
+    // rejects: truncation mid-entropy, a frame marked SOF2 whose scan is
+    // sequential (T.81 B.2.3: Se=0 when Ss=0 in a progressive scan), the
+    // header-only stub fixture (no scan), garbage
     assert(Multimodal.decodeJpegGray(jpg.dropRight(10)).isEmpty, "truncation")
     val prog = jpg.clone()
     val sofAt = prog.indices.find(i =>
       (prog(i) & 0xFF) == 0xFF && (prog(i + 1) & 0xFF) == 0xC0).get
     prog(sofAt + 1) = 0xC2.toByte
-    assert(Multimodal.decodeJpegGray(prog).isEmpty, "progressive must reject")
+    assert(Multimodal.decodeJpegGray(prog).isEmpty, "SOF2 with an Ss=0, Se=63 scan must reject")
     assert(Multimodal.decodeJpegGray(Multimodal.syntheticJpeg(8, 8)).isEmpty, "header-only")
     assert(Multimodal.decodeJpegGray("not a jpeg".getBytes).isEmpty)
   }
@@ -2718,11 +2719,12 @@ class LlmSpec extends SparkSpec {
     val blocks = Array.fill(3 * 2)(rnd.nextInt(256))
     val flat = Array.tabulate(w * h)(i => blocks((i / w / 8) * 3 + (i % w) / 8))
     val prog = Multimodal.syntheticJpegProgressive(w, h, flat)
-    assert(Multimodal.decodeJpegProgressive(prog).map(_._3.toSeq).contains(flat.toSeq),
+    assert(Multimodal.decodeJpegGray(prog).map(_._3.toSeq).contains(flat.toSeq),
       "progressive DC-only must round-trip exactly")
-    // the baseline decoder must refuse it, and the shared dispatch falls
-    // through to the progressive path — same hash as the BMP render
-    assert(Multimodal.decodeJpegGray(prog).isEmpty, "baseline decoder must refuse SOF2")
+    // the one decoder takes SOF2 as it takes SOF0, and so does the shared
+    // dispatch — same hash as the BMP render
+    assert(Multimodal.imageGrayOf(prog).map(_._3.toSeq).contains(flat.toSeq),
+      "the one decoder must decode SOF2")
     assert(Multimodal.imageHashOf(prog) ==
       Multimodal.imageHashOf(Multimodal.syntheticBmpPixels(w, h, flat)),
       "dispatch must reach the progressive decoder")
@@ -2730,12 +2732,12 @@ class LlmSpec extends SparkSpec {
     // blank blocks, ZRL gaps, and the refinement correction walk; with
     // all-ones quant the reconstruction stays within the IDCT rounding
     val smooth = Array.tabulate(32 * 32)(i => ((i % 32) * 5 + (i / 32) * 3) % 256)
-    val decS = Multimodal.decodeJpegProgressive(
+    val decS = Multimodal.decodeJpegGray(
       Multimodal.syntheticJpegProgressive(32, 32, smooth)).get._3
     assert(decS.zip(smooth).map { case (a, b) => math.abs(a - b) }.max <= 2,
       "smooth progressive error")
     val noisy = Array.fill(16 * 16)(rnd.nextInt(256))
-    val decN = Multimodal.decodeJpegProgressive(
+    val decN = Multimodal.decodeJpegGray(
       Multimodal.syntheticJpegProgressive(16, 16, noisy)).get._3
     assert(decN.zip(noisy).map { case (a, b) => math.abs(a - b) }.max <= 2,
       "noisy progressive error")
@@ -2744,7 +2746,7 @@ class LlmSpec extends SparkSpec {
     val sparse = Array.tabulate(32 * 32) { i =>
       if (i % 97 == 0) 255 else 128
     }
-    val decSp = Multimodal.decodeJpegProgressive(
+    val decSp = Multimodal.decodeJpegGray(
       Multimodal.syntheticJpegProgressive(32, 32, sparse)).get._3
     assert(decSp.zip(sparse).map { case (a, b) => math.abs(a - b) }.max <= 2,
       "sparse progressive error")
@@ -2753,8 +2755,8 @@ class LlmSpec extends SparkSpec {
     val base = Multimodal.decodeJpegGray(Multimodal.syntheticJpegPixels(32, 32, smooth)).get._3
     assert(base.toSeq == decS.toSeq, "progressive must equal baseline reconstruction")
     // corruption: truncation mid-scan rejects
-    assert(Multimodal.decodeJpegProgressive(prog.dropRight(8)).isEmpty, "truncation")
-    assert(Multimodal.decodeJpegProgressive("garbage".getBytes).isEmpty)
+    assert(Multimodal.decodeJpegGray(prog.dropRight(8)).isEmpty, "truncation")
+    assert(Multimodal.decodeJpegGray("garbage".getBytes).isEmpty)
     // 4:2:0 (round 12): interleaved DC MCUs (4 luma + Cb + Cr, luma
     // blocks MCU-major), chroma AC scans walking the QUARTER-size chroma
     // raster — the luma plane must be identical to the grayscale form.
@@ -2764,18 +2766,18 @@ class LlmSpec extends SparkSpec {
     val flat4 = Array.tabulate(w4 * h4)(i =>
       blocks4((i / w4 / 8) * (w4 / 8) + (i % w4) / 8))
     val prog4 = Multimodal.syntheticJpegProgressive(w4, h4, flat4, color420 = true)
-    assert(Multimodal.decodeJpegProgressive(prog4).map(_._3.toSeq).contains(flat4.toSeq),
+    assert(Multimodal.decodeJpegGray(prog4).map(_._3.toSeq).contains(flat4.toSeq),
       "progressive 4:2:0 DC-only must round-trip exactly")
     assert(Multimodal.imageHashOf(prog4) ==
       Multimodal.imageHashOf(Multimodal.syntheticBmpPixels(w4, h4, flat4)),
       "dispatch must reach the 4:2:0 progressive path")
     // general content through 4:2:0: luma AC scans + MCU DC order
     val smooth4 = Array.tabulate(32 * 32)(i => ((i % 32) * 5 + (i / 32) * 3) % 256)
-    val decS4 = Multimodal.decodeJpegProgressive(
+    val decS4 = Multimodal.decodeJpegGray(
       Multimodal.syntheticJpegProgressive(32, 32, smooth4, color420 = true)).get._3
     assert(decS4.zip(smooth4).map { case (a, b) => math.abs(a - b) }.max <= 2,
       "smooth 4:2:0 progressive error")
-    assert(decS4.toSeq == Multimodal.decodeJpegProgressive(
+    assert(decS4.toSeq == Multimodal.decodeJpegGray(
       Multimodal.syntheticJpegProgressive(32, 32, smooth4)).get._3.toSeq,
       "4:2:0 luma must equal the grayscale progressive render")
   }

@@ -771,6 +771,29 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("one codec per format in the decode layer: one JPEG decoder, one TIFF-dialect LZW, every inflate in Zlib") {
+    // the decode layer once kept two JPEG decoders (SOF0, SOF2) with four
+    // copies of the zigzag table, two LZW decoders (TIFF, PDF) and five
+    // hand-written Inflater loops, one of which spun forever on a zlib
+    // header that asks for a preset dictionary
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val code = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.map { p =>
+        p.toString -> Files.readAllLines(p).asScala.map(_.replaceAll("//.*", ""))
+          .filterNot(l => l.trim.startsWith("*") || l.trim.startsWith("/*")).mkString("\n")
+      }
+    def hits(r: scala.util.matching.Regex) =
+      code.flatMap { case (p, src) => r.findAllIn(src).map(m => s"$p: $m") }
+    val inflaters = hits("""\bInflater\b|withInflater|(?<!Zlib)\.inflate\(|InflaterInputStream|GZIPInputStream""".r)
+      .filterNot(_.startsWith("src/main/scala/graft/serde/Zlib.scala:"))
+    assert(inflaters.isEmpty, inflaters.mkString("\n"))
+    val zigzag = hits("""0,\s*1,\s*8,\s*16,\s*9,\s*2,\s*3,\s*10,""".r)
+    assert(zigzag.length == 1, zigzag.mkString("\n"))
+    val codecs = hits("""\bdef\s+(decodeJpegProgressive|lzw\w*)\b""".r)
+    assert(codecs.isEmpty, codecs.mkString("\n"))
+  }
+
   test("every session is built by graft.Session (one configuration, verified = benchmarked)") {
     // one factory: a second place that constructs a session under src/ is
     // how the oracle once checked different physical plans from the timed

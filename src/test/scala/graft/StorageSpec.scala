@@ -428,6 +428,29 @@ class StorageSpec extends SparkSpec {
       .contains(dir.resolve("meta.json").toString))
   }
 
+  test("metadata with trailing content: the index is rebuilt, a meta or group file fails naming the file") {
+    val fs = freshStorage()
+    fs.createTopic("t", 2)
+    fs.produce("t", sampleBatch(20))
+    fs.commit("g", "t", Map(0 -> 3L, 1 -> 4L))
+    val dir = java.nio.file.Paths.get(s"${fs.root}/topics/t")
+    val index = dir.resolve("index.json")
+    val meta = dir.resolve("meta.json")
+    val group = java.nio.file.Paths.get(s"${fs.root}/groups/g/t.json")
+    // what produce, createTopic and commit write parses under the strict reader
+    Seq(index, meta, group).foreach(p => graft.serde.Json.parse(Files.readString(p)))
+    val tampered = Files.readString(index) + "{\"files\": []}\n"
+    Files.writeString(index, tampered)
+    fs.produce("t", sampleBatch(5).limit(0)) // rewrites the index only when it was rebuilt
+    assert(Files.readString(index) != tampered, "an index with trailing content must be rebuilt")
+    assert(Files.readString(index).endsWith("\n]}\n"))
+    assertConsistent(fs, "t")
+    Files.writeString(group, Files.readString(group) + " garbage")
+    assert(intercept[IllegalStateException](fs.committed("g", "t")).getMessage.contains(group.toString))
+    Files.writeString(meta, Files.readString(meta) + "}")
+    assert(intercept[IllegalStateException](fs.partitions("t")).getMessage.contains(meta.toString))
+  }
+
   test("deleteRecords drops the index; produce continues the offsets") {
     val fs = freshStorage()
     fs.createTopic("t", 2)

@@ -1,6 +1,8 @@
 package graft.llm
 
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Systematic corrupt-input sweep over EVERY media decode entry point:
   * pure random buffers, random byte-flips of every valid fixture the
@@ -11,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * retries it, and kills it again — corrupt bytes are NORMAL input at
   * scale, not an error path). Deterministic seeds; complements the
   * targeted corrupt-input tests next to each decoder. */
-class MediaFuzzSpec extends AnyFunSuite {
+class MediaFuzzSpec extends AnyFunSuite with TimeLimits {
 
   private def rng(seed: Long): () => Long = {
     var s = seed
@@ -86,7 +88,7 @@ class MediaFuzzSpec extends AnyFunSuite {
     "pdfAsciiHex" -> (b => Pdf.asciiHexDecode(b)),
     "pdfAscii85" -> (b => Pdf.ascii85Decode(b, 1 << 20)),
     "pdfRunLength" -> (b => Pdf.runLengthDecode(b, 1 << 20)),
-    "pdfLzw" -> (b => Pdf.lzwDecode(b, earlyChange = true, 1 << 20)))
+    "pdfLzw" -> (b => graft.serde.Lzw.decode(b, 0, b.length, earlyChange = true, 1 << 20)))
 
   // one representative of every container/layout family the engine writes
   private def fixtures: Seq[(String, Array[Byte])] = {
@@ -304,5 +306,31 @@ class MediaFuzzSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("PNG whose zlib header asks for a preset dictionary returns None instead of spinning") {
+    // 4x4 8-bit gray; IDAT is a zlib header with FDICT set (78 BB), a
+    // dictionary id, then bytes the inflater never gets to. Every CRC is
+    // valid, so only the inflate loop stands between the bytes and a task
+    // that never finishes.
+    def chunk(tpe: String, data: Array[Byte]): Array[Byte] = {
+      val body = tpe.getBytes("US-ASCII") ++ data
+      val crc = new java.util.zip.CRC32; crc.update(body)
+      java.nio.ByteBuffer.allocate(12 + data.length)
+        .putInt(data.length).put(body).putInt(crc.getValue.toInt).array()
+    }
+    val ihdr = java.nio.ByteBuffer.allocate(13).putInt(4).putInt(4)
+      .put(Array[Byte](8, 0, 0, 0, 0)).array()
+    val idat = Array(0x78, 0xBB, 0, 0, 0, 1, 0x63, 0x60, 0x18, 0x05, 0, 0).map(_.toByte)
+    val png = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte) ++
+      chunk("IHDR", ihdr) ++ chunk("IDAT", idat) ++ chunk("IEND", Array.emptyByteArray)
+    assert(png.length == 69)
+    @volatile var got: Option[Any] = Some("not run")
+    val t = new Thread(() => got = Multimodal.decodePngGray(png))
+    t.setDaemon(true) // a spinning decode must not keep the JVM alive
+    t.start()
+    implicit val signaler: Signaler = ThreadSignaler
+    failAfter(Span(5, Seconds))(t.join())
+    assert(got.isEmpty)
   }
 }

@@ -197,13 +197,6 @@ class WarcSpec extends AnyFunSuite {
     val lied = arc6.clone()
     lied(lieAt + 16) = '9'; lied(lieAt + 17) = '9'
     assert(Warc.parseWarc(lied).isEmpty, "first record's lying length -> no records")
-    // gzip bomb guard: a same-bytes stream past the cap returns None
-    val big = Array.fill[Byte](4096)('x')
-    val bos = new java.io.ByteArrayOutputStream()
-    val gzo = new java.util.zip.GZIPOutputStream(bos)
-    gzo.write(big); gzo.close()
-    assert(Warc.gunzipAll(bos.toByteArray, max = 100).isEmpty, "bomb guard trips")
-    assert(Warc.gunzipAll(bos.toByteArray).exists(_.sameElements(big)))
     // corrupt gzip tail: None -> no records, no throw
     val gzArc = warcBytes(4L, gz = true)
     Warc.parseWarc(gzArc.take(gzArc.length / 2)) // no throw

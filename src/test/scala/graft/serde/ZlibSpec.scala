@@ -139,6 +139,21 @@ class ZlibSpec extends AnyFunSuite {
     check(badFh)
   }
 
+  test("gzipMembers checks each member's trailer: a corrupt member ends the walk, the prefix stays") {
+    val (first, second) = (gzip(payloads(1)), gzip(payloads(2)))
+    val arc = first ++ second
+    def frames(b: Array[Byte]) = Zlib.gzipMembers(b).map { case (o, l, m) => (o, l, m.toSeq) }
+    assert(frames(arc) == Seq((0L, first.length.toLong, payloads(1).toSeq),
+      (first.length.toLong, second.length.toLong, payloads(2).toSeq)))
+    // the second member's CRC32 flipped: the payload path rejects the
+    // archive, so the member walk must not index that member either
+    val badCrc = arc.clone; badCrc(arc.length - 8) = (badCrc(arc.length - 8) ^ 0x01).toByte
+    assert(Zlib.gunzipAll(badCrc).isEmpty)
+    assert(frames(badCrc) == Seq((0L, first.length.toLong, payloads(1).toSeq)))
+    val badIsize = arc.clone; badIsize(arc.length - 1) = (badIsize(arc.length - 1) ^ 0x01).toByte
+    assert(frames(badIsize).length == 1)
+  }
+
   test("bomb guard: None past max, Some at max") {
     val big = gzip(Array.fill(100000)(7.toByte))
     check(big, max = 99999)
